@@ -48,8 +48,10 @@ trait UserJob extends Serializable {
   * over the original path is the fallback. One instance per (jar,
   * class) per JVM, reused across tasks.
   *
-  * Execution reuses [[MRJob]]'s shape: wholeTextFiles map contract,
-  * holistic groupByKey reduce (the reference's sort-gather semantics,
+  * Execution IS [[MRJob]]: the jar's job runs as an
+  * `MRJob[String, String, String]` whose `mapf` and `reducef` call the
+  * per-thread instance, so it gets the same full-width map side and
+  * key-column holistic reduce (the reference's sort-gather semantics,
   * worker.go:153-169). For the reference's text-file output format,
   * feed the returned Dataset to an `MRJob(...).writeTextOutput`.
   */
@@ -77,23 +79,18 @@ object JobLoader {
     // make the jar reachable from executor task classloaders on a
     // real cluster; harmless (and not relied on) in local mode
     spark.sparkContext.addJar(jarPath)
-    val (jar, cn) = (jarPath, className) // strings only in the closures
-    val files = spark.sparkContext.wholeTextFiles(inputGlob)
-    val mapped = files.mapPartitions { it =>
-      val job = instance(jar, cn)
-      it.flatMap { case (name, contents) =>
-        job.mapf(name, contents).asScala.map(kv => (kv.key, kv.value))
-      }
-    }
-    spark.createDataset(mapped)
-      .groupByKey(_._1)
-      .mapGroups { (k, it) =>
-        // holistic: the reference buffers a key's values before the
-        // single reducef call (worker.go:161-165) — same contract
-        val values = it.map(_._2).toList.asJava
-        (k, instance(jar, cn).reducef(k, values))
-      }
+    job(jarPath, className).run(spark, inputGlob)
   }
+
+  /** The jar's job as an [[MRJob]]. Its closures capture only the two
+    * strings; each call looks up the calling thread's instance.
+    */
+  private def job(jar: String, cn: String): MRJob[String, String, String] = MRJob(
+    (name: String, contents: String) =>
+      instance(jar, cn).mapf(name, contents).asScala.map(kv => (kv.key, kv.value)),
+    // holistic: the reference buffers a key's values before the
+    // single reducef call (worker.go:161-165) — same contract
+    (k: String, values: Iterator[String]) => instance(jar, cn).reducef(k, values.toList.asJava))
 
   /** Run the single ServiceLoader-advertised job in the jar. */
   def runDiscovered(spark: SparkSession, jarPath: String,

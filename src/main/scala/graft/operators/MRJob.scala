@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{Column, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.encoderFor
 import org.apache.spark.sql.functions._
 
 /** The reference's programmable surface, typed and Spark-compiled.
@@ -17,8 +18,9 @@ import org.apache.spark.sql.functions._
   *
   * Semantics preserved (SURVEY.md §2.1 notes):
   *   - reduce is HOLISTIC: `reducef` sees every value of a key in one
-  *     call (worker.go:161-165) → `groupByKey(...).mapGroups(...)`,
-  *     never `reduceByKey`, in the general path;
+  *     call (worker.go:161-165) → key-column
+  *     `groupBy(...).as[K, (K, V)].mapGroups(...)`, never
+  *     `reduceByKey`, in the general path;
   *   - grouping is exact binary string/key equality (worker.go:21) —
   *     default binary collation, no locale;
   *   - output is `nReduce` files, keys sorted within each file, NOT
@@ -37,23 +39,41 @@ final case class MRJob[K, V, OUT](
     nReduce: Int = 8) {
 
   /** Full pipeline over text files: one (path, contents) pair per file,
-    * exactly the reference's map-input contract (worker.go:94-104;
-    * one MAP task per file, coordinator.go:185-198).
+    * exactly the reference's map-input contract (worker.go:94-104).
+    *
+    * Splits: the reference runs one MAP task per file
+    * (coordinator.go:185-198). Here `wholeTextFiles` packs whole files
+    * into splits of about total/`defaultParallelism` bytes (Hadoop's
+    * `CombineFileInputFormat`), one map task each, so the map side
+    * runs about as wide as the cluster. A file is never cut. A split
+    * closes once it reaches that size, so it can take more than its
+    * share: equal-size files in a multiple of `defaultParallelism`
+    * give exactly that many splits, other globs can give fewer (six
+    * equal files on four cores give three).
     */
   def run(spark: SparkSession, inputGlob: String)(implicit
       kEnc: Encoder[K],
       kvEnc: Encoder[(K, V)],
       outEnc: Encoder[(K, OUT)]): Dataset[(K, OUT)] = {
-    val files = spark.sparkContext.wholeTextFiles(inputGlob)
+    val sc = spark.sparkContext
+    val files = sc.wholeTextFiles(inputGlob, sc.defaultParallelism)
     val mapped = files.flatMap { case (name, contents) => mapf(name, contents) }
     runOnPairs(spark.createDataset(mapped))
   }
 
-  /** Shuffle + group + holistic reduce over an already-mapped KV set. */
+  /** Shuffle + group + holistic reduce over an already-mapped KV set.
+    *
+    * Groups on the key column itself (see `MRJob.keyColumns`), so a
+    * flat key crosses the exchange once per row; `groupByKey(_._1)`
+    * would append a second, re-serialized copy of it to every row. A
+    * struct-shaped key is grouped on its fields, projected next to the
+    * struct. Keys compare by their binary encoding, as with
+    * `groupByKey`.
+    */
   def runOnPairs(kvs: Dataset[(K, V)])(implicit
       kEnc: Encoder[K],
       outEnc: Encoder[(K, OUT)]): Dataset[(K, OUT)] =
-    kvs.groupByKey(_._1)
+    kvs.groupBy(MRJob.keyColumns(kvs, kEnc): _*).as[K, (K, V)](kEnc, kvs.encoder)
       .mapGroups((k, it) => (k, reducef(k, it.map(_._2))))
 
   /** Associative fast path — the combiner the reference lacks
@@ -81,4 +101,29 @@ final case class MRJob[K, V, OUT](
       .sortWithinPartitions("key")
       .select(concat_ws(" ", col("key").cast("string"), col("value").cast("string")))
       .write.mode("overwrite").text(dir)
+}
+
+object MRJob {
+
+  /** The grouping columns for the key, the first column of `kvs`.
+    *
+    * A flat key (primitive, String, Option, array) is that column. A
+    * struct-shaped key (tuple, case class) is grouped on the column's
+    * fields, each aliased to its own name: the key encoder resolves
+    * them by name, while the struct column alone fails to bind
+    * (`UNSUPPORTED_DESERIALIZER.FIELD_NUMBER_MISMATCH`). A whole-null
+    * struct key would then merge with a key whose fields are all
+    * null, so it fails the job instead, as it does under `groupByKey`
+    * (`NOT_NULL_ASSERT_VIOLATION`, top-level Product).
+    */
+  private def keyColumns[K](kvs: Dataset[_], kEnc: Encoder[K]): Seq[Column] = {
+    val key = kvs.col("`" + kvs.columns.head.replace("`", "``") + "`")
+    val enc = encoderFor(kEnc)
+    if (!enc.isSerializedAsStructForTopLevel) Seq(key)
+    else {
+      val nonNull = when(key.isNull,
+        raise_error(lit("MRJob: a struct-shaped key must not be null"))).otherwise(key)
+      enc.schema.fieldNames.toSeq.map(f => nonNull.getField(f).as(f))
+    }
+  }
 }

@@ -2,8 +2,14 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.sources.KVText
+import org.apache.spark.sql.{Dataset, Encoder}
+import org.apache.spark.sql.catalyst.plans.logical.{AppendColumns, AppendColumnsWithObject}
+import org.apache.spark.sql.execution.ExternalRDD
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
+
+/** A top-level case-class key for the key-shape tests. */
+case class WordAt(word: String, line: Int)
 
 /** Golden + property tests for the MRJob surface (SURVEY.md §5:
   * golden multiset compare per README.MD:43-53; ScalaCheck
@@ -83,6 +89,77 @@ class MRJobSpec extends SparkSpec {
     // every count equals the total occurrences -> reduce saw all values at once
     assert(out == Map("Hello" -> 1, "my" -> 1, "name" -> 2, "is" -> 1,
       "Sue" -> 1, "your" -> 1))
+  }
+
+  /** Holistic reduce that shows every value it was handed, in one call. */
+  private def seen[K]: (K, Iterator[String]) => String = (_, vs) => vs.toSeq.sorted.mkString(",")
+
+  /** The `groupByKey(_._1)` form `runOnPairs` replaced: the reference. */
+  private def byGroupByKey[K](kvs: Dataset[(K, String)])(implicit
+      kEnc: Encoder[K], outEnc: Encoder[(K, String)]): Dataset[(K, String)] = {
+    val reduce = seen[K]
+    kvs.groupByKey(_._1).mapGroups((k, it) => (k, reduce(k, it.map(_._2))))
+  }
+
+  private def sameAsGroupByKey[K](kvs: Dataset[(K, String)])(implicit
+      kEnc: Encoder[K], outEnc: Encoder[(K, String)]): Unit = {
+    val got = MRJob[K, String, String]((_, _) => Nil, seen[K]).runOnPairs(kvs).collect()
+    val want = byGroupByKey(kvs).collect()
+    assert(got.length == want.length, "one row per key")
+    assert(got.toSet == want.toSet)
+  }
+
+  test("runOnPairs groups Int, tuple, case-class and null String keys like groupByKey") {
+    import spark.implicits._
+    sameAsGroupByKey(Seq(1 -> "a", 2 -> "b", 1 -> "c", -1 -> "d", 1 -> "e").toDS())
+    sameAsGroupByKey(Seq(("x", 1) -> "a", ("x", 2) -> "b", ("x", 1) -> "c",
+      ("y", 1) -> "d", ((null: String), 1) -> "e", ((null: String), 1) -> "f").toDS())
+    sameAsGroupByKey(Seq(WordAt("x", 1) -> "a", WordAt("x", 2) -> "b",
+      WordAt("x", 1) -> "c", WordAt(null, 0) -> "d", WordAt(null, 0) -> "e").toDS())
+    sameAsGroupByKey(Seq("a" -> "1", (null: String) -> "2", "" -> "3",
+      (null: String) -> "4", "a" -> "5").toDS())
+  }
+
+  test("a whole-null struct key fails the job instead of merging with an all-null key") {
+    import spark.implicits._
+    val allNull = ((null: String), (null: String))
+    // fields all null: an ordinary key, grouped like groupByKey groups it
+    sameAsGroupByKey(Seq(allNull -> "a", allNull -> "b", ("x", null: String) -> "c").toDS())
+    // the key itself null: groupByKey cannot encode it and fails; so
+    // must runOnPairs, where the grouping fields alone would read it
+    // as (null, null) and merge it into that group
+    val withNull = Seq(allNull -> "a", (null: (String, String)) -> "b").toDS()
+    val ref = intercept[Exception](byGroupByKey(withNull).collect())
+    assert(ref.getMessage.contains("NOT_NULL_ASSERT_VIOLATION"), ref.getMessage)
+    val job = MRJob[(String, String), String, String]((_, _) => Nil, seen[(String, String)])
+    val err = intercept[Exception](job.runOnPairs(withNull).collect())
+    assert(err.getMessage.contains("struct-shaped key must not be null"), err.getMessage)
+  }
+
+  test("run over more files than cores: every core maps and no AppendColumns is planned") {
+    import spark.implicits._
+    val cores = spark.sparkContext.defaultParallelism
+    val nFiles = 2 * cores
+    val dir = java.nio.file.Files.createTempDirectory("mrwide")
+    // equal-size files in a multiple of the core count pack into one
+    // split per core; other globs can give fewer (see MRJob.run)
+    (0 until nFiles).foreach { i =>
+      java.nio.file.Files.writeString(dir.resolve(f"in-$i%02d.txt"),
+        (0 until 50).map(j => ('a' + (i * 7 + j) % 13).toChar).mkString(" ") + "\n")
+    }
+    val out = MRJob(wcMap, wcReduce, nReduce = 2).run(spark, s"$dir/*.txt")
+    val plan = out.queryExecution.optimizedPlan
+    // groupByKey plans AppendColumns, which the optimizer may fold into
+    // AppendColumnsWithObject
+    val appends = plan.collect {
+      case a: AppendColumns => a
+      case a: AppendColumnsWithObject => a
+    }
+    assert(appends.isEmpty, plan.toString)
+    val mapTasks = plan.collectFirst { case r: ExternalRDD[_] => r.rdd.getNumPartitions }
+    assert(mapTasks.exists(_ >= math.min(nFiles, cores)), s"map tasks $mapTasks for $cores cores")
+    val got = out.collect().toMap
+    assert(got.size == 13 && got.values.sum == 50 * nFiles)
   }
 
   test("KVText.readKV: line without a tab yields empty value") {
