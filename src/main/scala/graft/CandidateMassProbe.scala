@@ -161,7 +161,7 @@ object CandidateMassProbe {
           shufWrite.set(0L); spilled.set(0L)
           val slice = if (slices == 1) None else Some((k, slices))
           val stream = graft.llm.Similarity
-            .candidateStreamOf(e, bands, r, t, None, slice)
+            .candidateStreamOf(e, bands, r, t, slice)
           // gate scored in the same pass (gcos via the registered
           // gatedStream relation would FILTER; here we need both
           // sides of the gate, so score with the same broadcast

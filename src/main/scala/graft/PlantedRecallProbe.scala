@@ -31,8 +31,8 @@ import org.apache.spark.sql.functions._
   * UNIQUE embeddings — components are seeded hash-derived uniforms
   * in [-1, 1], the `sqlBandSigs` plane trick, so the corpus is
   * deterministic and collision-free at any N — renders them once to
-  * /tmp/graft_synth_N (reused across runs), and measures the default
-  * and escalation dials only (the two shipped operating points).
+  * /tmp/graft_synth_N (reused across runs), and measures the
+  * registered dial plus three contrasts around it.
   */
 object PlantedRecallProbe {
   def main(args: Array[String]): Unit = {
@@ -101,33 +101,31 @@ object PlantedRecallProbe {
 
     val reps = union.select(col("embedding")).distinct().count()
     val rDefault = Similarity.nearDupRepPlanesFor(reps)
-    val rOld = Similarity.nearDupMultiProbePlanesFor(n + planted.length)
-    // (bands, r, t): the registered r11 default (rep-sized, λ∈[4,8)),
-    // its escalation dial, and the retired r10 raw-count λ≈1 rule as
-    // the curve contrast (the r11 change this probe motivated)
+    // (bands, r, t): the registered dial (rep-sized width), then
+    // contrasts around it
     val dials =
       if (synthN.isDefined) {
         // r15 grid: the SHIPPED rule (r = bitLen−2 uncapped, bands
-        // doubling per 2 bits of r, SQ8 pre-gate), the `high` dial
-        // (2B, same r), a half-bands contrast (is the doubling
-        // earning its mass?), and a deeper-r contrast (the next
-        // λ-halving — does band-doubling still buy the recall
-        // back?). Gated AND ungated recall come from the same pass
-        // (the gate is a post-hoc pair predicate on the probe-set
-        // candidates), so the gate's recall cost is isolated per
-        // dial. An optional `dials=K` third arg runs only the first
-        // K (the 10M sig computes are ~10 min per dial at B=1024).
+        // doubling per 2 bits of r, SQ8 pre-gate), a double-bands
+        // contrast (2B, same r — what more width buys), a half-bands
+        // contrast (is the doubling earning its mass?), and a
+        // deeper-r contrast (the next λ-halving — does band-doubling
+        // still buy the recall back?). Gated AND ungated recall come
+        // from the same pass (the gate is a post-hoc pair predicate
+        // on the probe-set candidates), so the gate's recall cost is
+        // isolated per dial. An optional `dials=K` third arg runs
+        // only the first K (the 10M sig computes are ~10 min per dial
+        // at B=1024).
         val shipped = Similarity.nearDupRepDialFor(reps)
         Seq(
           shipped,
-          (shipped._1 * 2, shipped._2, 3), // = the `high` dial
+          (2 * shipped._1, shipped._2, 3),
           (shipped._1 / 2, shipped._2, 3),
           (shipped._1, shipped._2 + 1, 3)).distinct
       }
       else Seq(
         (Similarity.NearDupBands, rDefault, Similarity.NearDupProbes),
         (128, rDefault + 1, 3),
-        (Similarity.NearDupBands, rOld, Similarity.NearDupProbes),
         (Similarity.NearDupBands, rDefault, 1),
         (32, rDefault, 2))
     val maxDials = args.find(_.startsWith("dials="))
@@ -141,10 +139,8 @@ object PlantedRecallProbe {
       // the probes side is restricted to planted ∪ base ids and
       // broadcast against the full index, so the corpus never
       // shuffles at all — exact for pairs with both endpoints in the
-      // set, which is every ground-truth pair. (History: the
-      // unrestricted pair set ENOSPC'd at 1M; the r12
-      // touching-restricted variant fixed the candidate exchange but
-      // still shuffles the full probes ⋈ index join, ~60+ GB at 10M.)
+      // set, which is every ground-truth pair. (The unrestricted
+      // pair set ENOSPC'd at 1M.)
       if (synthN.isDefined) {
         // staged: the stats agg and the pair collect below are two
         // actions, and recomputing the scored set would repeat the

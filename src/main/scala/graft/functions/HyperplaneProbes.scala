@@ -46,8 +46,8 @@ case class HyperplaneProbes(child: Expression, bands: Int, r: Int,
       if (bands < 1) TypeCheckResult.TypeCheckFailure(
         s"hyperplane_probes: bands must be >= 1, got $bands")
       // r <= 31 keeps the r-bit bucket a non-negative Int (bit r-1 is
-      // the highest set); the dials respect this ceiling —
-      // nearDupRepPlanesFor clamps at 31, nearDupPlanesFor at 30
+      // the highest set); the dial respects this ceiling —
+      // nearDupRepPlanesFor clamps at 31
       else if (r < 1 || r > 31) TypeCheckResult.TypeCheckFailure(
         s"hyperplane_probes: r must be in [1, 31], got $r")
       else if (dim < 1) TypeCheckResult.TypeCheckFailure(

@@ -1,7 +1,7 @@
 package graft.jobs
 
 import graft.operators.JobLoader
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._

@@ -593,6 +593,24 @@ object Dedup {
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
   }
 
+  /** The staged representative (doc_id, 60-bit shingle-hash array)
+    * table [[containmentPairs]] and its probes ride on. Its candidate
+    * stages were sized on the ×1000 corpus in BASELINE.md's "Round-12
+    * containment spill cut".
+    */
+  private def containmentHashTable(spark: SparkSession,
+      sfDir: String): DataFrame = {
+    val st = sigTable(spark, sfDir)
+    // staged: probes, the inverted index, and BOTH rescoring joins
+    // re-read this table; unstaged, each reference re-shingles and
+    // re-hashes the corpus (4 scans, 2× the md5 work)
+    Materialize.stage(shArrTable(spark, sfDir)
+      .join(st.filter(col("doc_id") === col("rep")).select(col("doc_id")),
+        Seq("doc_id"), "left_semi")
+      .select(col("doc_id"),
+        transform(col("sh"), s => h60(s)).as("hs")), eager = false)
+  }
+
   /** Containment pairs — the truncated-page signal exact Jaccard
     * misses: a clipped copy of a long document shares ALL its shingles
     * with the original but its symmetric Jaccard can sit well under a
@@ -624,23 +642,6 @@ object Dedup {
     * precedent (120-bit fingerprints over the same hash) documents
     * the negligible-collision argument.
     */
-  /** The staged representative (doc_id, 60-bit shingle-hash array)
-    * table [[containmentPairs]] and its probes ride on — exposed for
-    * the ContainProbe sizing tool.
-    */
-  private[graft] def containmentHashTable(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val st = sigTable(spark, sfDir)
-    // staged: probes, the inverted index, and BOTH rescoring joins
-    // re-read this table; unstaged, each reference re-shingles and
-    // re-hashes the corpus (4 scans, 2× the md5 work)
-    Materialize.stage(shArrTable(spark, sfDir)
-      .join(st.filter(col("doc_id") === col("rep")).select(col("doc_id")),
-        Seq("doc_id"), "left_semi")
-      .select(col("doc_id"),
-        transform(col("sh"), s => h60(s)).as("hs")), eager = false)
-  }
-
   def containmentPairs(spark: SparkSession, sfDir: String): DataFrame = {
     val hsh = containmentHashTable(spark, sfDir)
     val probes = hsh.select(col("doc_id").as("doc_a"),

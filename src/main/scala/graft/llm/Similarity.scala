@@ -585,176 +585,97 @@ object Similarity {
       .toDF("query_id", "neighbor_id", "sel_rank", "score")
   }
 
-  /** Band count for [[embeddingNearDup]]'s candidate generation.
-    * Candidate cost is bands · Σ bucket² ≈ B·n²/2^r for the non-dup
-    * mass, so `r` is the LOG-N DIAL — [[nearDupPlanesFor]] sizes it
-    * from the corpus so expected band-bucket occupancy stays O(1) and
-    * total candidate mass stays O(B·n) — and `B` buys recall back (a
-    * pair is a candidate if ANY band collides). The round-8 ×100
-    * ScaleUp probe caught the prior single-band 4-bit config
-    * saturating exactly as the pigeonhole predicts (16 FIXED buckets
-    * → Θ(n²/16): 112× time at 100× data, the only superlinear query
-    * in the sweep) — and showed that ANY fixed (B, r) is quadratic
-    * with a constant, which is why r is data-sized, the same way IVF
-    * sizes its cell count.
-    *
-    * (B, r, t) OPERATING POINT — re-chosen from the ROUND-10
-    * measured recall/cost grid (graft.RecallProbe, tables in
-    * BASELINE.md), which added MARGIN-AWARE MULTIPROBE rows
-    * ([[nearDupPairsMultiProbe]] /
-    * [[graft.functions.HyperplaneProbes]]): probing each band's `t`
-    * lowest-|margin| one-bit-flip buckets recovers most
-    * Hamming-distance-1 collisions — the recall that exponential
-    * band escalation buys, at probe factor t+1 instead. At sf0.1 the
-    * default (64, r₀+1, t=2) measured recall 0.786 at 1.2 s where
-    * the r9 exact default (64, r₀) sat at 0.436 at 0.94 s and the
-    * escalation dial (256, r₀+2) managed 0.598 at 4.2 s and 4×
-    * signature mass; candidate pairs rise 2.2× (336k vs 154k), the
-    * recorded price of the recall. The t dial keeps going: t=3 →
-    * 0.855, (128, r₀+2, t=3) → 0.910 at ~2.9× mass. (ALL-bit
-    * probing — t=r — was measured first and REJECTED: recall 0.939
-    * but n·B·(r+1) ≈ 1.4B probe rows at the ×1000 corpus, spill
-    * death; margins are the whole trick.)
+  /** Band count of the registered near-dup dial below 2^18 reps — the
+    * B in (B, r, t). Candidate cost is bands · Σ bucket² ≈ B·n²/2^r
+    * for the non-dup mass, so `r` is the LOG-N DIAL that keeps
+    * per-bucket occupancy O(1) ([[nearDupRepPlanesFor]]) and `B` buys
+    * recall back: a pair is a candidate if ANY band collides. Any
+    * FIXED (B, r) is quadratic with a constant (the round-8 ×100
+    * ScaleUp probe measured a single 4-bit band at 112× time for 100×
+    * data), which is why r is sized from the data, the way IVF sizes
+    * its cell count. 64 bands with [[NearDupProbes]] margin flips per
+    * band is the measured recall/cost point over the registered
+    * corpora's range (grids in BASELINE.md).
     */
   val NearDupBands = 64
 
-  /** Lowest-margin flip probes per band for the registered default
-    * — the t in (B, r, t) above.
-    *
-    * r11 OPERATING POINT (64, bitLen(reps)−2, 2), re-chosen on the
-    * PLANTED recall-vs-n curve (PlantedRecallProbe; tables in
-    * BASELINE.md): the shallow rep-sized width
-    * ([[nearDupRepPlanesFor]]) carries the recall, t=2 margin flips
-    * recover the sub-threshold stragglers. Measured: 0.976 recall at
-    * sf0.1 (brute truth) and 0.855 planted at n=200k, 2.0 s bench at
-    * sf0.1 — where the r10 raw-count λ≈1 rule sat at 0.786 / 0.619
-    * and probe-depth escalation on the deep width topped out at
-    * 0.713 at n=200k (one-bit flips can't recover ≥2-bit
-    * divergence). Escalation dials when recall is the product:
-    * λ∈[4,8) i.e. one bit shallower still, t=2 → 0.998 sf0.1 /
-    * 0.905 ×100 at ~1.4× the mass; (128, r+1, 3) → 1.000 / 0.960.
+  /** Lowest-margin one-bit-flip probes per band below 2^18 reps — the
+    * t in (B, r, t). Probing each band's `t` lowest-|margin| flip
+    * buckets ([[nearDupPairsMultiProbe]],
+    * [[graft.functions.HyperplaneProbes]]) recovers most
+    * Hamming-distance-1 collisions at probe factor t+1; probing ALL r
+    * bits reached recall 0.939 but ~1.4 B probe rows at the ×1000
+    * corpus (spill death), so the margins are the whole trick. With
+    * the rep-sized width, (64, bitLen(reps)−2, 2) measured 0.976
+    * recall at sf0.1 against brute-force truth and 0.855 planted at
+    * n = 200k (PlantedRecallProbe; BASELINE.md).
     */
   val NearDupProbes = 2
 
-  /** Per-band signature width for an n-vector corpus:
-    * floor(log2 n), clamped to [4, 30] — ~1 vector per bucket per
-    * band in expectation (one bit deeper than the round-8 config:
-    * the halved per-band mass pays for 4× the bands at 2× total,
-    * per the measured dominance law above), integer-exact on both
-    * engines (bit length, no float log), mirrored in SQL as
-    * `length(bin(count(*))) - 1`.
+  /** Per-band signature width of the registered near-dup dial:
+    * r = bitLen(reps) − 2, clamped to [5, 31], where `reps` is the
+    * DISTINCT-embedding count. That holds λ = reps/2^r ∈ [2, 4)
+    * expected reps per band-bucket at every scale; it is integer-exact
+    * (bit length, no float log) and mirrored in SQL over
+    * `SELECT DISTINCT embedding`.
+    *
+    *  - Reps, not rows: the LSH hashes one rep per distinct embedding
+    *    ([[nearDupWithDupCollapse]]), so sizing from the raw count
+    *    would over-deepen by log₂(dup factor) bits (the ×1000 ScaleUp
+    *    corpus: 2M rows, ~62k reps).
+    *  - λ ∈ [2, 4), not λ ≈ 1: per-band collision probability
+    *    (1−θ/π)^r decays exponentially in r, while rescore cost grows
+    *    only linearly in occupancy. At n = 200k the λ ≈ 1 width
+    *    measured 0.619 planted recall; two bits shallower measures
+    *    0.855, cheaper (BASELINE.md).
+    *  - Uncapped in n: a width cap freezes recall but makes candidate
+    *    mass quadratic (15.3 B pre-distinct rows at 1M reps under an
+    *    r ≤ 16 cap, BASELINE.md round 14). Deepening r keeps per-bucket
+    *    junk O(1); [[nearDupRepDialFor]] buys the recall back with
+    *    bands and [[nearDupGateFor]] drops the residual junk map-side.
+    *  - Ceiling 31: a band bucket is a non-negative Int in the
+    *    hyperplane kernels, which reject r > 31. It binds only past
+    *    2^33 distinct reps, where λ grows with n again and
+    *    [[nearDupMassGuard]] prices that growth and refuses past
+    *    budget.
     */
-  def nearDupPlanesFor(n: Long): Int = {
-    val bitLen = if (n <= 0) 0 else 64 - java.lang.Long.numberOfLeadingZeros(n)
-    math.max(4, math.min(30, bitLen - 1))
-  }
+  def nearDupRepPlanesFor(reps: Long): Int =
+    math.max(5, math.min(31, bitLen(reps) - 2))
 
-  /** Signature width for the MULTIPROBE default: one bit deeper than
-    * [[nearDupPlanesFor]] (flips recover what the halved per-bucket
-    * occupancy costs), same [5, 30] clamp, mirrored in SQL as
-    * `greatest(5, least(30, length(bin(count(*)))))`.
-    */
-  def nearDupMultiProbePlanesFor(n: Long): Int =
-    math.min(30, nearDupPlanesFor(n) + 1)
+  /** Bit length of a count (0 for n ≤ 0): ⌊log₂ n⌋ + 1 without floats. */
+  private def bitLen(n: Long): Int =
+    if (n <= 0) 0 else 64 - java.lang.Long.numberOfLeadingZeros(n)
 
-  /** Signature width for the REGISTERED near-dup default, sized from
-    * the DISTINCT-embedding (rep) count at bitLen(reps) − 2 — i.e.
-    * λ ∈ [2, 4) expected reps per band-bucket at every scale — floor
-    * 5, mirrored in SQL over `SELECT DISTINCT embedding`. Two r11
-    * lessons from the planted-recall curve (PlantedRecallProbe,
-    * BASELINE.md):
+  /** The registered (bands, r, probes) rule, from the DISTINCT-rep
+    * count; r is always [[nearDupRepPlanesFor]]:
     *
-    *  - REPS, not raw rows: the LSH runs over one rep per distinct
-    *    embedding ([[nearDupWithDupCollapse]]), so sizing r from the
-    *    raw count over-deepens by log₂(dup-factor) bits on
-    *    duplicate-heavy corpora (the ×1000 ScaleUp corpus: 2M rows
-    *    but ~62k reps — 5 bits of nearly-empty buckets).
-    *  - SHALLOWER beats deeper-plus-probes: at n = 200k the r10 rule
-    *    (λ ≈ 1 occupancy, r = 18) measured recall 0.619 at 7.1 s and
-    *    probe-depth escalation topped out at 0.713 (one-bit flips
-    *    can't recover ≥2-bit divergence), while two bits shallower
-    *    (r = 16 there) measures 0.855 planted recall cheaper —
-    *    per-band collision prob (1−θ/π)^r decays exponentially in r
-    *    while candidate rescore cost grows only linearly in
-    *    occupancy.
+    *  - bitLen(reps) ≤ 18 (reps < 2^18): ([[NearDupBands]], r,
+    *    [[NearDupProbes]]). Every registered corpus lives here and the
+    *    DuckDB oracle mirrors this branch.
+    *  - beyond: B = round(256·2^((bitLen−19)/2)) — 256, 362, 512, 724,
+    *    1024, 1448 for bitLen 19–24 — t = 3, plus the SQ8 candidate
+    *    pre-gate ([[nearDupGateFor]]). Each bit of r halves the junk
+    *    mass while a planted pair's per-band collision falls only
+    *    ~0.7×, so doubling bands per 2 bits of r holds recall and total
+    *    work lands at the classic n^(1+ρ) ≈ n^1.5 instead of n². Bands
+    *    need not be powers of two (a band is just an r-plane group of
+    *    the deterministic family); the √2 half-steps keep recall flat
+    *    to ~0.007 per bit, where power-of-two bands sawtooth ~0.05
+    *    between even and odd bit lengths. Candidate mass is
+    *    n·B·(t+1)·λ·2 pre-gate ([[nearDupProjectedCandidates]]).
+    *    Measured at 1M reps (round-15 planted and mass grids,
+    *    BASELINE.md): 0.886 planted recall, 1.5 B rows into the
+    *    dedup exchange; 10M reps is not yet measured under this rule.
     *
-    * Candidate mass stays O(B·λ·reps) = O(reps) at fixed λ — the
-    * 100 TB-safe property; λ ∈ [2, 4) with the t=2 margin probes is
-    * the measured sweet spot at three decades of n (grid in
-    * BASELINE.md).
-    */
-  def nearDupRepPlanesFor(reps: Long): Int = {
-    val bitLen =
-      if (reps <= 0) 0 else 64 - java.lang.Long.numberOfLeadingZeros(reps)
-    // r15 re-rule: the r12 width CAP (r ≤ 16) is REMOVED — r =
-    // bitLen − 2 at EVERY scale, holding λ = reps/2^r ∈ [2, 4)
-    // forever. The cap froze RECALL (r13: 0.867 n-invariant at
-    // 1M/10M) but made candidate MASS quadratic in n: r14's
-    // CandidateMassProbe measured 15.3 B pre-distinct candidate rows
-    // at 1M reps on the capped (128, 16, 3) dial — λ ∝ n/2^16 junk
-    // per bucket, the registered shape DNF on sandbox disk, ~1.5 T
-    // rows at 10M (BASELINE.md round-14; the r13 "AQE absorbs it
-    // linearly" extrapolation is falsified). Deepening r with n
-    // keeps per-bucket junk O(1); the recall the deeper r costs is
-    // bought back by DOUBLING BANDS per 2 bits of r
-    // ([[nearDupRepDialFor]] — junk mass halves per bit of r while
-    // planted-pair collision decays only ~q ≈ 0.7 per bit, so total
-    // work lands at the classic n^(1+ρ) ≈ n^1.5 instead of n²) and
-    // by the SQ8 candidate pre-gate ([[nearDupGateFor]]), which
-    // kills the residual λ-junk map-side before the pair-dedup
-    // exchange. Below 2^18 reps nothing changes (bitLen − 2 ≤ 16
-    // there — the registered-corpora regime, oracle-pinned).
-    //
-    // CEILING at 31: an r-bit band bucket is a non-negative Int in
-    // the hyperplane kernels (HyperplaneSigs/HyperplaneProbes reject
-    // r > 31 — bit 31 would sign-flip the bucket, and 1 << j wraps
-    // past it). "Uncapped" therefore means uncapped across every
-    // physically runnable scale: the ceiling binds only past 2^33
-    // DISTINCT reps (~8.6 B distinct embeddings — beyond any
-    // single-corpus regime this engine claims), where λ resumes
-    // growing with n and [[nearDupMassGuard]] prices that growth and
-    // refuses past budget naming pre-bucketing, instead of the dial
-    // silently promising an r no kernel can execute (ADVICE r15).
-    math.max(5, math.min(31, bitLen - 2))
-  }
-
-  /** The FULL (bands, r, probes) rule from the DISTINCT-rep count —
-    * r15, re-derived after the r14 candidate-mass measurement
-    * falsified the capped dial past ~2^20 reps (BASELINE.md):
-    *
-    *  - bitLen(reps) ≤ 18 (n < 262k): (64, bitLen−2, 2) — the r11
-    *    rule, measured 0.855 planted at its top (n = 200k),
-    *    byte-identical to every round since r11 (the oracle-pinned
-    *    regime: all registered corpora live here);
-    *  - beyond: r = bitLen − 2 UNCAPPED (λ ∈ [2, 4) forever) with
-    *    bands on the √2-INTERPOLATED doubling curve — B =
-    *    round(256·2^((bitLen−19)/2)): 256, 362, 512, 724, 1024, 1448
-    *    for bitLen 19–24 — t = 3, plus the SQ8 candidate pre-gate
-    *    ([[nearDupGateFor]]). Bands need not be powers of two (a
-    *    band is just an r-plane group of the deterministic family),
-    *    and the half-step matters: with B restricted to 2^k, recall
-    *    sawtooths ~0.05 between even and odd bitLens (r deepens
-    *    every bit, B doubles every other) — the √2 steps hold the
-    *    planted-recall model flat to ~0.007/bit (round-15 grid).
-    *    Candidate mass is n·B·(t+1)·λ·2 pre-gate with B ∝ √n — the
-    *    classic n^(1+ρ) ≈ n^1.5 LSH trade instead of the capped
-    *    dial's n² (r14: 15.3 B rows / DNF at 1M; ~1.5 T at 10M).
-    *    Recall and mass at 1M/10M for this rule are the round-15
-    *    planted/mass grid in BASELINE.md.
-    *
-    * The DuckDB oracle mirrors the ≤ 2^18 regime (its corpora hold
-    * ≤ 2k reps; an all-pairs 1M-rep LSH is not DuckDB-runnable —
-    * the planted probe IS the measurement instrument there).
+    * An all-pairs oracle is not runnable past 2^18 reps, so
+    * [[graft.PlantedRecallProbe]] is the measurement instrument there.
     */
   def nearDupRepDialFor(reps: Long): (Int, Int, Int) = {
-    val bitLen =
-      if (reps <= 0) 0 else 64 - java.lang.Long.numberOfLeadingZeros(reps)
-    if (bitLen <= 18)
-      (NearDupBands, nearDupRepPlanesFor(reps), NearDupProbes)
+    val r = nearDupRepPlanesFor(reps)
+    if (bitLen(reps) <= 18) (NearDupBands, r, NearDupProbes)
     else {
-      val r = nearDupRepPlanesFor(reps)
       val b = math.round(4 * NearDupBands *
-        math.pow(2.0, (bitLen - 19) / 2.0)).toInt
+        math.pow(2.0, (bitLen(reps) - 19) / 2.0)).toInt
       (b, r, 3)
     }
   }
@@ -785,23 +706,20 @@ object Similarity {
     * < 0.02 (ADVICE r15; the r15 shipped 0.30 was safe empirically
     * but not adversarially). The price is a slightly higher junk
     * keep-rate at the boundary (~0.01 of gate-band mass vs 0.30 on
-    * the isotropic probe corpus); [[nearDupMassGuard]]'s worst-case
-    * keep default prices the exchange independently of it.
+    * the isotropic probe corpus); [[nearDupMassGuard]] prices the
+    * exchange at worst-case keep, independently of it.
     */
   val NearDupGateTau = 0.35 - sq8ErrBound(Dim)
 
   /** Measured junk keep-rate of the SQ8 pre-gate on the ISOTROPIC
-    * synthetic probe corpus (round-15 CandidateMassProbe grid,
-    * BASELINE.md: keep 0.117 at 1M reps). This is the measured
-    * best-case reference figure, NOT what [[nearDupMassGuard]]
-    * assumes: clustered/correlated real corpora keep far more junk
-    * (bucket-mates of a clustered corpus sit at smaller angles, so
-    * more of them clear the 0.30 quantized-cosine bar), and a guard
-    * projecting with an optimistic keep under-projects the exchange
-    * by up to ~1/keep — re-admitting exactly the DNF it exists to
-    * prevent (ADVICE r15). The guard therefore defaults to worst-case
-    * keep = 1.0; a per-corpus measured keep-rate is claimed via
-    * `spark.graft.neardup.gateKeep`.
+    * synthetic probe corpus: 0.117 at 1M reps (round-15
+    * CandidateMassProbe grid, BASELINE.md). It is a best-case
+    * reference figure, not what [[nearDupMassGuard]] assumes: clustered
+    * real corpora keep far more junk (bucket-mates sit at smaller
+    * angles, so more of them clear the gate), and projecting with this
+    * figure would under-project the exchange by up to ~1/keep,
+    * admitting the shuffle-disk DNF the guard exists to prevent. The
+    * guard therefore projects with keep = 1.0.
     */
   val NearDupGateKeep = 0.12
 
@@ -811,11 +729,8 @@ object Similarity {
     * makes the n^1.5 dial's residual λ-junk affordable (the r14
     * 1M-rep DNF ran ungated).
     */
-  def nearDupGateFor(reps: Long): Option[Double] = {
-    val bitLen =
-      if (reps <= 0) 0 else 64 - java.lang.Long.numberOfLeadingZeros(reps)
-    if (bitLen <= 18) None else Some(NearDupGateTau)
-  }
+  def nearDupGateFor(reps: Long): Option[Double] =
+    if (bitLen(reps) <= 18) None else Some(NearDupGateTau)
 
   /** Projected PRE-DISTINCT candidate rows of the registered
     * multiprobe shape at (reps, bands, r, t) — the n·B·(t+1)·λ·2
@@ -825,140 +740,60 @@ object Similarity {
       t: Int): Double =
     reps.toDouble * bands * (t + 1) * (reps.toDouble / (1L << r)) * 2.0
 
-  /** Mass guard on the AUTO near-dup entry point (VERDICT r14 item
-    * 8): before any heavy work, project the candidate mass the
-    * chosen dial will push through the pair-dedup exchange (post-
-    * gate when the gate is on) and REFUSE when it exceeds
-    * `spark.graft.neardup.maxCandidateRows` (default 1e11 ≈ 1.6 TB
-    * of 16 B pair rows — cluster-plausible, far past any single
-    * box). The refusal names the remedies in preference order:
-    * collapse duplicate mass first ([[nearDupWithDupCollapse]] — the
-    * rep discipline is why the ×1000 corpus's 2M rows hash only 62k
+  /** Mass guard on the registered near-dup entry point: before any
+    * heavy work, project the candidate rows the dial pushes into the
+    * pair-dedup exchange ([[nearDupProjectedCandidates]], at the
+    * worst-case gate keep of 1.0 — see [[NearDupGateKeep]]) and
+    * REFUSE when they exceed `spark.graft.neardup.maxCandidateRows`
+    * (default 1e11 ≈ 1.6 TB of 16 B pair rows — cluster-plausible,
+    * far past any single box). The budget is a conf because it sizes
+    * the refusal to a cluster's shuffle disk, a deployment property.
+    * The refusal names the remedies in preference order: collapse
+    * duplicate mass first ([[nearDupWithDupCollapse]] — the rep
+    * discipline is why the ×1000 corpus's 2M rows hash only 62k
     * reps), pre-bucket the corpus, or raise the conf on a cluster
-    * sized for the shuffle. Turns the round-14 "did not complete on
-    * sandbox disk" failure mode into a plan-time error instead of an
-    * ENOSPC hours in.
+    * sized for the shuffle. A corpus that would not complete on its
+    * disk (the round-14 DNF, BASELINE.md) fails at plan time instead
+    * of with an ENOSPC hours in.
     */
   def nearDupMassGuard(spark: SparkSession, reps: Long, bands: Int,
-      r: Int, t: Int, gate: Option[Double]): Unit = {
+      r: Int, t: Int): Unit = {
     val budget = spark.conf.getOption("spark.graft.neardup.maxCandidateRows")
       .map(_.toDouble).getOrElse(1e11)
-    // post-gate keep-rate for the projection. Defaults to the WORST
-    // CASE (1.0): the measured 0.117 ([[NearDupGateKeep]]) comes from
-    // an isotropic synthetic corpus, and clustered real corpora keep
-    // far more — projecting with the optimistic figure would admit a
-    // job that still DNFs on shuffle disk, the exact r14 failure mode
-    // this guard exists to prevent (ADVICE r15). A keep-rate measured
-    // on the actual corpus (graft.CandidateMassProbe measures it
-    // exactly, without materializing the exchange) is claimed via
-    // the conf.
-    val keep = spark.conf.getOption("spark.graft.neardup.gateKeep")
-      .map(_.toDouble).getOrElse(1.0)
-    require(keep > 0.0 && keep <= 1.0,
-      s"spark.graft.neardup.gateKeep must be in (0, 1], got $keep")
-    val keepFactor = if (gate.isDefined) keep else 1.0
-    val projected = nearDupProjectedCandidates(reps, bands, r, t) * keepFactor
-    if (projected > budget) {
-      val dial = spark.conf.getOption("spark.graft.neardup.recall")
-        .getOrElse("default")
-      // price both dials in the refusal so the cost of the recall
-      // switch is visible HERE, not discovered at the exchange
-      // (VERDICT r15 item 8): in the past-2^18 branch high = 2B at
-      // the same r, i.e. ~2x the default's mass (measured 1.96x
-      // candidates and 7.4x wall at 1M reps for +0.079 recall).
-      val (db, dr, dt) = nearDupRepDialFor(reps)
-      val defProj = nearDupProjectedCandidates(reps, db, dr, dt) * keepFactor
-      val highProj = 2.0 * defProj
-      val gateNote =
-        if (gate.isDefined && keep == 1.0)
-          " Projection assumes worst-case gate keep=1.0; a keep-rate " +
-            "measured on this corpus (graft.CandidateMassProbe) can be " +
-            "claimed via spark.graft.neardup.gateKeep." else ""
+    val projected = nearDupProjectedCandidates(reps, bands, r, t)
+    if (projected > budget)
       throw new IllegalStateException(
-        f"near-dup dial '$dial' (B=$bands, r=$r, t=$t) over $reps%,d reps " +
+        f"near-dup dial (B=$bands, r=$r, t=$t) over $reps%,d reps " +
           f"projects $projected%,.0f candidate rows into the pair-dedup " +
           f"exchange, over spark.graft.neardup.maxCandidateRows=" +
-          f"$budget%,.0f (this corpus: default dial projects " +
-          f"$defProj%,.0f, high $highProj%,.0f). " +
-          "Collapse duplicate reps first (nearDupWithDupCollapse), " +
-          "pre-bucket the corpus, or raise the conf on a cluster sized " +
-          "for the shuffle." + gateNote)
-    }
+          f"$budget%,.0f. Collapse duplicate reps first " +
+          "(nearDupWithDupCollapse), pre-bucket the corpus, or raise the " +
+          "conf on a cluster sized for the shuffle.")
   }
 
-  /** The (bands, r, probes) operating point for the registered
-    * near-dup query, selected by `spark.graft.neardup.recall`
-    * (default `default`) from the MEASURED planted-recall grids
-    * (BASELINE.md r11–r13):
-    *
-    *  - `default`: [[nearDupRepDialFor]] — 0.855 planted at n=200k /
-    *    0.976 sf0.1 brute-truth below 2^18 reps; past it, the r15
-    *    n^1.5 rule (r = bitLen−2 uncapped, bands doubling per 2 bits
-    *    of r, t = 3, SQ8 pre-gate) — recall at 1M/10M is the
-    *    round-15 planted grid in BASELINE.md;
-    *  - `high`, reps ≤ 2^18: bands doubled, r + 1, t = 3 — 0.917
-    *    planted / 0.998 sf0.1 at n ≤ 200k (the r11 escalation row);
-    *  - `high`, reps > 2^18: bands doubled, SAME r, t = 3 — the r13
-    *    lesson kept under the r15 rule: deepening r costs more
-    *    collisions than its halved occupancy buys (the q^r decay),
-    *    while doubling width at fixed r is the pure-recall
-    *    direction. Candidate-rescore mass is ~2× default (2B at the
-    *    same λ), matching this dial's documented price. The MEASURED
-    *    price at 1M reps (round-15 planted grid, BASELINE.md):
-    *    recall 0.886 → 0.965 (+0.079) for 1.96× the candidate mass
-    *    and **7.4× the wall clock** (448.3 s vs 60.6 s on the probe
-    *    shape) — the wall multiplier outruns the mass multiplier
-    *    because the extra candidates concentrate in the densest
-    *    buckets. Budget for high accordingly; [[nearDupMassGuard]]
-    *    prices both dials in its refusal.
-    *
-    * The conf makes the measured trade executable without code edits
-    * (the `autoBucketUs` discipline). The DuckDB oracle mirrors the
-    * DEFAULT point, so the correctness gate always runs at `default`;
-    * `NearDupRecallDialSpec` asserts the high dial's pair set is a
-    * superset of the default's on a planted-duplicate corpus (in the
-    * doubling branch the superset is STRUCTURAL: same r keeps the
-    * first B bands' planes identical, extra bands only add buckets).
-    */
-  def nearDupDialFor(spark: SparkSession, reps: Long): (Int, Int, Int) =
-    spark.conf.getOption("spark.graft.neardup.recall")
-      .getOrElse("default") match {
-      case "high" =>
-        val (b, r, _) = nearDupRepDialFor(reps)
-        val bitLen =
-          if (reps <= 0) 0 else 64 - java.lang.Long.numberOfLeadingZeros(reps)
-        if (bitLen <= 18) (2 * b, r + 1, 3) else (2 * b, r, 3)
-      case "default" => nearDupRepDialFor(reps)
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.neardup.recall must be default|high, got '$other'")
-    }
-
-  /** Embedding-cosine near-duplicate pairs (cos >= 0.35, a < b),
-    * candidates from banded hyperplane LSH with ONE-BIT MULTIPROBE
-    * ([[nearDupPairsMultiProbe]]): a pair is scored iff some band's
-    * r-bit signatures are within Hamming distance 1, so cost is Σ
-    * per-band bucket² (× the r+1 probe factor) instead of n² — the
-    * shape that survives a 100 TB corpus, with the (B, r) operating
-    * point documented on [[NearDupBands]] and r sized from the
-    * corpus count (one metadata-only parquet count at plan
-    * construction — the bounded-collect discipline). Recall vs the
-    * exhaustive pair set is measured against [[embeddingNearDupBrute]]
-    * in SimilaritySpec and recorded per-config by graft.RecallProbe.
+  /** Embedding-cosine near-duplicate pairs (cos >= 0.35, a < b) — the
+    * registered `q_embed_near_dup`. Exact duplicates collapse to one
+    * rep per distinct embedding ([[nearDupWithDupCollapse]]); the reps
+    * get their candidates from banded hyperplane LSH with margin-aware
+    * multiprobe ([[nearDupPairsMultiProbe]]), so cost is Σ per-band
+    * bucket² × (t+1) instead of n² — the shape that survives a 100 TB
+    * corpus. The (B, r, t) point is [[nearDupRepDialFor]] of the rep
+    * count, behind the SQ8 pre-gate past 2^18 reps
+    * ([[nearDupGateFor]]) and the [[nearDupMassGuard]] refusal. Recall
+    * vs the exhaustive pair set ([[embeddingNearDupBrute]]) is
+    * measured in SimilaritySpec.
     */
   def embeddingNearDup(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
     val members = nearDupMemberTable(emb)
     val reps = nearDupRepsOf(members)
     // one bounded planning action (a count over the staged member
-    // table, which the pair construction reuses): r is sized from
-    // the rep population the LSH actually hashes, and the
-    // (bands, r, probes) point comes from the recall dial
+    // table, which the pair construction reuses): the dial is sized
+    // from the rep population the LSH actually hashes
     val n = reps.count()
-    val (bands, r, t) = nearDupDialFor(spark, n)
+    val (bands, r, t) = nearDupRepDialFor(n)
     val gate = nearDupGateFor(n)
-    // self-defending entry: refuse at plan time when the projected
-    // candidate mass exceeds the conf budget (VERDICT r14 item 8)
-    nearDupMassGuard(spark, n, bands, r, t, gate)
+    nearDupMassGuard(spark, n, bands, r, t)
     nearDupCollapsedPairs(members, reps, bands, r, t, gate)
   }
 
@@ -1009,8 +844,7 @@ object Similarity {
       .select(col("vec_id"), col("embedding"))
 
   private def nearDupCollapsedPairs(members: DataFrame, reps: DataFrame,
-      bands: Int, r: Int, t: Int,
-      gate: Option[Double] = None): DataFrame = {
+      bands: Int, r: Int, t: Int, gate: Option[Double]): DataFrame = {
     val repPairs = nearDupPairsMultiProbe(reps, bands, r, t, gate)
     val m = members.select(col("rep"), col("vec_id").as("member"))
     val cross = repPairs
@@ -1099,23 +933,31 @@ object Similarity {
     * against planted truth in the round-15 BASELINE.md grid.
     */
   def nearDupPairsMultiProbe(emb: DataFrame, bands: Int, r: Int,
-      t: Int = 1, gate: Option[Double] = None): DataFrame =
-    multiProbeCore(emb, bands, r, t, None, gate)
+      t: Int = 1, gate: Option[Double] = None): DataFrame = {
+    val e = sigTableOf(emb, bands, r)
+    val cand = gatedStream(e,
+      candidateStreamOf(e, bands, r, t), gate).distinct()
+    // in the gated (past-2^18) branch the embedding table already
+    // broadcasts for the gate (SQ8 codes), and the candidate side is
+    // the big one (~10^9 rows at 1M reps) — broadcasting the float
+    // embeddings too (~300 MB at 1M) deletes BOTH rescore exchanges
+    // of the candidate stream, the second-largest disk cost of the
+    // full shape after the pair-dedup. Below the branch the rescore
+    // stays a plain equi-join (registered plans untouched; tiny
+    // corpora auto-broadcast under AQE anyway).
+    val side = (name: String) => {
+      val p = e.select(col("vec_id").as(name),
+        col("embedding").as(name.replace("vec", "emb")))
+      if (gate.isDefined) broadcast(p) else p
+    }
+    cand
+      .join(side("vec_a"), "vec_a")
+      .join(side("vec_b"), "vec_b")
+      .withColumn("cos", cosine_sim(col("emb_a"), col("emb_b")))
+      .filter(col("cos") >= 0.35)
+      .select(col("vec_a"), col("vec_b"), col("cos"))
+  }
 
-  /** [[nearDupPairsMultiProbe]] restricted to pairs whose MAX id is
-    * ≥ `minMax` — row-identical to filtering the full operator's
-    * output (SimilaritySpec asserts it), but the restriction lands
-    * BEFORE the candidate-dedup exchange, so a recall probe over
-    * planted top-id copies never shuffles the corpus's full pair
-    * set. This is what makes [[graft.PlantedRecallProbe]] runnable
-    * at n = 1M reps on sandbox disk: the unrestricted candidate
-    * stream there is ~400M+ rows and filled the 50 GB free
-    * (measured ENOSPC, 2026-08-15); the probe only ever reads pairs
-    * touching its 2000 planted ids.
-    */
-  private[graft] def nearDupPairsMultiProbeTouching(emb: DataFrame,
-      bands: Int, r: Int, t: Int, minMax: Long): DataFrame =
-    multiProbeCore(emb, bands, r, t, Some(minMax))
 
   /** [[nearDupPairsMultiProbe]] restricted to pairs with AT LEAST ONE
     * endpoint in `probeIds` — for such a pair, collision requires one
@@ -1129,11 +971,9 @@ object Similarity {
     * row-identical to the full operator (SimilaritySpec asserts it).
     *
     * Why it exists: this is what makes [[graft.PlantedRecallProbe]]
-    * runnable at n = 10M on sandbox disk. The touching-restricted
-    * variant still SHUFFLES the full probes ⋈ index join — at 10M
-    * reps × 128 bands that is ~1.3B index rows plus ~5B probe rows of
-    * shuffle (estimated 60+ GB, over the 42 GB free that remained
-    * after the 1M run). Here the ≤ ~4k probe-side vectors (~2M
+    * runnable at n = 10M on sandbox disk. A full probes ⋈ index join
+    * at 10M reps × 128 bands SHUFFLES ~1.3B index rows plus ~5B probe
+    * rows (estimated 60+ GB). Here the ≤ ~4k probe-side vectors (~2M
     * exploded probe rows at B=128, t=3) are BROADCAST against the
     * full index explode, which then streams map-side — no shuffle of
     * the corpus at all; the only exchange left is the candidate
@@ -1141,19 +981,10 @@ object Similarity {
     * (O(|probeIds|·B·(t+1)·λ)).
     */
   private[graft] def nearDupPairsMultiProbeProbeSet(emb: DataFrame,
-      bands: Int, r: Int, t: Int, probeIds: Seq[Long],
-      gate: Option[Double] = None): DataFrame = {
-    val scored = probeSetCandidatesScored(emb, bands, r, t, probeIds)
-    // the gate here is applied POST-distinct on the scored (small)
-    // candidate set — semantically identical to the registered
-    // pre-distinct placement (the gate is a deterministic pair
-    // predicate, so gate∘distinct = distinct∘gate), which is the
-    // whole point of this variant: it measures the GATED operator's
-    // recall without broadcasting the corpus's SQ8 codes
-    gate.fold(scored)(g => scored.filter(col("gcos") >= g))
+      bands: Int, r: Int, t: Int, probeIds: Seq[Long]): DataFrame =
+    probeSetCandidatesScored(emb, bands, r, t, probeIds)
       .filter(col("cos") >= 0.35)
       .select(col("vec_a"), col("vec_b"), col("cos"))
-  }
 
   /** The probe-set variant's DISTINCT candidates, rescored but
     * UNFILTERED — (vec_a, vec_b, cos, gcos) with gcos the SQ8
@@ -1204,7 +1035,7 @@ object Similarity {
   }
 
   /** The staged signature table every multiprobe pass reads — split
-    * out of [[multiProbeCore]] so [[graft.CandidateMassProbe]] can
+    * out of [[nearDupPairsMultiProbe]] so [[graft.CandidateMassProbe]] can
     * instrument the exact table the registered shape uses.
     */
   private[graft] def sigTableOf(emb: DataFrame, bands: Int,
@@ -1216,7 +1047,7 @@ object Similarity {
 
   /** The normalized PRE-DISTINCT candidate stream of the registered
     * multiprobe shape — (vec_a, vec_b), one row per (probe, index)
-    * bucket collision. Split out of [[multiProbeCore]] (which feeds
+    * bucket collision. Split out of [[nearDupPairsMultiProbe]] (which feeds
     * it to `.distinct()` + rescore, byte-identical plan) so the mass
     * that the candidate dedup exchange and the rescore joins carry
     * can be MEASURED without materializing it to disk
@@ -1231,8 +1062,7 @@ object Similarity {
     * passes None.
     */
   private[graft] def candidateStreamOf(e: DataFrame, bands: Int, r: Int,
-      t: Int, minMax: Option[Long],
-      probeSlice: Option[(Int, Int)] = None): DataFrame = {
+      t: Int, probeSlice: Option[(Int, Int)] = None): DataFrame = {
     val idx = e.select(col("vec_id").as("i_vec"),
       posexplode(col("sigs")).as(Seq("band", "bucket")))
     val probeSrc = probeSlice.fold(e) { case (k, kk) =>
@@ -1242,11 +1072,8 @@ object Similarity {
           col("embedding"), bands, r, Dim, t)).as(Seq("pos", "bucket")))
       .select(col("p_vec"), (col("pos") / (t + 1)).cast("int").as("band"),
         col("bucket"))
-    val touched = probes.join(idx, Seq("band", "bucket"))
+    probes.join(idx, Seq("band", "bucket"))
       .filter(col("p_vec") =!= col("i_vec"))
-    val restricted = minMax.fold(touched)(m =>
-      touched.filter(greatest(col("p_vec"), col("i_vec")) >= lit(m)))
-    restricted
       .select(least(col("p_vec"), col("i_vec")).as("vec_a"),
         greatest(col("p_vec"), col("i_vec")).as("vec_b"))
   }
@@ -1274,33 +1101,6 @@ object Similarity {
           col("q8_a"), col("q8_b")) >= g)
         .select(col("vec_a"), col("vec_b"))
     }
-
-  private def multiProbeCore(emb: DataFrame, bands: Int, r: Int,
-      t: Int, minMax: Option[Long],
-      gate: Option[Double] = None): DataFrame = {
-    val e = sigTableOf(emb, bands, r)
-    val cand = gatedStream(e,
-      candidateStreamOf(e, bands, r, t, minMax), gate).distinct()
-    // in the gated (past-2^18) branch the embedding table already
-    // broadcasts for the gate (SQ8 codes), and the candidate side is
-    // the big one (~10^9 rows at 1M reps) — broadcasting the float
-    // embeddings too (~300 MB at 1M) deletes BOTH rescore exchanges
-    // of the candidate stream, the second-largest disk cost of the
-    // full shape after the pair-dedup. Below the branch the rescore
-    // stays a plain equi-join (registered plans untouched; tiny
-    // corpora auto-broadcast under AQE anyway).
-    val side = (name: String) => {
-      val p = e.select(col("vec_id").as(name),
-        col("embedding").as(name.replace("vec", "emb")))
-      if (gate.isDefined) broadcast(p) else p
-    }
-    cand
-      .join(side("vec_a"), "vec_a")
-      .join(side("vec_b"), "vec_b")
-      .withColumn("cos", cosine_sim(col("emb_a"), col("emb_b")))
-      .filter(col("cos") >= 0.35)
-      .select(col("vec_a"), col("vec_b"), col("cos"))
-  }
 
   /** Exhaustive O(n²) pair scoring — recall baseline ONLY (used by
     * SimilaritySpec to measure [[embeddingNearDup]]'s bucket recall);
@@ -1507,17 +1307,6 @@ object Similarity {
     val base = firstNCentroids(e)
     Array.tabulate(NumSub)(m => base.map(_.slice(m * SubDim, (m + 1) * SubDim)))
   }
-
-  /** Sequential-fold squared L2 between a FLOAT[] column and a
-    * literal codeword — deterministic, mirrored by the oracle's
-    * list_reduce.
-    */
-  private def sqDist(a: Column, cw: Array[Float]): Column =
-    aggregate(
-      zip_with(a, array(cw.toIndexedSeq.map(lit): _*), (x, y) => {
-        val d = x.cast("double") - y.cast("double"); d * d
-      }),
-      lit(0.0), (acc, v) => acc + v)
 
   /** Per-row PQ encoding: for each subspace, the index of the nearest
     * codeword (squared L2, ties to the lowest code — `array_position`

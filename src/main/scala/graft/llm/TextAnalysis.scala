@@ -45,9 +45,6 @@ object TextAnalysis {
     "es" -> Seq("el", "la", "los", "de", "y", "es", "un"),
     "fr" -> Seq("le", "la", "les", "et", "est", "un"))
 
-  private def scoreCol(lang: String): Column =
-    size(filter(tokensCol, w => w.isInCollection(stopwords(lang))))
-
   private def sqlScore(lang: String): String = {
     val set = stopwords(lang).map(w => s"'$w'").mkString(", ")
     s"len(list_filter($sqlTokens, w -> w IN ($set)))"

@@ -9,7 +9,6 @@ import graft.SparkSpec
 class DedupSpec extends SparkSpec {
 
   private lazy val dupDir: String = {
-    import org.apache.spark.sql.functions._
     val base = "the quick brown fox jumps over the lazy dog near the river bank today"
     val near = "the quick brown fox jumps over the lazy dog near the river bank tonight"
     val other = "completely different content about spark query engines and shuffles here"
@@ -117,7 +116,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhash pigeonhole finds a planted sub-threshold pair (non-vacuous capture)") {
-    import org.apache.spark.sql.functions._
     // a one-token edit in a LONG doc flips few fingerprint bits (the
     // vote sums are dominated by the other tokens); pick the first
     // replacement whose true 120-bit hamming is in (0, 3] by
@@ -168,7 +166,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("containment: a truncated copy scores ~1.0 despite low jaccard") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     // 40-token original; the clip keeps the first 14 tokens (12 of 38
     // shingles -> jaccard ~0.3, under the 0.5 near-dup bar)
@@ -196,7 +193,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("cross-corpus dedup: exact, near, and keep verdicts on a planted batch") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val base = "the quick brown fox jumps over the lazy dog near the river bank today"
     val near = "the quick brown fox jumps over the lazy dog near the river bank tonight"

@@ -19,7 +19,7 @@ class EmbedDupCollapseSpec extends SparkSpec {
     val dup = base
       .unionAll(base.withColumn("vec_id", col("vec_id") + lit(n)))
       .unionAll(base.withColumn("vec_id", col("vec_id") + lit(2 * n)))
-    val (bands, r, t) = (16, Similarity.nearDupPlanesFor(n) + 1, 2)
+    val (bands, r, t) = (16, 9, 2)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(x => (x.getLong(0), x.getLong(1), math.round(x.getDouble(2) * 1e9)))
       .toSet

@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.SparkSpec
+import org.apache.spark.sql.functions.col
 
 /** The self-defending near-dup entry point (VERDICT r14 item 8): the
   * registered query projects its candidate mass at plan time from
@@ -47,7 +48,17 @@ class NearDupMassGuardSpec extends SparkSpec {
       assert(e.getMessage.contains("maxCandidateRows"))
       assert(e.getMessage.contains("pre-bucket"))
     } finally spark.conf.unset("spark.graft.neardup.maxCandidateRows")
-    // and under the default budget the registered query runs
-    assert(Similarity.embeddingNearDup(spark, sf001).count() > 0)
+    // under the default budget the registered query runs the rep
+    // dial, row for row
+    val emb = graft.Tables.embeddings(spark, sf001)
+      .select(col("vec_id"), col("embedding"))
+    val reps = emb.select(col("embedding")).distinct().count()
+    val (b, r, t) = Similarity.nearDupRepDialFor(reps)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(x => (x.getLong(0), x.getLong(1), x.getDouble(2)))
+      .sortBy(x => (x._1, x._2)).toSeq
+    val registered = rows(Similarity.embeddingNearDup(spark, sf001))
+    assert(registered.nonEmpty)
+    assert(registered == rows(Similarity.nearDupWithDupCollapse(emb, b, r, t)))
   }
 }

@@ -52,7 +52,6 @@ class ScaleSmokeSpec extends SparkSpec {
   }
 
   test("hybrid sparse channel: a corpus-wide common token generates ZERO candidates") {
-    import spark.implicits._
     // the sparse-channel scale property: candidate pairs are Σ df²
     // over RARE terms only. A token in every document (df = corpus)
     // would alone emit |corpus|² pairs if it joined; the df <= MaxDf

@@ -16,7 +16,6 @@ case class WordAt(word: String, line: Int)
   * invariants — sum(counts)==tokens, nReduce invariance).
   */
 class MRJobSpec extends SparkSpec {
-  import org.apache.spark.sql.functions._
 
   /** README.MD:25-32 map semantics: tokenize on non-letters, emit (word, 1). */
   private val wcMap: (String, String) => Seq[(String, Int)] =
@@ -163,7 +162,6 @@ class MRJobSpec extends SparkSpec {
   }
 
   test("KVText.readKV: line without a tab yields empty value") {
-    import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("kvnotab").toString
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/data.txt"),

@@ -53,8 +53,7 @@ class Sq8StreamSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val base = "/root/testdata/sf0.001"
     val ebatch = graft.Tables.embeddings(spark, base)
-    val (bands, r, t) = (16,
-      graft.llm.Similarity.nearDupPlanesFor(ebatch.count()) + 1, 2)
+    val (bands, r, t) = (16, 9, 2)
     val vecs = ebatch.select(col("vec_id"), col("embedding")).collect()
       .map(x => (x.getLong(0), x.getSeq[Float](1).toArray)).toSeq
     val cents = graft.llm.Similarity.firstNCentroids(ebatch)

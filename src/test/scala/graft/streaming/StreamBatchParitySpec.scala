@@ -412,8 +412,7 @@ class StreamBatchParitySpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val base = "/root/testdata/sf0.001"
     val ebatch = graft.Tables.embeddings(spark, base)
-    val (bands, r, t) = (16,
-      graft.llm.Similarity.nearDupPlanesFor(ebatch.count()) + 1, 2)
+    val (bands, r, t) = (16, 9, 2)
     val vecs = ebatch.select(col("vec_id"), col("embedding")).collect()
       .map(x => (x.getLong(0), x.getSeq[Float](1).toArray)).toSeq
     val input = MemoryStream[(Long, Array[Float])]
@@ -443,8 +442,7 @@ class StreamBatchParitySpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val base = "/root/testdata/sf0.001"
     val ebatch = graft.Tables.embeddings(spark, base)
-    val (bands, r, t) = (16,
-      graft.llm.Similarity.nearDupPlanesFor(ebatch.count()) + 1, 2)
+    val (bands, r, t) = (16, 9, 2)
     // plant event times 1 s apart by vec_id: the deterministic
     // pairing rule becomes |vec_a − vec_b| ≤ ttlSec
     val t0 = 1700000000000L
@@ -510,8 +508,7 @@ class StreamBatchParitySpec extends SparkSpec {
       (4L, e, tsUs(subMsBase + 10 * ttlUs + ttlUs - 400)))
     val input = MemoryStream[(Long, Array[Float], java.sql.Timestamp)]
     val q = graft.streaming.EmbeddingStreams.nearDupPairsStreamTtl(
-        input.toDS().toDF("vec_id", "embedding", "ts"), 8,
-        graft.llm.Similarity.nearDupPlanesFor(4), 1, ttl)
+        input.toDS().toDF("vec_id", "embedding", "ts"), 8, 4, 1, ttl)
       .writeStream.format("memory").queryName("parity_neardup_subms")
       .outputMode("append").start()
     input.addData(rows)
@@ -538,8 +535,7 @@ class StreamBatchParitySpec extends SparkSpec {
     // with the real corpus across waves
     val cohort = (0 until 100).map(k => (shift + k, vecs.head._2))
     val corpus = new scala.util.Random(7).shuffle(vecs ++ cohort)
-    val (bands, r, t) = (16,
-      graft.llm.Similarity.nearDupPlanesFor(corpus.size.toLong) + 1, 2)
+    val (bands, r, t) = (16, 10, 2)
     val input = MemoryStream[(Long, Array[Float])]
     val q = graft.streaming.EmbeddingStreams.nearDupPairsStream(
         input.toDS().toDF("vec_id", "embedding"), bands, r, t)
@@ -573,8 +569,7 @@ class StreamBatchParitySpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val base = "/root/testdata/sf0.001"
     val ebatch = graft.Tables.embeddings(spark, base)
-    val (bands, r, t) = (16,
-      graft.llm.Similarity.nearDupPlanesFor(ebatch.count()) + 1, 2)
+    val (bands, r, t) = (16, 9, 2)
     val vecs = ebatch.select(col("vec_id"), col("embedding")).collect()
       .map(x => (x.getLong(0), x.getSeq[Float](1).toArray)).toSeq
     val cents = graft.llm.Similarity.firstNCentroids(ebatch)
@@ -625,8 +620,7 @@ class StreamBatchParitySpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val base = "/root/testdata/sf0.001"
     val ebatch = graft.Tables.embeddings(spark, base)
-    val (bands, r, t) = (16,
-      graft.llm.Similarity.nearDupPlanesFor(ebatch.count()) + 1, 2)
+    val (bands, r, t) = (16, 9, 2)
     val vecs = ebatch.select(col("vec_id"), col("embedding")).collect()
       .map(x => (x.getLong(0), x.getSeq[Float](1).toArray)).toSeq
     val cents = graft.llm.Similarity.firstNCentroids(ebatch)
