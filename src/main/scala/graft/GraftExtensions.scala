@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
-import graft.functions.{CosineSim, Fnv1a, H60, MinhashSigs, Simhash, Tokenize, WordCountMap}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import graft.functions.{CosineSim, Fnv1a, H60, MinhashSigs, Simhash, Tokens, WordCountMap}
 
 /** SparkSessionExtensions entry point: injects the engine's native
   * expressions into the SQL function registry, so
@@ -14,62 +16,33 @@ import graft.functions.{CosineSim, Fnv1a, H60, MinhashSigs, Simhash, Tokenize, W
   * [[GraftExtensions.register]] on an existing session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction(GraftExtensions.fnv1aDesc)
-    e.injectFunction(GraftExtensions.cosineDesc)
-    e.injectFunction(GraftExtensions.tokenizeDesc)
-    e.injectFunction(GraftExtensions.h60Desc)
-    e.injectFunction(GraftExtensions.simhashDesc)
-    e.injectFunction(GraftExtensions.minhashDesc)
-    e.injectFunction(GraftExtensions.wcMapDesc)
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach(e.injectFunction)
 }
 
 object GraftExtensions {
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-  private val fnv1aDesc: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("fnv1a"),
-    new ExpressionInfo(classOf[Fnv1a].getName, "fnv1a"),
-    (args: Seq[Expression]) => Fnv1a(args.head))
+  private def desc(name: String, cls: Class[_])(build: Seq[Expression] => Expression)
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
 
-  private val cosineDesc: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("cosine_sim"),
-    new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-    (args: Seq[Expression]) => CosineSim(args.head, args(1)))
-
-  private val tokenizeDesc: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("tokenize"),
-    new ExpressionInfo(classOf[Tokenize].getName, "tokenize"),
-    (args: Seq[Expression]) => Tokenize(args.head))
-
-  private val h60Desc: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("h60"),
-    new ExpressionInfo(classOf[H60].getName, "h60"),
-    (args: Seq[Expression]) => H60(args.head))
-
-  private val simhashDesc: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("simhash"),
-    new ExpressionInfo(classOf[Simhash].getName, "simhash"),
-    (args: Seq[Expression]) => Simhash(args.head))
-
-  private val minhashDesc: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("minhash_sigs"),
-    new ExpressionInfo(classOf[MinhashSigs].getName, "minhash_sigs"),
-    (args: Seq[Expression]) => MinhashSigs(args.head))
-
-  // the one Generator (UDTF): mapf-style fan-out callable from SQL
-  private val wcMapDesc: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("wc_map"),
-    new ExpressionInfo(classOf[WordCountMap].getName, "wc_map"),
-    (args: Seq[Expression]) => WordCountMap(args.head))
+  /** Every SQL function the engine registers. `tokens` is the shared
+    * whitespace tokenizer (`LATERAL VIEW explode(tokens(text))` gives
+    * one row per token); `wc_map` is the one Generator (UDTF):
+    * mapf-style fan-out callable from SQL.
+    */
+  private val functions = Seq(
+    desc("fnv1a", classOf[Fnv1a])(args => Fnv1a(args.head)),
+    desc("cosine_sim", classOf[CosineSim])(args => CosineSim(args.head, args(1))),
+    desc("tokens", classOf[Tokens])(args => Tokens(args.head)),
+    desc("h60", classOf[H60])(args => H60(args.head)),
+    desc("simhash", classOf[Simhash])(args => Simhash(args.head)),
+    desc("minhash_sigs", classOf[MinhashSigs])(args => MinhashSigs(args.head)),
+    desc("wc_map", classOf[WordCountMap])(args => WordCountMap(args.head)))
 
   /** Register on an already-built session (test/driver convenience). */
-  def register(spark: SparkSession): Unit = {
-    Seq(fnv1aDesc, cosineDesc, tokenizeDesc, h60Desc, simhashDesc,
-      minhashDesc, wcMapDesc).foreach { d =>
-      spark.sessionState.functionRegistry.registerFunction(d._1, d._2, d._3)
+  def register(spark: SparkSession): Unit =
+    functions.foreach { case (id, info, build) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, build)
     }
-  }
 }

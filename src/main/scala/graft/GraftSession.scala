@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   * - AQE on (runtime re-plan: skew-join splitting, partition
   *   coalescing, broadcast demotion);
   * - UTC session timezone (oracle parity and sanity);
-  * - graft SQL functions (fnv1a, cosine_sim, tokenize) registered.
+  * - graft SQL functions (fnv1a, cosine_sim, tokens, ...) registered.
   */
 object GraftSession {
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {

@@ -78,8 +78,7 @@ object ScaleUp {
     val docShift = docs.agg(max(col("doc_id"))).head.getLong(0) + 1L
     copies(docs) { (d, k) =>
       val text = if (k == 0) col("text")
-        else concat_ws(" ", transform(
-          filter(split(col("text"), "\\s+"), t => length(t) > 0),
+        else concat_ws(" ", transform(graft.llm.TextAnalysis.tokensCol,
           t => concat(t, lit(s"_$k"))))
       d.select((col("doc_id") + lit(k * docShift)).as("doc_id"),
         text.as("text"), col("lang"), col("source"),

@@ -70,10 +70,9 @@ object Postings {
     StructField("n_occ", LongType, nullable = false),
     StructField("positions", StringType, nullable = false)))
 
-  // Java \s without UNICODE_CHARACTER_CLASS — all BMP single chars,
-  // so a char-level scan sees exactly the regex's split points
-  private def isWs(c: Char): Boolean = c == ' ' || c == '\t' ||
-    c == '\n' || c == 0x0B || c == '\f' || c == '\r'
+  // Java \s is all BMP single chars, so a char-level scan sees
+  // exactly the regex's split points
+  import Tokens.isWs
 
   private final class Group(var n: Long, val pos: java.lang.StringBuilder)
 

@@ -61,8 +61,7 @@ case class ScrubText(child: Expression) extends UnaryExpression {
 
 object ScrubText {
 
-  private def isWs(c: Char): Boolean = c == ' ' || c == '\t' ||
-    c == '\n' || c == 0x0B || c == '\f' || c == '\r'
+  import Tokens.isWs
   private def isLetter(c: Char): Boolean =
     (c >= 'A' && c <= 'Z') || (c >= 'a' && c <= 'z')
   private def isLocal(c: Char): Boolean = isLetter(c) ||

@@ -74,8 +74,7 @@ object TextCounts {
   private val words: Array[Array[String]] =
     langs.map(l => graft.llm.TextAnalysis.stopwords(l).toArray).toArray
 
-  private def isWs(cp: Int): Boolean = cp == ' ' || cp == '\t' ||
-    cp == '\n' || cp == 0x0B || cp == '\f' || cp == '\r'
+  import Tokens.isWs
   private def isAlpha(cp: Int): Boolean =
     (cp >= 'A' && cp <= 'Z') || (cp >= 'a' && cp <= 'z')
   private def isDigit(cp: Int): Boolean = cp >= '0' && cp <= '9'

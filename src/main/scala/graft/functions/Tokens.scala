@@ -11,7 +11,12 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** The shared whitespace tokenizer as ONE fused byte scan:
   * `tokens(text)` ≡ `filter(split(text, '\\s+'), w -> length(w) > 0)`
-  * — the expression every text query's map pass starts with.
+  * — the expression every text query's map pass starts with, and the
+  * single home of the token rule: a token is a maximal run of
+  * characters outside Java's `\s` ([[Tokens.isWs]]). The MapReduce
+  * jobs, the `tokens` and `wc_map` SQL functions and the other text
+  * kernels (`TextCounts`, `Postings`, `ScrubText`) all tokenize or
+  * test whitespace through this object.
   *
   * The composed form pays, PER ROW, a `Pattern.compile("\\s+")`
   * (Java's `String.split` only fast-paths single-char literals; Spark's
@@ -51,8 +56,13 @@ case class Tokens(child: Expression) extends UnaryExpression {
 
 object Tokens {
 
-  private def isWs(b: Byte): Boolean =
-    b == ' ' || b == '\t' || b == '\n' || b == 0x0b || b == '\f' || b == '\r'
+  /** Java's `\s` without `UNICODE_CHARACTER_CLASS`: exactly
+    * `[ \t\n\x0B\f\r]`. Every member is ASCII, so the same test is
+    * exact on UTF-8 bytes, UTF-16 chars and code points alike (a
+    * multi-byte sequence never holds a byte below 0x80).
+    */
+  def isWs(c: Int): Boolean =
+    c == ' ' || c == '\t' || c == '\n' || c == 0x0b || c == '\f' || c == '\r'
 
   def compute(text: UTF8String): ArrayData = {
     val bytes = text.getBytes

@@ -17,17 +17,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * This closes the SQL side of the UDF/UDTF surface: the typed path
   * is [[graft.operators.MRJob.mapf]]; scalar SQL functions are the
   * registered native expressions; and row→many-rows fan-out is this
-  * generator. Unlike `explode(split(...))` + GROUP BY, the
+  * generator. Unlike `explode(tokens(...))` + GROUP BY, the
   * per-document counting happens INSIDE the generator — map-side,
   * one pass over the tokens, no shuffle for the within-document
   * aggregation (the map-combine the reference's wordcount mapf
   * leaves to reducers, folded into the map step).
   *
-  * Output rows are word-sorted within a document, so the fan-out is
-  * deterministic row-for-row, not just as a set. Interpreted eval
-  * (CodegenFallback) like every Spark built-in generator: generators
-  * sit outside WholeStageCodegen anyway (GenerateExec), so nothing
-  * is lost on the hot path.
+  * Output rows are word-sorted within a document (Spark's binary
+  * string order), so the fan-out is deterministic row-for-row, not
+  * just as a set. Interpreted eval (CodegenFallback) like every Spark
+  * built-in generator: generators sit outside WholeStageCodegen
+  * anyway (GenerateExec), so nothing is lost on the hot path.
   */
 case class WordCountMap(child: Expression) extends UnaryExpression
     with Generator with CodegenFallback {
@@ -45,16 +45,18 @@ case class WordCountMap(child: Expression) extends UnaryExpression
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val t = child.eval(input)
     if (t == null) return Nil
-    val text = t.asInstanceOf[UTF8String].toString
-    val counts = scala.collection.mutable.HashMap.empty[String, Long]
-    // the same `\s+` tokenization as TextAnalysis.tokensCol and every
-    // wordcount oracle — NOT Character.isWhitespace, whose Unicode
-    // class differs from the regex class both engines agree on
-    text.split("\\s+").foreach { w =>
-      if (w.nonEmpty) counts.update(w, counts.getOrElse(w, 0L) + 1L)
+    // the shared tokenizer (the rule every wordcount oracle agrees on),
+    // counted as the UTF8String slices it returns — no String round trip
+    val words = Tokens.compute(t.asInstanceOf[UTF8String])
+    val counts = scala.collection.mutable.HashMap.empty[UTF8String, Long]
+    var i = 0
+    while (i < words.numElements()) {
+      val w = words.getUTF8String(i)
+      counts.update(w, counts.getOrElse(w, 0L) + 1L)
+      i += 1
     }
-    counts.toSeq.sortBy(_._1).map { case (w, c) =>
-      InternalRow(UTF8String.fromString(w), c)
+    counts.toSeq.sortWith((a, b) => a._1.binaryCompare(b._1) < 0).map {
+      case (w, c) => InternalRow(w, c)
     }
   }
 

@@ -3,6 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.llm.TextAnalysis
 
 /** The reference's canonical MapReduce jobs, Spark-first.
   *
@@ -17,23 +18,22 @@ import graft.Tables
   * strictly improves on the reference's no-combiner sort-based reduce
   * (worker.go:153-165).
   *
-  * Scale notes: tokenization is `explode(split(...))` — a codegen'd
-  * Generate, no UDF; the only shuffle is the final groupBy on the
-  * token key, with map-side partial aggregation shrinking it to
-  * |vocab| per partition. At 100 TB this is scan-bound, as it should
-  * be.
+  * Scale notes: tokenization is `explode(tokens(...))` — the fused
+  * [[graft.functions.Tokens]] byte scan under a Generate, no UDF; the
+  * only shuffle is the final groupBy on the token key, with map-side
+  * partial aggregation shrinking it to |vocab| per partition. At
+  * 100 TB this is scan-bound, as it should be.
   */
 object CanonicalJobs {
 
   /** Tokenize `documents.text` on whitespace, one row per token.
     * Case-preserving per README.MD:31 ("Hello" stays "Hello").
-    * Blank-token filter mirrors the reference's empty-line skip
-    * (worker.go:144-146).
+    * The shared tokenizer emits no blank tokens, which mirrors the
+    * reference's empty-line skip (worker.go:144-146).
     */
   def tokens(spark: SparkSession, sfDir: String): DataFrame =
     Tables.documents(spark, sfDir)
-      .select(col("doc_id"), explode(split(col("text"), "\\s+")).as("word"))
-      .filter(length(col("word")) > 0)
+      .select(col("doc_id"), explode(TextAnalysis.tokensCol).as("word"))
 
   /** Word count — the flagship job (README.MD:25-53). */
   def wordcount(spark: SparkSession, sfDir: String): DataFrame =
@@ -52,7 +52,7 @@ object CanonicalJobs {
   def invertedIndex(spark: SparkSession, sfDir: String): DataFrame =
     Tables.documents(spark, sfDir)
       .select(col("doc_id"),
-        explode(array_distinct(graft.llm.TextAnalysis.tokensCol)).as("word"))
+        explode(array_distinct(TextAnalysis.tokensCol)).as("word"))
       .groupBy("word")
       // single collect_set aggregate; n_docs = size of the same set.
       // (collect_set + countDistinct together would plan an Expand

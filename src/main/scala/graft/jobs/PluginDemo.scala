@@ -27,8 +27,8 @@ object PluginDemo {
 
   /** What the user would write and compile — no Scala, no engine
     * internals, just the `UserJob` interface. Tokenization matches
-    * `CanonicalJobs.tokens` (`split("\\s+")`, drop empties,
-    * case-preserving per README.MD:31).
+    * `CanonicalJobs.tokens` (whitespace runs per the shared `tokens`
+    * rule, no empties, case-preserving per README.MD:31).
     */
   val wordCountJava: String =
     """package graftdemo;

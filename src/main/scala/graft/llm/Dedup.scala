@@ -264,22 +264,24 @@ object Dedup {
     * back to distributed large-star/small-star. LSH banding over
     * collapsed representatives keeps real near-dup graphs far below
     * the default even at corpus scale — the pair count is O(distinct
-    * near-duplicate contents), not O(corpus). Tunable per session
-    * (`spark.graft.cc.maxDriverEdges`) so cluster deploys can size it
-    * to driver memory — and tests can force the distributed path.
+    * near-duplicate contents), not O(corpus). It is the default of
+    * the `maxDriverEdges` argument of [[sizedCC]] and
+    * [[dedupClusters]]; `q_dedup_clusters_dist` and the specs pass 0
+    * to force the distributed path.
     */
-  private def driverCCMaxEdges(spark: SparkSession): Long =
-    spark.conf.get("spark.graft.cc.maxDriverEdges", "1000000").toLong
+  val DriverCCMaxEdges = 1000000L
 
   /** Representative-level cluster labels (rep_doc, cluster) for the
     * collapsed near-dup graph at est_jaccard >= 0.5. Input `sigs`
     * must be the representative signature set.
     */
-  private def repClusterLabels(spark: SparkSession, sigs: DataFrame): DataFrame =
+  private def repClusterLabels(spark: SparkSession, sigs: DataFrame,
+      maxDriverEdges: Long): DataFrame =
     sizedCC(spark,
       lshPairsOf(sigs)
         .filter(col("est_jaccard") >= 0.5)
-        .select(col("doc_a"), col("doc_b")))
+        .select(col("doc_a"), col("doc_b")),
+      maxDriverEdges)
 
   /** Size-dispatched connected components over an undirected
     * (doc_a, doc_b) pair frame — the production CC entry shared by
@@ -297,7 +299,8 @@ object Dedup {
     * path — the distributed path exists precisely because labels may
     * not fit the driver, so it must shuffle-join.
     */
-  private[graft] def sizedCC(spark: SparkSession, rawPairs: DataFrame): DataFrame = {
+  private[graft] def sizedCC(spark: SparkSession, rawPairs: DataFrame,
+      maxDriverEdges: Long = DriverCCMaxEdges): DataFrame = {
     val obs = org.apache.spark.sql.Observation()
     // Dispatch on the RAW observed pair count — a deliberate, MEASURED
     // ruling on ADVICE r16's suggestion to count/collect distinct
@@ -309,12 +312,12 @@ object Dedup {
     // first large-star stage normalizes+distincts anyway). The raw
     // count only errs CONSERVATIVE (duplicates inflate it, pushing a
     // borderline graph onto the distributed path), and driver memory
-    // stays bounded by the conf regardless: at most maxDriverEdges raw
-    // rows (~16 MB at the 1M default) are ever collected.
+    // stays bounded by the threshold regardless: at most maxDriverEdges
+    // raw rows (~16 MB at the 1M default) are ever collected.
     val pairs = Materialize.stage(
       rawPairs.observe(obs, count(lit(1)).as("n_edges")))
     val nEdges = obs.get("n_edges").asInstanceOf[Long]
-    if (nEdges <= driverCCMaxEdges(spark)) broadcast(driverUnionFind(spark, pairs))
+    if (nEdges <= maxDriverEdges) broadcast(driverUnionFind(spark, pairs))
     else largeSmallStarCC(pairs)
   }
 
@@ -334,10 +337,12 @@ object Dedup {
     * representatives), never over the corpus; the corpus-sized
     * signature table is staged once and the text never shuffles.
     */
-  def dedupClusters(spark: SparkSession, sfDir: String): DataFrame = {
+  def dedupClusters(spark: SparkSession, sfDir: String,
+      maxDriverEdges: Long = DriverCCMaxEdges): DataFrame = {
     val st = sigTable(spark, sfDir)
     val labels = repClusterLabels(spark,
-      st.filter(col("doc_id") === col("rep")).select(col("doc_id"), col("mhs")))
+      st.filter(col("doc_id") === col("rep")).select(col("doc_id"), col("mhs")),
+      maxDriverEdges)
     st.select(col("doc_id"), col("rep"))
       .join(labels.withColumnRenamed("doc_id", "ldoc"),
         col("rep") === col("ldoc"), "left")
@@ -357,7 +362,8 @@ object Dedup {
   def dedupClusterStats(spark: SparkSession, sfDir: String): DataFrame = {
     val st = sigTable(spark, sfDir)
     val reps = st.filter(col("doc_id") === col("rep"))
-    val labels = repClusterLabels(spark, reps.select(col("doc_id"), col("mhs")))
+    val labels = repClusterLabels(spark, reps.select(col("doc_id"), col("mhs")),
+      DriverCCMaxEdges)
     reps
       .join(labels.withColumnRenamed("doc_id", "ldoc"),
         col("doc_id") === col("ldoc"), "left")
@@ -550,21 +556,10 @@ object Dedup {
     * the large/small-star distributed path — the same labels by
     * construction (both re-point only toward neighborhood minima),
     * registered as its own query so the oracle gate exercises the
-    * 100 TB code path, not just the small-graph shortcut. The CC
-    * branch is chosen eagerly (the edge count observed on the staging
-    * action), so the conf flip can be scoped to construction and
-    * restored after.
+    * 100 TB code path, not just the small-graph shortcut.
     */
-  def dedupClustersDistributed(spark: SparkSession, sfDir: String): DataFrame = {
-    val key = "spark.graft.cc.maxDriverEdges"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "0")
-    try dedupClusters(spark, sfDir)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  def dedupClustersDistributed(spark: SparkSession, sfDir: String): DataFrame =
+    dedupClusters(spark, sfDir, maxDriverEdges = 0L)
 
   /** The deduplicated corpus itself — the rows a pipeline ships:
     * keep the min-doc_id representative of each exact-dup group.
@@ -952,7 +947,7 @@ object Dedup {
     "q_dedup_minhash_pairs" -> minhashLshPairs _,
     "q_dedup_simhash" -> simhash _,
     "q_dedup_simhash_pairs" -> simhashPairs _,
-    "q_dedup_clusters" -> dedupClusters _,
+    "q_dedup_clusters" -> ((s: SparkSession, d: String) => dedupClusters(s, d)),
     "q_dedup_clusters_dist" -> dedupClustersDistributed _,
     "q_dedup_cluster_stats" -> dedupClusterStats _,
     "q_dedup_band_stats" -> bandBucketStats _,

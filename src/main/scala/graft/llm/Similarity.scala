@@ -711,18 +711,6 @@ object Similarity {
     */
   val NearDupGateTau = 0.35 - sq8ErrBound(Dim)
 
-  /** Measured junk keep-rate of the SQ8 pre-gate on the ISOTROPIC
-    * synthetic probe corpus: 0.117 at 1M reps (round-15
-    * CandidateMassProbe grid, BASELINE.md). It is a best-case
-    * reference figure, not what [[nearDupMassGuard]] assumes: clustered
-    * real corpora keep far more junk (bucket-mates sit at smaller
-    * angles, so more of them clear the gate), and projecting with this
-    * figure would under-project the exchange by up to ~1/keep,
-    * admitting the shuffle-disk DNF the guard exists to prevent. The
-    * guard therefore projects with keep = 1.0.
-    */
-  val NearDupGateKeep = 0.12
-
   /** The pre-gate is enabled exactly where the band-doubling branch
     * is: past 2^18 reps. Registered corpora (≤ 2k reps) never see
     * it, so oracle hashes are untouched; past the cap it is what
@@ -743,18 +731,22 @@ object Similarity {
   /** Mass guard on the registered near-dup entry point: before any
     * heavy work, project the candidate rows the dial pushes into the
     * pair-dedup exchange ([[nearDupProjectedCandidates]], at the
-    * worst-case gate keep of 1.0 — see [[NearDupGateKeep]]) and
-    * REFUSE when they exceed `spark.graft.neardup.maxCandidateRows`
-    * (default 1e11 ≈ 1.6 TB of 16 B pair rows — cluster-plausible,
-    * far past any single box). The budget is a conf because it sizes
-    * the refusal to a cluster's shuffle disk, a deployment property.
-    * The refusal names the remedies in preference order: collapse
-    * duplicate mass first ([[nearDupWithDupCollapse]] — the rep
-    * discipline is why the ×1000 corpus's 2M rows hash only 62k
-    * reps), pre-bucket the corpus, or raise the conf on a cluster
-    * sized for the shuffle. A corpus that would not complete on its
-    * disk (the round-14 DNF, BASELINE.md) fails at plan time instead
-    * of with an ENOSPC hours in.
+    * worst-case gate keep of 1.0: the [[NearDupGateTau]] pre-gate's
+    * measured junk keep-rate, 0.117 on the ISOTROPIC 1M-rep probe
+    * corpus (BASELINE.md round 15), is a best case that clustered
+    * corpora exceed, so projecting with it would under-project by up
+    * to ~1/keep) and REFUSE when they exceed
+    * `spark.graft.neardup.maxCandidateRows` (default 1e11 ≈ 1.6 TB of
+    * 16 B pair rows — cluster-plausible, far past any single box).
+    * The budget is a conf because it sizes the refusal to a
+    * cluster's shuffle disk, a deployment property. The refusal names
+    * the remedies in preference order: collapse duplicate mass first
+    * ([[nearDupWithDupCollapse]] — the rep discipline is why the
+    * ×1000 corpus's 2M rows hash only 62k reps), pre-bucket the
+    * corpus, or raise the conf on a cluster sized for the shuffle. A
+    * corpus that would not complete on its disk (the round-14 DNF,
+    * BASELINE.md) fails at plan time instead of with an ENOSPC hours
+    * in.
     */
   def nearDupMassGuard(spark: SparkSession, reps: Long, bands: Int,
       r: Int, t: Int): Unit = {
@@ -959,19 +951,24 @@ object Similarity {
   }
 
 
-  /** [[nearDupPairsMultiProbe]] restricted to pairs with AT LEAST ONE
-    * endpoint in `probeIds` — for such a pair, collision requires one
-    * member's probe to land in the other's index bucket, and BOTH
-    * members' probes exist iff both are in the probe set, so
-    * restricting the PROBES side to `probeIds` (and keeping the index
-    * side full) finds exactly the full operator's pairs among
-    * `probeIds` × corpus where the probing endpoint is in `probeIds`.
-    * For pairs with BOTH endpoints in `probeIds` (the planted-recall
-    * ground truth: copy + base are both in the set) the result is
-    * row-identical to the full operator (SimilaritySpec asserts it).
+  /** [[nearDupPairsMultiProbe]]'s DISTINCT candidates restricted to
+    * pairs with AT LEAST ONE endpoint in `probeIds`, rescored but
+    * UNFILTERED — (vec_a, vec_b, cos, gcos) with gcos the SQ8 pre-gate
+    * score. For such a pair, collision requires one member's probe to
+    * land in the other's index bucket, and BOTH members' probes exist
+    * iff both are in the probe set, so restricting the PROBES side to
+    * `probeIds` (and keeping the index side full) finds exactly the
+    * full operator's pairs among `probeIds` × corpus where the probing
+    * endpoint is in `probeIds`. For pairs with BOTH endpoints in
+    * `probeIds` (the planted-recall ground truth: copy + base are both
+    * in the set), filtering at `cos >= 0.35` is row-identical to the
+    * full operator (SimilaritySpec asserts it).
     *
     * Why it exists: this is what makes [[graft.PlantedRecallProbe]]
-    * runnable at n = 10M on sandbox disk. A full probes ⋈ index join
+    * runnable at n = 10M on sandbox disk, and lets it measure the
+    * gate's keep-rate on a representative sample of the full
+    * operator's candidate distribution (the probe side is a uniform
+    * id slice, independent of geometry). A full probes ⋈ index join
     * at 10M reps × 128 bands SHUFFLES ~1.3B index rows plus ~5B probe
     * rows (estimated 60+ GB). Here the ≤ ~4k probe-side vectors (~2M
     * exploded probe rows at B=128, t=3) are BROADCAST against the
@@ -979,20 +976,6 @@ object Similarity {
     * the corpus at all; the only exchange left is the candidate
     * distinct, bounded by the probe set's bucket occupancy
     * (O(|probeIds|·B·(t+1)·λ)).
-    */
-  private[graft] def nearDupPairsMultiProbeProbeSet(emb: DataFrame,
-      bands: Int, r: Int, t: Int, probeIds: Seq[Long]): DataFrame =
-    probeSetCandidatesScored(emb, bands, r, t, probeIds)
-      .filter(col("cos") >= 0.35)
-      .select(col("vec_a"), col("vec_b"), col("cos"))
-
-  /** The probe-set variant's DISTINCT candidates, rescored but
-    * UNFILTERED — (vec_a, vec_b, cos, gcos) with gcos the SQ8
-    * pre-gate score. Split out so [[graft.PlantedRecallProbe]] can
-    * measure the gate's keep-rate on a representative sample of the
-    * full operator's candidate distribution (the probe side is a
-    * uniform id slice, independent of geometry) at corpus sizes
-    * where the full stream is unmeasurable by join.
     */
   private[graft] def probeSetCandidatesScored(emb: DataFrame,
       bands: Int, r: Int, t: Int, probeIds: Seq[Long]): DataFrame = {

@@ -414,7 +414,7 @@ object EventWindows {
     *
     * Two planning aggregations (global span + per-user max count),
     * each one scan with a one-row result — the bounded-collect
-    * discipline of the CC dispatch (`Dedup.driverCCMaxEdges`). At
+    * discipline of the CC dispatch (`Dedup.DriverCCMaxEdges`). At
     * 100 TB both are cheap map-side-combine jobs; run once per
     * corpus, not per query.
     */

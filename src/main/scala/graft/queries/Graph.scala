@@ -123,8 +123,8 @@ object Graph {
     // budget at any corpus scale — yet this query previously rode the
     // unconditional large/small-star path (log-rounds of staged jobs
     // for a 100-node graph at sf0.1; measured min-of-5: 1.27 →
-    // 0.60 s). The same conf-gated dispatch as dedupClusters
-    // (spark.graft.cc.maxDriverEdges) keeps the distributed fallback
+    // 0.60 s). The same size-gated dispatch as dedupClusters (default
+    // threshold Dedup.DriverCCMaxEdges) keeps the distributed fallback
     // for a genuinely edge-heavy graph, and q_dedup_clusters_dist
     // still pins the distributed path through the oracle gate.
     val labels = graft.llm.Dedup.sizedCC(spark,

@@ -10,15 +10,21 @@ class WordCountMapSpec extends SparkSpec {
 
   test("wc_map fans a document out to word-sorted (word, in-doc count) rows") {
     val s = registered
-    Seq((1L, "b a b c b"), (2L, ""), (3L, "  \t "))
+    Seq((1L, "b a b c b"), (2L, ""), (3L, "  \t "),
+      // the whitespace edge shapes TokensSpec pins: leading/trailing
+      // runs, \u000B and \f separators, an NBSP (not \s) inside a
+      // token, a multi-byte token
+      (4L, " \u000Bx\fy\u000Bx 日本語\tno\u00A0break 日本語 "))
       .toDF("doc_id", "text").createOrReplaceTempView("wcm_docs")
     val rows = s.sql(
       """SELECT doc_id, word, cnt FROM wcm_docs
         |LATERAL VIEW wc_map(text) t AS word, cnt""".stripMargin)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     // doc 1 counted in-generator; empty and whitespace-only docs
-    // produce no rows
-    assert(rows.toSeq == Seq((1L, "a", 1L), (1L, "b", 3L), (1L, "c", 1L)))
+    // produce no rows; doc 4's rows are word-sorted by UTF-8 bytes
+    assert(rows.toSeq == Seq((1L, "a", 1L), (1L, "b", 3L), (1L, "c", 1L),
+      (4L, "no\u00A0break", 1L), (4L, "x", 2L), (4L, "y", 1L),
+      (4L, "日本語", 2L)))
   }
 
   test("SQL-driven mapf wordcount agrees with the DataFrame wordcount globally") {

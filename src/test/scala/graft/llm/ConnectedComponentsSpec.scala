@@ -62,9 +62,7 @@ class ConnectedComponentsSpec extends SparkSpec {
   }
 
   test("dedupClusters forced onto the distributed CC path matches the driver path") {
-    val s2 = spark.newSession()
-    s2.conf.set("spark.graft.cc.maxDriverEdges", "0")
-    val got = Dedup.dedupClusters(s2, sf001).collect()
+    val got = Dedup.dedupClusters(spark, sf001, maxDriverEdges = 0L).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
     val want = Dedup.dedupClusters(spark, sf001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet

@@ -40,7 +40,9 @@ class SimilaritySpec extends SparkSpec {
       .toSet
     val full = pairSet(Similarity.nearDupPairsMultiProbe(emb, bands, r, t))
     val probed = pairSet(
-      Similarity.nearDupPairsMultiProbeProbeSet(emb, bands, r, t, ids))
+      Similarity.probeSetCandidatesScored(emb, bands, r, t, ids)
+        .filter(col("cos") >= 0.35)
+        .select(col("vec_a"), col("vec_b"), col("cos")))
     // every probed pair touches the set and exists in the full output
     assert(probed.subsetOf(full))
     assert(probed.forall(p => idSet(p._1) || idSet(p._2)))

@@ -121,13 +121,13 @@ class AggregatorsSpec extends SparkSpec {
     assert(math.abs(r.getDouble(1) - 1.0) < 1e-15)
   }
 
-  test("tokenize UDTF: 1 row in, N token rows out via SQL") {
+  test("tokens in SQL: 1 row in, N token rows out via explode") {
     import spark.implicits._
     graft.GraftExtensions.register(spark)
     Seq((1L, "Hello,  my name"), (2L, ""), (3L, "one"))
       .toDF("id", "text").createOrReplaceTempView("tok_docs")
     val got = spark.sql(
-      "SELECT id, t.token FROM tok_docs LATERAL VIEW tokenize(text) t AS token")
+      "SELECT id, t.token FROM tok_docs LATERAL VIEW explode(tokens(text)) t AS token")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(got == Seq((1L, "Hello,"), (1L, "my"), (1L, "name"), (3L, "one")))
   }
