@@ -119,56 +119,22 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // warehouse OUTSIDE the repo: the bucketed-table renders are
-      // fingerprint-cached on disk (Bucketed.write's _GRAFT_SRC
-      // marker) so bench reps measure the steady-state Exchange-free
-      // join — but the default warehouse ($PWD/spark-warehouse) is
-      // git-ignored and the driver's round-close environment cleans
-      // ignored files, so the marker never survived to the run it
-      // was built for (r15: 34.7 s re-render in the driver's setup
-      // pass vs 0.88 s steady-state the same day — VERDICT r15 item
-      // 7). A stale-warehouse hazard doesn't exist: reuse is keyed
-      // on the source fingerprint (path + file count + bytes + max
-      // mtime), so regenerated testdata re-renders regardless of
-      // where the warehouse lives. PER-SCALE directory: the bucketed
-      // table NAMES are fixed, so benches at different scale factors
-      // sharing one warehouse thrash each other's render (an sf0.001
-      // smoke between two sf0.1 attempts re-rendered the sf0.1
-      // tables — 14.4 s of setup the marker exists to avoid).
-      .config("spark.sql.warehouse.dir",
-        sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE",
-          "/tmp/graft_warehouse_" +
-            new java.io.File(sfDir).getName.replaceAll("[^A-Za-z0-9._-]", "_")))
-      // In local mode the executor heartbeat is pure liveness noise —
-      // executor and driver share one JVM, so a "lost" heartbeat can
-      // only mean the driver RPC thread is momentarily starved (GC,
-      // 32-thread CPU saturation, hypervisor steal), never a dead
-      // peer. Spark's default kill-switch (60 consecutive misses at
-      // 10 s) turned a degraded-box stall into `System.exit` TWO
-      // HOURS into a ×1000 sweep (observed 2026-08-16: dmesg hrtimer
-      // stalls, 10 min of missed heartbeats, 49 queries dead behind a
-      // stopped SparkContext). Widen the interval and the failure
-      // budget so a multi-hour sweep survives scheduler starvation;
-      // a real cluster run would keep the defaults — there a silent
-      // peer IS a lost executor.
-      // Both sides of the liveness handshake must carry the same
-      // budget: the executor-side exit allows 240×60 s of missed
-      // beats, but HeartbeatReceiver expires executors after
-      // spark.network.timeout — at the previous 600 s that was only
-      // 10 misses, exactly the ~10-min stall that motivated the
-      // widening, and in local mode a "lost" executor is
-      // unreplaceable so the sweep dies anyway (just via a different
-      // path). 3600 s driver-side tolerance matches the intent.
-      .config(LivenessConfs)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // warehouse OUTSIDE the repo, one directory per scale factor: the
+    // bucketed-table renders are fingerprint-cached on disk
+    // (Bucketed.write's _GRAFT_SRC marker) so bench reps measure the
+    // steady-state Exchange-free join. The default $PWD/spark-warehouse
+    // is git-ignored, and a cleaned checkout loses the marker (34.7 s
+    // of re-render against 0.88 s steady state). Reuse is keyed on the
+    // source fingerprint (path + file count + bytes + max mtime), so
+    // regenerated testdata re-renders wherever the warehouse lives. The
+    // bucketed table NAMES are fixed, so scale factors sharing one
+    // warehouse would thrash each other's render (14.4 s of setup).
+    val warehouse = sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE",
+      "/tmp/graft_warehouse_" +
+        new java.io.File(sfDir).getName.replaceAll("[^A-Za-z0-9._-]", "_"))
+    val spark = GraftSession.local(
+      confs = LivenessConfs + ("spark.sql.warehouse.dir" -> warehouse))
 
     def force(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.mode("overwrite").format("noop").save()

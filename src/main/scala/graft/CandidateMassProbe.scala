@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Candidate/rescore MASS of the registered near-dup multiprobe shape
@@ -31,8 +29,8 @@ import org.apache.spark.sql.functions._
   *    HLL at K = 1; at K > 1 a pair found probing from BOTH
   *    endpoints can land in two slices, so the summed estimate is an
   *    upper bound within 2× (stream counts stay exact regardless);
-  *  - per-slice wall seconds and shuffle-write bytes (task-metrics
-  *    listener).
+  *  - per-slice wall seconds and shuffle-write bytes (the
+  *    [[examples.QueryCounters]] listener).
   *
   * Usage: CandidateMassProbe <n> <bands> <r> <t> [slices=1]
   *        [slicesRun=slices] [--full] [--hist[=S]]
@@ -85,24 +83,8 @@ object CandidateMassProbe {
     val slicesRun = positional.drop(1).headOption.map(_.toInt)
       .getOrElse(slices).min(slices)
     require(slicesRun >= 1, s"slicesRun must be >= 1, got $slicesRun")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong()
-    val spilled = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) {
-          shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          spilled.addAndGet(m.diskBytesSpilled)
-        }
-      }
-    })
+    val spark = GraftSession.local()
+    val counters = examples.QueryCounters.attach(spark)
 
     val emb = SynthCorpus.embeddings(spark, n)
     val tau = graft.llm.Similarity.NearDupGateTau
@@ -145,8 +127,8 @@ object CandidateMassProbe {
         println(f"[mass] HIST n=$n dial=($bands,$r,$t) " +
           f"stream_rows=$stream%,d rows_per_rep=${stream.toDouble / n}%.1f " +
           f"sec=$sec%.1f sample=1/$s sampled_rows=$streamSampled%,d " +
-          f"shufWrite=${shufWrite.get / 1e9}%.2f GB " +
-          f"spill=${spilled.get / 1e9}%.2f GB")
+          f"shufWrite=${counters.shuffleWrite.get / 1e9}%.2f GB " +
+          f"spill=${counters.diskSpill.get / 1e9}%.2f GB")
       case None =>
         val e = graft.llm.Similarity.sigTableOf(emb, bands, r)
         var totRows = 0L; var totCand = 0L; var totSec = 0.0
@@ -158,7 +140,7 @@ object CandidateMassProbe {
           // explicit GC, slices stack to ENOSPC on the sandbox disk
           System.gc()
           Thread.sleep(2000) // drain the async listener bus + cleaner
-          shufWrite.set(0L); spilled.set(0L)
+          counters.reset()
           val slice = if (slices == 1) None else Some((k, slices))
           val stream = graft.llm.Similarity
             .candidateStreamOf(e, bands, r, t, slice)
@@ -188,12 +170,12 @@ object CandidateMassProbe {
           Thread.sleep(2000)
           totRows += row.getLong(0); totCand += row.getLong(1); totSec += sec
           totGated += row.getLong(2); totGatedCand += row.getLong(3)
-          totShuf += shufWrite.get; totSpillRun += spilled.get
+          totShuf += counters.shuffleWrite.get; totSpillRun += counters.diskSpill.get
           println(f"[mass] slice=$k rows=${row.getLong(0)}%,d " +
             f"cand_est=${row.getLong(1)}%,d gated=${row.getLong(2)}%,d " +
             f"gated_cand_est=${row.getLong(3)}%,d sec=$sec%.1f " +
-            f"shufWrite=${shufWrite.get / 1e9}%.2f GB " +
-            f"spill=${spilled.get / 1e9}%.2f GB")
+            f"shufWrite=${counters.shuffleWrite.get / 1e9}%.2f GB " +
+            f"spill=${counters.diskSpill.get / 1e9}%.2f GB")
         }
         val scale = slices.toDouble / slicesRun
         val xRows = (totRows * scale).toLong
@@ -219,7 +201,7 @@ object CandidateMassProbe {
       // before the full pass needs the disk
       System.gc()
       Thread.sleep(5000)
-      shufWrite.set(0L); spilled.set(0L)
+      counters.reset()
       val gate = graft.llm.Similarity.nearDupGateFor(n)
       val t0 = System.nanoTime()
       val pairs = graft.llm.Similarity
@@ -228,8 +210,8 @@ object CandidateMassProbe {
       Thread.sleep(2000)
       println(f"[mass] FULL n=$n dial=($bands,$r,$t) gate=$gate " +
         f"pairs=$pairs%,d sec=$sec%.1f " +
-        f"shufWrite=${shufWrite.get / 1e9}%.2f GB " +
-        f"spill=${spilled.get / 1e9}%.2f GB")
+        f"shufWrite=${counters.shuffleWrite.get / 1e9}%.2f GB " +
+        f"spill=${counters.diskSpill.get / 1e9}%.2f GB")
     }
     spark.stop()
   }

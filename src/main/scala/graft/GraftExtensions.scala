@@ -10,10 +10,10 @@ import graft.functions.{CosineSim, Fnv1a, H60, MinhashSigs, Simhash, Tokens, Wor
   * expressions into the SQL function registry, so
   * `spark.sql("SELECT fnv1a(key), cosine_sim(a, b) ...")` works.
   *
-  * Activate via
-  * `SparkSession.builder.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.GraftExtensions`; or call
-  * [[GraftExtensions.register]] on an existing session.
+  * Activate via `withExtensions(new GraftExtensions)` on a session
+  * builder or `spark.sql.extensions=graft.GraftExtensions`; or call
+  * [[GraftExtensions.register]] on an existing session (as
+  * [[GraftSession.local]] does).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit =

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Recall-vs-n for the near-dup multiprobe dials at corpus sizes
@@ -42,14 +41,7 @@ object PlantedRecallProbe {
     val synthN: Option[Long] =
       if (sfDir.startsWith("synth:")) Some(sfDir.stripPrefix("synth:").toLong)
       else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import graft.llm.Similarity
 
     val emb = synthN match {

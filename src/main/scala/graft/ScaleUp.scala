@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesizes a larger corpus from an existing sfDir for local scale
@@ -46,14 +46,7 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val (src, dst, factor) = (args(0), args(1), args(2).toInt)
     require(factor >= 1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     def copies(base: DataFrame)(one: (DataFrame, Int) => DataFrame): DataFrame =
       (0 until factor).map(k => one(base, k)).reduce(_ unionAll _)

@@ -45,14 +45,7 @@ object SkewProbe {
     val (src, work, factor) = (args(0), args(1), args(2).toInt)
     val only: Option[Set[String]] =
       if (args.length > 3) Some(args(3).split(',').toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     plant(spark, src, work, factor)
     val n = spark.read.parquet(s"$work/events.parquet").count()

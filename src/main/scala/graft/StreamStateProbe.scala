@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -36,20 +35,13 @@ object StreamStateProbe {
     val synthDim: Option[Int] =
       if (sfDir.startsWith("dim:")) Some(sfDir.stripPrefix("dim:").toInt)
       else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // RocksDB: memoryUsedBytes reports REAL serialized bytes
-      // (memtable/SST), where the default HDFS-backed store
-      // SizeEstimates its in-heap version maps — object and
-      // version-cache overhead that buries the state-encoding signal
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // RocksDB: memoryUsedBytes reports REAL serialized bytes
+    // (memtable/SST), where the default HDFS-backed store
+    // SizeEstimates its in-heap version maps — object and
+    // version-cache overhead that buries the state-encoding signal
+    val spark = GraftSession.local(confs = Map(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 

@@ -70,7 +70,7 @@ object Tables {
 
   /** Epoch microseconds of a timestamp column, exact for TIMESTAMP and
     * TIMESTAMP_NTZ inputs alike. The session timezone is pinned UTC
-    * (GraftSession / Verify / Bench), so the NTZ→LTZ cast is the
+    * (GraftSession, and SparkSpec in tests), so the NTZ→LTZ cast is the
     * identity on the underlying microsecond value and the result
     * matches DuckDB `epoch_us(ts)` on naive timestamps. Plain
     * `unix_micros` would crash at analysis on NTZ input — this is the

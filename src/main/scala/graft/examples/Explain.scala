@@ -1,9 +1,19 @@
 package graft.examples
-import org.apache.spark.sql.SparkSession
 
-/** Print the formatted physical plan of one registered query (arg 1),
-  * or regenerate `PLANS.md` for the headline queries when invoked
-  * with `--all <outFile>`.
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
+
+/** Formatted physical plans of registered queries, in three modes:
+  *  - `Explain <query> [sfDir]` prints one query's plan;
+  *  - `Explain --all <outFile>` regenerates `PLANS.md` for the
+  *    headline queries;
+  *  - `Explain --dir <outDir> [q_a,q_b,...|-] [sfDir]` writes one
+  *    `<q>.txt` per query (every registered query for `-` or no list)
+  *    under `outDir` — the whole-suite plan audit.
+  *
+  * The session runs 4 cores whatever the host has: plan text embeds
+  * the shuffle partition count.
   */
 object Explain {
   private val Headline = Seq(
@@ -31,17 +41,19 @@ object Explain {
     "q_llm_heavy_hitters", "q2_min_cost_supplier", "q11_important_parts",
     "q16_part_supplier_cnt", "q20_surging_supplier", "q_ann_recall")
 
+  private val Sf0001 = "/root/testdata/sf0.001"
+
+  def planOf(spark: SparkSession, name: String, sfDir: String): String =
+    graft.SparkEntry.queries(name)(spark, sfDir)
+      .queryExecution.explainString(FormattedMode)
+
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def planOf(name: String, dir: String = "/root/testdata/sf0.001"): String = {
-      val df = graft.SparkEntry.queries(name)(spark, dir)
-      df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-    }
-    args.toSeq match {
+    val spark = graft.GraftSession.local(4)
+    try run(spark, args.toSeq) finally spark.stop()
+  }
+
+  def run(spark: SparkSession, args: Seq[String]): Unit =
+    args match {
       case Seq("--all", out) =>
         val md = new StringBuilder(
           "# Physical plans (generated — `sbt \"runMain graft.examples.Explain --all PLANS.md\"`)\n\n" +
@@ -57,7 +69,7 @@ object Explain {
           // cap pathological dumps (the K-step MMR plan formats to
           // ~28k lines): the operator tree at the top carries the
           // shape evidence; the per-node detail tail is truncated
-          val full = planOf(q).trim
+          val full = planOf(spark, q, Sf0001).trim
           val lines = full.linesIterator.toSeq
           val plan = if (lines.length <= 400) full
             else (lines.take(400) :+
@@ -65,13 +77,24 @@ object Explain {
               .mkString("\n")
           md.append(s"\n## $q\n\n```\n$plan\n```\n")
         }
-        java.nio.file.Files.write(java.nio.file.Paths.get(out),
-          md.toString.getBytes("UTF-8"))
+        Files.write(Paths.get(out), md.toString.getBytes("UTF-8"))
         println(s"wrote $out")
-      case Seq(name) => println(planOf(name))
-      case Seq(name, dir) => println(planOf(name, dir))
-      case _ => System.err.println("usage: Explain <query> [sfDir] | --all <outFile>")
+      case "--dir" +: outDir +: rest =>
+        val names = rest.headOption.filter(l => l.nonEmpty && l != "-")
+          .fold(graft.SparkEntry.queries.keys.toSeq.sorted)(_.split(',').toSeq)
+        val sfDir = rest.lift(1).getOrElse(Sf0001)
+        Files.createDirectories(Paths.get(outDir))
+        // a query that fails to plan is reported and gets no file
+        names.foreach { q =>
+          try Files.write(Paths.get(outDir, s"$q.txt"),
+            planOf(spark, q, sfDir).getBytes("UTF-8"))
+          catch { case e: Throwable =>
+            System.err.println(s"[explain] $q failed: ${e.getMessage}")
+          }
+        }
+      case Seq(name) => println(planOf(spark, name, Sf0001))
+      case Seq(name, dir) => println(planOf(spark, name, dir))
+      case _ => System.err.println(
+        "usage: Explain <query> [sfDir] | --all <outFile> | --dir <outDir> [q,...|-] [sfDir]")
     }
-    spark.stop()
-  }
 }

@@ -1,6 +1,5 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import graft.operators.MRJob
 import graft.sources.KVText
 
@@ -13,11 +12,7 @@ object MRDemo {
   def main(args: Array[String]): Unit = {
     val inputGlob = if (args.length > 0) args(0) else "/root/repo/src/test/resources/mr/*.txt"
     val outDir = if (args.length > 1) args(1) else "/tmp/mrdemo-out"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "4")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
     import spark.implicits._
 
     // wordcount, README.MD:25-53 semantics

@@ -1,7 +1,5 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
-
 /** Drives the Structured Streaming pipeline end-to-end over the real
   * events parquet: readStream → watermark → windowed agg → parquet
   * sink with AvailableNow (incremental run-to-completion).
@@ -11,12 +9,7 @@ object StreamDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val outDir = if (args.length > 1) args(1) else "/tmp/streamdemo-out"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
     graft.streaming.EventStreams.runFileStream(spark, sfDir, outDir)
     val out = spark.read.parquet(outDir)
     println(s"STREAMDEMO rows=${out.count()} windows, sample:")

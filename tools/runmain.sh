@@ -1,7 +1,9 @@
 #!/bin/bash
 # Run a compiled graft main directly (no sbt — usable while another
 # sbt holds the project, e.g. a long bench sweep). Mirrors build.sbt's
-# fork JVM options.
+# fork JVM options: heap and --add-opens. Spark settings come from the
+# main's own session (GraftSession.local: UI off, UTC, cores from
+# SPARK_GRAFT_CPUS or the host's processor count).
 # Usage: tools/runmain.sh [-mMEM] graft.SomeMain args...
 set -e
 cd "$(dirname "$0")/.."
@@ -36,6 +38,5 @@ if [ "${SPARK_GRAFT_LONG_SWEEP:-0}" = "1" ]; then
       -Dspark.network.timeout=3600s"
 fi
 exec java -Xmx"$MEM" $OPENS \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   $HB \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"
