@@ -22,10 +22,10 @@ import org.apache.spark.sql.functions._
   *
   * `dim:N` (VERDICT r12 item 3) replaces the 64-dim corpus with a
   * SYNTHETIC one at production dims (512/768): 1000 unique
-  * hash-derived vectors of width N (the streaming family picks the
-  * width up from `spark.graft.stream.dim`). At dim 64 the SQ8 state
-  * honestly measured only 1.9× under the scored path because
-  * per-member framing (id, µs, flag entries + row overhead)
+  * hash-derived vectors of width N, passed to each streaming core as
+  * its `dim` argument. At dim 64 the SQ8 state honestly measured
+  * only 1.9× under the scored path because per-member framing
+  * (id, µs, flag entries + row overhead)
   * dominates a 64 B vector; the 4×-at-production-dims claim was
   * arithmetic until this mode measured it.
   */
@@ -45,7 +45,6 @@ object StreamStateProbe {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-    synthDim.foreach(d => spark.conf.set("spark.graft.stream.dim", d))
     val vecs = synthDim match {
       case Some(d) =>
         // unique deterministic vectors, uniform in [-1, 1] per
@@ -59,6 +58,7 @@ object StreamStateProbe {
           .select(col("vec_id"), col("embedding")).collect()
           .map(x => (x.getLong(0), x.getSeq[Float](1).toArray)).toSeq
     }
+    val dim = synthDim.getOrElse(graft.llm.Similarity.Dim)
     val shift = vecs.map(_._1).max + 1
     val cohort = (0 until 100).map(k => (shift + k, vecs.head._2))
     val corpus = vecs ++ cohort
@@ -110,11 +110,11 @@ object StreamStateProbe {
     }
 
     both("scored") { df =>
-      graft.streaming.EmbeddingStreams.nearDupPairsStream(df, bands, r, t) }
+      graft.streaming.EmbeddingStreams.nearDupPairsStream(df, bands, r, t, dim) }
     both("sq8") { df =>
-      graft.streaming.EmbeddingStreams.nearDupCandidatesStreamSq8(df, bands, r, t) }
+      graft.streaming.EmbeddingStreams.nearDupCandidatesStreamSq8(df, bands, r, t, dim) }
     both("slim") { df =>
-      graft.streaming.EmbeddingStreams.nearDupCandidatesStream(df, bands, r, t) }
+      graft.streaming.EmbeddingStreams.nearDupCandidatesStream(df, bands, r, t, dim) }
     // decisive wedge: m identical vectors ALONE. Collapsed state is
     // 192 buckets × (ONE emb + m 16 B entries); a broken collapse
     // stores m arrays per bucket (≈ m × 49 KB). The dup10→dup100
@@ -130,11 +130,11 @@ object StreamStateProbe {
         f"${bands * (t + 1) * vecs.head._2.length * 4}%d B/copy)")
     }
     dupMarginal("scored") { df =>
-      graft.streaming.EmbeddingStreams.nearDupPairsStream(df, bands, r, t) }
+      graft.streaming.EmbeddingStreams.nearDupPairsStream(df, bands, r, t, dim) }
     dupMarginal("sq8") { df =>
-      graft.streaming.EmbeddingStreams.nearDupCandidatesStreamSq8(df, bands, r, t) }
+      graft.streaming.EmbeddingStreams.nearDupCandidatesStreamSq8(df, bands, r, t, dim) }
     dupMarginal("slim") { df =>
-      graft.streaming.EmbeddingStreams.nearDupCandidatesStream(df, bands, r, t) }
+      graft.streaming.EmbeddingStreams.nearDupCandidatesStream(df, bands, r, t, dim) }
     spark.stop()
   }
 }

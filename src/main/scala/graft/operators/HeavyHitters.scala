@@ -8,8 +8,8 @@ import org.apache.spark.sql.expressions.Aggregator
   * when the exact wordcount's |vocab|-sized shuffle is itself the
   * bottleneck (URL/host tallies, token stats over web-scale text).
   *
-  * Shape: a typed `Aggregator[String, Map[String,Long], ...]` like
-  * [[Aggregators.AssociativeAgg]], so Spark plans partial + final
+  * Shape: a typed `Aggregator[String, Map[String,Long], ...]` whose
+  * buffer merges associatively, so Spark plans partial + final
   * aggregation: each task keeps one ≤k-entry map, only summaries cross
   * the shuffle. Both `reduce` and `merge` are the MG operations from
   * Agarwal et al., "Mergeable Summaries" (PODS'12): merge = pointwise

@@ -39,8 +39,9 @@ trait UserJob extends Serializable {
   * run time — closing the one reference-surface gap compile-time
   * [[MRJob]] closures leave open.
   *
-  * Distribution: the task closures capture only STRINGS (jar path +
-  * class name), never the job instance, so nothing from the foreign
+  * Distribution: the task closures capture only the jar's identity
+  * (path, size, mtime — stamped once on the driver) and the class
+  * name, never the job instance, so nothing from the foreign
   * classloader crosses Java serialization. Each executor instantiates
   * the class locally: `sc.addJar` ships the jar and puts it on the
   * task classloader (the cluster path); if the context classloader
@@ -82,15 +83,19 @@ object JobLoader {
     job(jarPath, className).run(spark, inputGlob)
   }
 
-  /** The jar's job as an [[MRJob]]. Its closures capture only the two
-    * strings; each call looks up the calling thread's instance.
+  /** The jar's job as an [[MRJob]]. The jar is stat'ed here, once per
+    * run on the driver; the closures capture that `JarId` and the
+    * class name, and each call looks up the calling thread's instance.
     */
-  private def job(jar: String, cn: String): MRJob[String, String, String] = MRJob(
-    (name: String, contents: String) =>
-      instance(jar, cn).mapf(name, contents).asScala.map(kv => (kv.key, kv.value)),
-    // holistic: the reference buffers a key's values before the
-    // single reducef call (worker.go:161-165) — same contract
-    (k: String, values: Iterator[String]) => instance(jar, cn).reducef(k, values.toList.asJava))
+  private def job(jar: String, cn: String): MRJob[String, String, String] = {
+    val id = jarId(jar)
+    MRJob(
+      (name: String, contents: String) =>
+        instance(id, cn).mapf(name, contents).asScala.map(kv => (kv.key, kv.value)),
+      // holistic: the reference buffers a key's values before the
+      // single reducef call (worker.go:161-165) — same contract
+      (k: String, values: Iterator[String]) => instance(id, cn).reducef(k, values.toList.asJava))
+  }
 
   /** Run the single ServiceLoader-advertised job in the jar. */
   def runDiscovered(spark: SparkSession, jarPath: String,
@@ -129,8 +134,8 @@ object JobLoader {
   private val loaders =
     new java.util.concurrent.ConcurrentHashMap[JarId, ClassLoader]()
 
-  private def instance(jarPath: String, className: String): UserJob =
-    cache.get().getOrElseUpdate((jarId(jarPath), className), {
+  private def instance(id: JarId, className: String): UserJob =
+    cache.get().getOrElseUpdate((id, className), {
       val cls =
         try Class.forName(className, true, taskLoader())
         catch { case _: ClassNotFoundException =>
@@ -138,7 +143,7 @@ object JobLoader {
           // (one loader per jar version per JVM, so all threads share
           // classes)
           Class.forName(className, true,
-            loaders.computeIfAbsent(jarId(jarPath), _ => freshLoader(jarPath)))
+            loaders.computeIfAbsent(id, _ => freshLoader(id.path)))
         }
       cls.getDeclaredConstructor().newInstance().asInstanceOf[UserJob]
     })

@@ -28,10 +28,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes: the holistic path materializes one key's values at a
   * time (like the reference, worker.go:161-163) but streams via the
-  * grouped iterator — no whole-partition buffering. When the reduce is
-  * associative, use [[runAssociative]]: partial aggregation turns the
-  * shuffle from |pairs| into |keys|·partitions — the difference
-  * between a working and a melted 100 TB wordcount.
+  * grouped iterator — no whole-partition buffering. An associative
+  * reduce is not a second API here but a different plan: express it
+  * as a Catalyst aggregate (`CanonicalJobs`), whose partial
+  * aggregation turns the shuffle from |pairs| into |keys|·partitions.
   */
 final case class MRJob[K, V, OUT](
     mapf: (String, String) => IterableOnce[(K, V)],
@@ -75,18 +75,6 @@ final case class MRJob[K, V, OUT](
       outEnc: Encoder[(K, OUT)]): Dataset[(K, OUT)] =
     kvs.groupBy(MRJob.keyColumns(kvs, kEnc): _*).as[K, (K, V)](kEnc, kvs.encoder)
       .mapGroups((k, it) => (k, reducef(k, it.map(_._2))))
-
-  /** Associative fast path — the combiner the reference lacks
-    * (map side writes raw pairs, worker.go:107-118). `reduceGroups`
-    * plans partial + final ObjectHashAggregate: map-side combine
-    * shrinks the shuffle to |distinct keys| per partition.
-    */
-  def runAssociative(kvs: Dataset[(K, V)], combine: (V, V) => V)(implicit
-      kEnc: Encoder[K],
-      kvEnc: Encoder[(K, V)]): Dataset[(K, V)] =
-    kvs.groupByKey(_._1)
-      .reduceGroups((a: (K, V), b: (K, V)) => (a._1, combine(a._2, b._2)))
-      .map { case (k, (_, v)) => (k, v) }
 
   /** Output fidelity sink: `nReduce` text files, `"key value"` lines,
     * sorted by key within each file (README.MD:43-53; format

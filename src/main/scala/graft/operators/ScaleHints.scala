@@ -12,8 +12,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * cost 1.45–1.64× at sf0.1, where the fact sort is trivial and
   * SMJ's lower constants win. So the hint is applied CONDITIONALLY,
   * from one bounded planning read (a filesystem listing of the
-  * fact's source bytes — metadata only, no data scan, the
-  * autoBucketUs discipline): at or above
+  * fact's source bytes — metadata only, no data scan): at or above
   * `spark.graft.join.shjFactMinBytes` (default 256 MiB compressed
   * source — ~15× the whole sf0.1 corpus and ~2% of the ×1000 one,
   * so both regimes sit far from the boundary) the build side

@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Skew-handling utilities: salting patterns for hot keys.
+/** Skew handling: the salting pattern for a hot aggregation key.
   *
   * When one key holds a disproportionate share of rows (the
   * power-law reality of 100 TB corpora — one user, one URL, one empty
@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * whenever the aggregate decomposes into partial + merge.
   *
   * Spark's AQE skew-join handling (`spark.sql.adaptive.skewJoin`)
-  * covers the JOIN case at runtime; these helpers cover aggregation
-  * and make the pattern explicit and testable.
+  * covers the JOIN case at runtime (SkewSpec); this helper covers
+  * aggregation and makes the pattern explicit and testable.
   */
 object Skew {
 
@@ -28,31 +28,4 @@ object Skew {
       .agg(count(lit(1)).as("_partial"))
       .groupBy(col(key))
       .agg(sum(col("_partial")).as("cnt"))
-
-  /** Generic salted decomposable aggregation: `partial` runs per
-    * (key, salt), `merge` combines partials per key. E.g. partial =
-    * sum(x) & merge = sum(partial) for a salted sum.
-    */
-  def saltedAgg(df: DataFrame, key: String, nSalts: Int,
-      partial: Column, merge: Column => Column,
-      outName: String): DataFrame =
-    df.withColumn("_salt", pmod(spark_partition_id() + monotonically_increasing_id(), lit(nSalts)))
-      .groupBy(col(key), col("_salt"))
-      .agg(partial.as("_partial"))
-      .groupBy(col(key))
-      .agg(merge(col("_partial")).as(outName))
-
-  /** Salted broadcast-replicated join for a skewed big side: the big
-    * side gets a random salt in [0, nSalts); the small side is
-    * exploded `nSalts`× so every (key, salt) bucket finds its match.
-    * Row-identical to `big.join(small, key)`.
-    */
-  def saltedJoin(big: DataFrame, small: DataFrame, key: String,
-      nSalts: Int = 16): DataFrame = {
-    val salted = big.withColumn("_salt",
-      pmod(spark_partition_id() + monotonically_increasing_id(), lit(nSalts)))
-    val replicated = small.withColumn("_salt",
-      explode(sequence(lit(0), lit(nSalts - 1))))
-    salted.join(replicated, Seq(key, "_salt")).drop("_salt")
-  }
 }

@@ -367,31 +367,14 @@ object EventWindows {
     * events; at 10M events with a 5M-event hot user (old
     * construction: infeasible) 14 s; and on UNIFORM corpora it beats
     * the pair join at ×100 (3.5 s vs 4.8 s, sf0.1 0.8 s vs 0.5 s).
-    * The `bucketUs` dial bounds per-task work by (user, bucket) for
-    * heat beyond what one task's sort should hold. Credited values
+    * The registered query runs one partition per user; for heat
+    * beyond what one task's sort should hold, call
+    * `attributionOf(ev, attributionBucketUsFor(ev))`, whose `bucketUs`
+    * dial bounds per-task work by (user, bucket). Credited values
     * are exact decimal sums ([[graft.Exact.dsum]]).
     */
-  def attribution(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = Tables.events(spark, sfDir)
-    attributionOf(ev, autoBucketUs(spark, ev))
-  }
-
-  /** Opt-in planning pass for the registered query (VERDICT r10 item
-    * 8): with `spark.graft.attribution.autoBucket=true`, the two
-    * bounded planning aggregations of [[attributionBucketUsFor]] run
-    * and the derived dial is applied — the documented 100-TB
-    * operating rule executable end-to-end instead of caller-invoked.
-    * Off by default: the sandbox corpora all fit the one-partition-
-    * per-user plan, and the planning scans, while cheap, are not
-    * free. `spark.graft.attribution.maxRowsPerTask` overrides the
-    * task budget (specs set it below the planted hot user's count to
-    * force the finite branch).
-    */
-  private def autoBucketUs(spark: SparkSession, ev: DataFrame): Long =
-    if (!spark.conf.get("spark.graft.attribution.autoBucket", "false").toBoolean)
-      Long.MaxValue
-    else attributionBucketUsFor(ev, spark.conf
-      .get("spark.graft.attribution.maxRowsPerTask", "4000000").toLong)
+  def attribution(spark: SparkSession, sfDir: String): DataFrame =
+    attributionOf(Tables.events(spark, sfDir))
 
   /** Sizes the [[attributionOf]] / [[graft.operators.AsOfJoin.asofBucketed]]
     * `bucketUs` dial from the corpus — the operating rule the

@@ -226,10 +226,11 @@ object EmbeddingStreams {
     */
   def nearDupPairsStreamTtl(embs: DataFrame, bands: Int, r: Int,
       t: Int, ttl: java.time.Duration,
-      watermarkDelay: String = "10 minutes"): Dataset[NearDupPair] = {
+      watermarkDelay: String = "10 minutes",
+      dim: Int = Similarity.Dim): Dataset[NearDupPair] = {
     import embs.sparkSession.implicits._
     val ttlUs = ttlMicrosOf(ttl)
-    val probed = probeExplode(embs, bands, r, t, watermarkDelay,
+    val probed = probeExplode(embs, bands, r, t, dim, watermarkDelay,
         Seq(col("embedding")))
       .as[TimedProbeRow]
     probed
@@ -268,10 +269,11 @@ object EmbeddingStreams {
     * a constant AT the watermark would be dropped as late data.
     */
   def nearDupPairsStream(embs: DataFrame, bands: Int, r: Int,
-      t: Int = Similarity.NearDupProbes): Dataset[NearDupPair] =
+      t: Int = Similarity.NearDupProbes,
+      dim: Int = Similarity.Dim): Dataset[NearDupPair] =
     nearDupPairsStreamTtl(
       embs.withColumn("ts", timestamp_seconds(lit(7258118400L))),
-      bands, r, t, java.time.Duration.ofDays(3650000L), "3650000 days")
+      bands, r, t, java.time.Duration.ofDays(3650000L), "3650000 days", dim)
 
   // ---------------------------------------------------------------
   // Slim composed path: candidate-only state + foreachBatch rescore
@@ -299,16 +301,12 @@ object EmbeddingStreams {
     * (band, bucket) grouping key and the exact flag; `extra` chooses
     * whether the embedding rides along (scored path) or not (slim
     * path — dropping it here is what divides the shuffle mass by
-    * ≈ dim·4 bytes per probe row).
+    * ≈ dim·4 bytes per probe row). `dim` is the vector width, a
+    * plan-time constant of the probe expression: the corpus's
+    * [[Similarity.Dim]] unless the caller streams another width.
     */
   private def probeExplode(embs: DataFrame, bands: Int, r: Int, t: Int,
-      watermarkDelay: String, extra: Seq[Column]): DataFrame = {
-    // vector width is a plan-time constant for the probe expression;
-    // `spark.graft.stream.dim` overrides the corpus default so the
-    // whole streaming family (and StreamStateProbe's production-dim
-    // synth runs) works at 512/768-dim without code edits
-    val dim = embs.sparkSession.conf.getOption("spark.graft.stream.dim")
-      .map(_.toInt).getOrElse(Similarity.Dim)
+      dim: Int, watermarkDelay: String, extra: Seq[Column]): DataFrame =
     embs
       .withWatermark("ts", watermarkDelay)
       .select(Seq(col("vec_id"), col("ts"),
@@ -323,7 +321,6 @@ object EmbeddingStreams {
         col("vec_id"),
         (pmod(col("pos"), lit(t + 1)) === 0).as("exact"),
         col("ts")) ++ extra: _*)
-  }
 
   /** Slim-state transition for one bucket — same candidate rule and
     * full-µs ttl gate as [[collapsedStep]], NO scoring and NO arrays:
@@ -376,10 +373,11 @@ object EmbeddingStreams {
     */
   def nearDupCandidatesStreamTtl(embs: DataFrame, bands: Int, r: Int,
       t: Int, ttl: java.time.Duration,
-      watermarkDelay: String = "10 minutes"): Dataset[CandPair] = {
+      watermarkDelay: String = "10 minutes",
+      dim: Int = Similarity.Dim): Dataset[CandPair] = {
     import embs.sparkSession.implicits._
     val ttlUs = ttlMicrosOf(ttl)
-    val probed = probeExplode(embs, bands, r, t, watermarkDelay, Nil)
+    val probed = probeExplode(embs, bands, r, t, dim, watermarkDelay, Nil)
       .as[SlimProbeRow]
     probed
       .groupByKey(_.band_bucket)
@@ -408,10 +406,11 @@ object EmbeddingStreams {
     * constant-instant trick over the candidate core.
     */
   def nearDupCandidatesStream(embs: DataFrame, bands: Int, r: Int,
-      t: Int = Similarity.NearDupProbes): Dataset[CandPair] =
+      t: Int = Similarity.NearDupProbes,
+      dim: Int = Similarity.Dim): Dataset[CandPair] =
     nearDupCandidatesStreamTtl(
       embs.withColumn("ts", timestamp_seconds(lit(7258118400L))),
-      bands, r, t, java.time.Duration.ofDays(3650000L), "3650000 days")
+      bands, r, t, java.time.Duration.ofDays(3650000L), "3650000 days", dim)
 
   // ---------------------------------------------------------------
   // SQ8 composed path: int8-quantized gated candidates + rescore
@@ -555,10 +554,11 @@ object EmbeddingStreams {
     */
   def nearDupCandidatesStreamSq8Ttl(embs: DataFrame, bands: Int, r: Int,
       t: Int, ttl: java.time.Duration,
-      watermarkDelay: String = "10 minutes"): Dataset[CandPair] = {
+      watermarkDelay: String = "10 minutes",
+      dim: Int = Similarity.Dim): Dataset[CandPair] = {
     import embs.sparkSession.implicits._
     val ttlUs = ttlMicrosOf(ttl)
-    val probed = probeExplode(embs, bands, r, t, watermarkDelay,
+    val probed = probeExplode(embs, bands, r, t, dim, watermarkDelay,
         Seq(col("embedding")))
       .as[TimedProbeRow]
     probed
@@ -585,10 +585,11 @@ object EmbeddingStreams {
     * constant-instant trick.
     */
   def nearDupCandidatesStreamSq8(embs: DataFrame, bands: Int, r: Int,
-      t: Int = Similarity.NearDupProbes): Dataset[CandPair] =
+      t: Int = Similarity.NearDupProbes,
+      dim: Int = Similarity.Dim): Dataset[CandPair] =
     nearDupCandidatesStreamSq8Ttl(
       embs.withColumn("ts", timestamp_seconds(lit(7258118400L))),
-      bands, r, t, java.time.Duration.ofDays(3650000L), "3650000 days")
+      bands, r, t, java.time.Duration.ofDays(3650000L), "3650000 days", dim)
 
   /** Rescore one micro-batch of candidate pairs against the on-disk
     * vector store ([[ivfIndexStream]]'s layout — the index IS the

@@ -5,26 +5,6 @@ import org.apache.spark.sql.functions._
 
 class AggregatorsSpec extends SparkSpec {
 
-  test("associative aggregator == built-in sum (wordcount shape)") {
-    import spark.implicits._
-    val kvs = Seq(("a", 1L), ("b", 1L), ("a", 1L), ("c", 1L), ("a", 1L))
-      .toDS()
-    val viaAgg = kvs.groupByKey(_._1).mapValues(_._2)
-      .agg(Aggregators.sumLong.toColumn.name("cnt"))
-      .collect().toMap.map { case (k, v) => k -> v }
-    assert(viaAgg == Map("a" -> 3L, "b" -> 1L, "c" -> 1L))
-  }
-
-  test("holistic median aggregator, registered as SQL UDAF") {
-    import spark.implicits._
-    spark.udf.register("graft_median", udaf(Aggregators.medianDouble))
-    Seq(("x", 1.0), ("x", 9.0), ("x", 2.0), ("y", 5.0))
-      .toDF("k", "v").createOrReplaceTempView("t")
-    val got = spark.sql("SELECT k, graft_median(v) AS med FROM t GROUP BY k")
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(got == Map("x" -> 2.0, "y" -> 5.0))
-  }
-
   test("Misra-Gries: bounds + guaranteed capture when vocab >> k, across partitions") {
     import spark.implicits._
     // planted skew: 4 heavy items drown 200 light ones; k far below vocab

@@ -35,17 +35,6 @@ class MRJobSpec extends SparkSpec {
     assert(got == expected)
   }
 
-  test("associative fast path agrees with holistic path") {
-    import spark.implicits._
-    val job = MRJob(wcMap, wcReduce, nReduce = 2)
-    val f = wcMap  // local copy so the closure doesn't capture the spec
-    val files = spark.sparkContext.wholeTextFiles(fixtureGlob)
-    val kvs = spark.createDataset(files.flatMap { case (n, c) => f(n, c) })
-    val holistic = job.runOnPairs(kvs).collect().toMap
-    val assoc = job.runAssociative(kvs, (a: Int, b: Int) => a + b).collect().toMap
-    assert(holistic == assoc)
-  }
-
   test("output fidelity sink: nReduce files, keys sorted within each file") {
     import spark.implicits._
     val job = MRJob(wcMap, wcReduce, nReduce = 3)

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class SkewSpec extends SparkSpec {
 
@@ -11,27 +10,6 @@ class SkewSpec extends SparkSpec {
     val salted = Skew.saltedCount(df, "k").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(salted == Map("hot" -> 1000L, "a" -> 1L, "b" -> 1L, "c" -> 1L))
-  }
-
-  test("saltedAgg sum == plain sum") {
-    import spark.implicits._
-    val df = (1 to 100).map(i => ("k" + (i % 3), i.toLong)).toDF("k", "v")
-    val salted = Skew.saltedAgg(df, "k", 8, sum(col("v")), sum(_), "total")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val plain = df.groupBy("k").agg(sum("v").as("total"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(salted == plain)
-  }
-
-  test("saltedJoin row-identical to plain join") {
-    import spark.implicits._
-    val big = (Seq.fill(500)(("hot", 1)) ++ Seq(("x", 2), ("y", 3))).toDF("k", "v")
-    val small = Seq(("hot", "H"), ("x", "X"), ("z", "Z")).toDF("k", "name")
-    val salted = Skew.saltedJoin(big, small, "k")
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2))).sorted.toSeq
-    val plain = big.join(small, "k")
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2))).sorted.toSeq
-    assert(salted == plain)
   }
 
   test("AQE splits a skewed sort-merge-join partition at runtime") {

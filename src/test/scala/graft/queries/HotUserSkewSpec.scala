@@ -217,22 +217,6 @@ class HotUserSkewSpec extends SparkSpec {
     assert(rows(got) == rows(naiveAttribution(ev)))
   }
 
-  test("attribution: the autoBucket flag dials the registered query, row-identical") {
-    // the opt-in planning pass end-to-end: flag + a budget below the
-    // hot user's count → the REGISTERED query runs the finite-bucket
-    // plan, and its rows equal the retired pair join's
-    spark.conf.set("spark.graft.attribution.autoBucket", "true")
-    spark.conf.set("spark.graft.attribution.maxRowsPerTask", "100")
-    try {
-      val got = EventWindows.attribution(spark, hotDir)
-      assert(rows(got) == rows(naiveAttribution(Tables.events(spark, hotDir))))
-      assert(got.count() > 0)
-    } finally {
-      spark.conf.unset("spark.graft.attribution.autoBucket")
-      spark.conf.unset("spark.graft.attribution.maxRowsPerTask")
-    }
-  }
-
   test("the hot corpus genuinely has the skew shape the rewires target") {
     val ev = Tables.events(spark, hotDir)
     val hot = ev.filter(col("user_id") === graft.SkewProbe.HotUser).count()

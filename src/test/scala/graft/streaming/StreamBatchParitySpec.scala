@@ -564,6 +564,34 @@ class StreamBatchParitySpec extends SparkSpec {
     assert(within == 101 * 100 / 2, s"cohort pairs: $within")
   }
 
+  test("near-dup pairs stream at a non-default width: dim = 8 finds the planted pair") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    // 8-dim vectors: the probe expression's width is the `dim`
+    // argument, so at the 64-dim default every probe is null
+    val rnd = new scala.util.Random(11)
+    val vecs = (0L until 40L).map(id => (id, Array.fill(8)(rnd.nextFloat() * 2f - 1f)))
+    val planted = (1000L, vecs(5)._2.clone())
+    val (bands, r, t) = (4, 6, 1)
+    def drain(name: String, dim: Option[Int]): Set[(Long, Long)] = {
+      val input = MemoryStream[(Long, Array[Float])]
+      val embs = input.toDS().toDF("vec_id", "embedding")
+      val pairs = dim match {
+        case Some(d) => graft.streaming.EmbeddingStreams.nearDupPairsStream(embs, bands, r, t, d)
+        case None => graft.streaming.EmbeddingStreams.nearDupPairsStream(embs, bands, r, t)
+      }
+      val q = pairs.writeStream.format("memory").queryName(name)
+        .outputMode("append").start()
+      (vecs :+ planted).grouped(21).foreach { w =>
+        input.addData(w); q.processAllAvailable()
+      }
+      q.stop()
+      spark.table(name).collect().map(x => (x.getLong(0), x.getLong(1))).toSet
+    }
+    assert(drain("neardup_dim8", Some(8)).contains((5L, 1000L)))
+    assert(drain("neardup_dim_default", None).isEmpty)
+  }
+
   test("near-dup slim composition: candidate stream + foreachBatch rescore equals batch") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
