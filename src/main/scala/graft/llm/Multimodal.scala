@@ -16,8 +16,8 @@ import graft.llm.PortableHash._
   * concatenated-JPEG split, frames through imageio) — all pure JVM,
   * no external codec libs; other codecs' video (H.264 etc.) has no
   * JVM decoder in this container and correctly yields zero rows.
-  * Non-media mimes fall back to the deterministic fake on
-  * [[decodeStub]]. Everything Spark-side — schema, batch shape,
+  * Non-media mimes fall back to a deterministic fake
+  * ([[fakeFrames]]). Everything Spark-side — schema, batch shape,
   * partition-parallel decode via `mapPartitions`, feature schema —
   * is real and tested on every path (MultimodalSpec decodes
   * generated PNG/JPEG/WAV/AVI fixtures to known luminance/RMS
@@ -235,10 +235,9 @@ object Multimodal {
     sum / n / 255.0
   }
 
-  /** Deterministic fake frames for mimes with no in-container codec
-    * (video and other non-image/non-audio payloads): `nFrames`
-    * evenly-spaced byte offsets, feature = byte at offset scaled to
-    * [0,1).
+  /** Deterministic fake frames for non-media mimes (the `decode`
+    * fallback): `nFrames` evenly-spaced byte offsets, feature = byte
+    * at offset scaled to [0,1).
     */
   private def fakeFrames(m: Media, nFrames: Int): Iterator[FrameFeature] = {
     val len = m.payload.length
@@ -246,17 +245,6 @@ object Multimodal {
     else (0 until nFrames).iterator.map { f =>
       val off = (len.toLong * f) / nFrames
       FrameFeature(m.doc_id, f, off, (m.payload(off.toInt) & 0xff) / 255.0)
-    }
-  }
-
-  /** STUB DECODER — the non-image fallback as a standalone transform
-    * (kept for the text/audio corpora and the determinism tests).
-    */
-  def decodeStub(media: Dataset[Media], nFrames: Int = 4): Dataset[FrameFeature] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { it =>
-      // real impl: init codec once per partition here
-      it.flatMap(fakeFrames(_, nFrames))
     }
   }
 
@@ -317,14 +305,6 @@ object Multimodal {
     m.copy(payload = out,
       width = math.min(m.width, targetBytes),
       height = math.min(m.height, targetBytes))
-  }
-
-  /** The stride fallback as a standalone transform (determinism tests
-    * and non-media corpora).
-    */
-  def resizeStub(media: Dataset[Media], targetBytes: Int = 64): Dataset[Media] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.map(resizeStride(_, targetBytes)))
   }
 
   /** Oracle-checkable feature extraction over the binary payload —

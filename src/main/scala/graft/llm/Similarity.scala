@@ -1143,8 +1143,9 @@ object Similarity {
     * Scale: pairwise scoring is an equi-join on the cluster id, so
     * candidate cost is Σ cluster² — the published SemDeDup bound
     * (cluster count is chosen ∝ corpus size so clusters stay
-    * bounded; a skewed cluster would get the salting treatment of
-    * [[graft.operators.Skew]]). No all-pairs join exists anywhere.
+    * bounded; because scoring is an equi-join, AQE's skew-join
+    * handling splits a skewed cluster's partition at runtime). No
+    * all-pairs join exists anywhere.
     */
   def semanticDedup(spark: SparkSession, sfDir: String): DataFrame =
     semanticDedupOf(Tables.embeddings(spark, sfDir))

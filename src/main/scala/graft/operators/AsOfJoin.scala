@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 
 /** As-of (point-in-time) joins, composed from built-in operators —
   * preference (a) of the custom-operator ladder: no custom SparkPlan
@@ -97,17 +98,7 @@ object AsOfJoin {
   def asofNearest(left: DataFrame, right: DataFrame, key: String,
       leftTime: String, rightTime: String, prefix: String = "asof_",
       toleranceMicros: Long = Long.MaxValue): DataFrame = {
-    val lCols = left.columns.filter(_ != key).toSeq
-    val rCols = right.columns.filter(_ != key).toSeq
-    val lStruct = struct(lCols.map(col): _*)
-    val rStruct = struct(rCols.map(col): _*)
-    val lType = left.select(lStruct).schema.head.dataType
-    val rType = right.select(rStruct).schema.head.dataType
-
-    val l2 = left.select(col(key).as("_k"), col(leftTime).as("_t"),
-      lit(1).as("_tag"), lStruct.as("_lp"), lit(null).cast(rType).as("_rp"))
-    val r2 = right.select(col(key).as("_k"), col(rightTime).as("_t"),
-      lit(0).as("_tag"), lit(null).cast(lType).as("_lp"), rStruct.as("_rp"))
+    val tu = tagUnion(left, right, key, leftTime, rightTime)
 
     // one exchange, two running frames (the forward one on the
     // reversed ordering — both O(n), see scaladoc). Reversing keeps
@@ -121,7 +112,6 @@ object AsOfJoin {
       .orderBy(col("_t").desc, col("_tag").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
-    val us = (c: Column) => graft.Tables.epochMicros(c)
     val back = last(col("_rp"), ignoreNulls = true).over(wBack)
     val fwd = last(col("_rp"), ignoreNulls = true).over(wFwd)
     val backGap = us(col("_t")) - us(back.getField(rightTime))
@@ -129,7 +119,7 @@ object AsOfJoin {
     val nearer = when(back.isNotNull &&
         (fwd.isNull || backGap <= fwdGap), back)
       .otherwise(fwd)
-    val joined = l2.unionByName(r2)
+    val joined = tu.rows
       .withColumn("_near", nearer)
       .withColumn("_gap",
         abs(us(col("_near").getField(rightTime)) - us(col("_t"))))
@@ -137,13 +127,8 @@ object AsOfJoin {
     val matched =
       if (toleranceMicros == Long.MaxValue) col("_near")
       else when(col("_near").isNotNull && col("_gap") <= toleranceMicros,
-        col("_near")).otherwise(lit(null).cast(rType))
-
-    val outLeft: Seq[Column] =
-      col("_k").as(key) +: lCols.map(c => col("_lp").getField(c).as(c))
-    val outRight: Seq[Column] =
-      rCols.map(c => matched.getField(c).as(prefix + c))
-    joined.select(outLeft ++ outRight: _*)
+        col("_near")).otherwise(lit(null).cast(tu.rType))
+    unpack(joined, tu, key, matched, prefix)
   }
 
   /** Hot-key-safe backward as-of. Row-identical to [[asof]]; the
@@ -183,101 +168,6 @@ object AsOfJoin {
   def saltCol(df: DataFrame, nSalts: Int): Column =
     pmod(xxhash64(df.columns.toSeq.map(col): _*), lit(nSalts.toLong)).cast("int")
 
-  /** Time-bucketed as-of — the escape hatch for the case [[asofSalted]]
-    * can't fix: a hot key that is big on BOTH sides (e.g. attribution,
-    * where one bot user holds half the purchases AND half the touches;
-    * salting fans the left out but replicates the equally-hot right
-    * into every salt). Row-identical to [[asof]] / [[asofForward]]
-    * (planted spec); the physical difference is that the union-window
-    * partitions by (key, time-bucket), so a hot key becomes one task
-    * per ACTIVE BUCKET instead of one task total — per-task work is
-    * bounded by a bucket's traffic regardless of key heat.
-    *
-    * The cross-bucket dependency (a left row early in a bucket may
-    * match a right row from an earlier bucket) is carried the
-    * [[graft.queries.EventWindows.twap]] two-level way: each bucket's
-    * EDGE right instant (latest for backward, earliest for forward)
-    * is computed per (key, bucket) — O(keys × active buckets) rows —
-    * a running `last(ignoreNulls)` over the bucket spine gives every
-    * bucket its carry-in, and the carry is injected as one synthetic
-    * right row per (key, bucket), timestamped with its TRUE instant
-    * (so it sorts before the in-bucket rows and the tolerance math is
-    * unchanged). Cost vs [[asof]]: one extra aggregation of the right
-    * side + the spine window — all skew-spread.
-    *
-    * Same right-side contract as [[asof]]: pre-aggregate to one row
-    * per (key, instant).
-    */
-  def asofBucketed(left: DataFrame, right: DataFrame, key: String,
-      leftTime: String, rightTime: String, prefix: String = "asof_",
-      toleranceMicros: Long = Long.MaxValue,
-      bucketUs: Long = 86400000000L, forward: Boolean = false): DataFrame = {
-    require(bucketUs >= 1, s"bucketUs must be >= 1, got $bucketUs")
-    val lCols = left.columns.filter(_ != key).toSeq
-    val rCols = right.columns.filter(_ != key).toSeq
-    val lStruct = struct(lCols.map(col): _*)
-    val rStruct = struct(rCols.map(col): _*)
-    val lType = left.select(lStruct).schema.head.dataType
-    val rType = right.select(rStruct).schema.head.dataType
-    val us = (c: Column) => graft.Tables.epochMicros(c)
-    def bucketOf(c: Column): Column = c - pmod(c, lit(bucketUs))
-
-    val l2 = left.select(col(key).as("_k"), col(leftTime).as("_t"),
-        lit(1).as("_tag"), lStruct.as("_lp"), lit(null).cast(rType).as("_rp"))
-      .withColumn("_b", bucketOf(us(col("_t"))))
-    val r2 = right.select(col(key).as("_k"), col(rightTime).as("_t"),
-        lit(0).as("_tag"), lit(null).cast(lType).as("_lp"), rStruct.as("_rp"))
-      .withColumn("_b", bucketOf(us(col("_t"))))
-
-    // per-(key, bucket) edge right instant: latest (backward) /
-    // earliest (forward). Struct min/max ranks by _us first; the
-    // one-row-per-instant contract rules out ties.
-    val edgeStruct = struct(us(col("_t")).as("_us"), col("_t").as("_t"),
-      col("_rp").as("_rp"))
-    val edges = r2.groupBy(col("_k"), col("_b"))
-      .agg((if (forward) min(edgeStruct) else max(edgeStruct)).as("_edge"))
-
-    // bucket spine (all active buckets either side) + running carry
-    val spine = l2.select(col("_k"), col("_b"))
-      .union(r2.select(col("_k"), col("_b"))).distinct()
-    val spineOrd = Window.partitionBy(col("_k"))
-      .orderBy(if (forward) col("_b").desc else col("_b").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carries = spine.join(edges, Seq("_k", "_b"), "left")
-      .withColumn("_carry", last(col("_edge"), ignoreNulls = true).over(spineOrd))
-      .filter(col("_carry").isNotNull)
-      .select(col("_k"), col("_b"),
-        col("_carry").getField("_t").as("_t"),
-        lit(0).as("_tag"), lit(null).cast(lType).as("_lp"),
-        col("_carry").getField("_rp").as("_rp"))
-
-    // in-bucket union window; the carry row's out-of-bucket _t sorts
-    // it first in either direction
-    val ordCols = Seq(col("_k"), col("_b"), col("_t"), col("_tag"),
-      col("_lp"), col("_rp"))
-    val all = l2.select(ordCols: _*)
-      .union(r2.select(ordCols: _*))
-      .union(carries.select(ordCols: _*))
-    val w = Window.partitionBy(col("_k"), col("_b"))
-      .orderBy(if (forward) col("_t").desc else col("_t").asc, col("_tag").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val matchedRaw = last(col("_rp"), ignoreNulls = true).over(w)
-    val matched =
-      if (toleranceMicros == Long.MaxValue) matchedRaw
-      else {
-        val mt = us(matchedRaw.getField(rightTime))
-        val gap = if (forward) mt - us(col("_t")) else us(col("_t")) - mt
-        when(matchedRaw.isNotNull && gap <= toleranceMicros,
-          matchedRaw).otherwise(lit(null).cast(rType))
-      }
-    val joined = all.withColumn("_match_r", matched).filter(col("_tag") === 1)
-    val outLeft: Seq[Column] =
-      col("_k").as(key) +: lCols.map(c => col("_lp").getField(c).as(c))
-    val outRight: Seq[Column] =
-      rCols.map(c => col("_match_r").getField(c).as(prefix + c))
-    joined.select(outLeft ++ outRight: _*)
-  }
-
   /** Shared core: tag-union both sides, run the time-ordered window
     * (ascending = backward as-of, descending = forward), keep left
     * rows, unpack. Tag 0 sorts before tag 1 at equal times in either
@@ -288,6 +178,41 @@ object AsOfJoin {
   private def unionWindow(left: DataFrame, right: DataFrame, key: String,
       leftTime: String, rightTime: String, prefix: String,
       descending: Boolean, toleranceMicros: Option[Long]): DataFrame = {
+    val tu = tagUnion(left, right, key, leftTime, rightTime)
+    val w = Window.partitionBy(col("_k"))
+      .orderBy(if (descending) col("_t").desc else col("_t").asc,
+        col("_tag").asc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+    val matchedRaw = last(col("_rp"), ignoreNulls = true).over(w)
+    val matched = toleranceMicros match {
+      case None => matchedRaw
+      case Some(tol) =>
+        // NTZ-safe micros compare; NULL match falls through to null
+        val mt = us(matchedRaw.getField(rightTime))
+        val gap = if (descending) mt - us(col("_t")) else us(col("_t")) - mt
+        when(matchedRaw.isNotNull && gap <= tol,
+          matchedRaw).otherwise(lit(null).cast(tu.rType))
+    }
+    val joined = tu.rows
+      .withColumn("_match_r", matched)
+      .filter(col("_tag") === 1)
+    unpack(joined, tu, key, col("_match_r"), prefix)
+  }
+
+  /** NTZ-safe epoch micros of a time column. */
+  private def us(c: Column): Column = graft.Tables.epochMicros(c)
+
+  /** Both sides in one row shape: `_k` key, `_t` time, `_tag` (1 =
+    * left, 0 = right), `_lp` / `_rp` the side's non-key columns as a
+    * struct (null on the other side). `lCols` / `rCols` name the
+    * struct fields; `rType` types a nulled-out match.
+    */
+  private final case class TagUnion(rows: DataFrame, lCols: Seq[String],
+      rCols: Seq[String], rType: DataType)
+
+  private def tagUnion(left: DataFrame, right: DataFrame, key: String,
+      leftTime: String, rightTime: String): TagUnion = {
     val lCols = left.columns.filter(_ != key).toSeq
     val rCols = right.columns.filter(_ != key).toSeq
     val lStruct = struct(lCols.map(col): _*)
@@ -299,31 +224,18 @@ object AsOfJoin {
       lit(1).as("_tag"), lStruct.as("_lp"), lit(null).cast(rType).as("_rp"))
     val r2 = right.select(col(key).as("_k"), col(rightTime).as("_t"),
       lit(0).as("_tag"), lit(null).cast(lType).as("_lp"), rStruct.as("_rp"))
+    TagUnion(l2.unionByName(r2), lCols, rCols, rType)
+  }
 
-    val w = Window.partitionBy(col("_k"))
-      .orderBy(if (descending) col("_t").desc else col("_t").asc,
-        col("_tag").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    val matchedRaw = last(col("_rp"), ignoreNulls = true).over(w)
-    val us = (c: Column) => graft.Tables.epochMicros(c)
-    val matched = toleranceMicros match {
-      case None => matchedRaw
-      case Some(tol) =>
-        // NTZ-safe micros compare; NULL match falls through to null
-        val mt = us(matchedRaw.getField(rightTime))
-        val gap = if (descending) mt - us(col("_t")) else us(col("_t")) - mt
-        when(matchedRaw.isNotNull && gap <= tol,
-          matchedRaw).otherwise(lit(null).cast(rType))
-    }
-    val joined = l2.unionByName(r2)
-      .withColumn("_match_r", matched)
-      .filter(col("_tag") === 1)
-
+  /** Left rows of a tag-union back to the left's columns (key under
+    * its own name) plus `prefix`-named fields of the `matched` struct.
+    */
+  private def unpack(joined: DataFrame, tu: TagUnion, key: String,
+      matched: Column, prefix: String): DataFrame = {
     val outLeft: Seq[Column] =
-      col("_k").as(key) +: lCols.map(c => col("_lp").getField(c).as(c))
+      col("_k").as(key) +: tu.lCols.map(c => col("_lp").getField(c).as(c))
     val outRight: Seq[Column] =
-      rCols.map(c => col("_match_r").getField(c).as(prefix + c))
+      tu.rCols.map(c => matched.getField(c).as(prefix + c))
     joined.select(outLeft ++ outRight: _*)
   }
 }

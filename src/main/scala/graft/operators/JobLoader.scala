@@ -78,8 +78,13 @@ object JobLoader {
       inputGlob: String): Dataset[(String, String)] = {
     import spark.implicits._
     // make the jar reachable from executor task classloaders on a
-    // real cluster; harmless (and not relied on) in local mode
-    spark.sparkContext.addJar(jarPath)
+    // real cluster; harmless (and not relied on) in local mode. Spark
+    // keys added jars by file name and refuses (with a warning) to add
+    // one twice, so only the first run per name calls addJar
+    val sc = spark.sparkContext
+    val name = new java.io.File(jarPath).getName
+    if (!sc.listJars().exists(u => new java.io.File(new java.net.URI(u).getPath).getName == name))
+      sc.addJar(jarPath)
     job(jarPath, className).run(spark, inputGlob)
   }
 

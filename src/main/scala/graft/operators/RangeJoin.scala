@@ -20,9 +20,8 @@ import org.apache.spark.sql.functions._
   * max interval length so each interval replicates into ≤ 2 bins
   * (replication factor = len/width + 1). Skew concentrates where many
   * intervals overlap one (key, bin) cell — because the join IS an
-  * equi-join the standard salting dial applies, implemented as
-  * [[pointInIntervalSalted]] (planted hot-cell proof in
-  * RangeJoinSpec) alongside [[Skew]]'s generic salted join.
+  * equi-join on (key, bin), AQE's skew-join handling splits a hot
+  * cell's partition at runtime (SkewAqeSpec shows the split).
   */
 object RangeJoin {
 
@@ -48,33 +47,6 @@ object RangeJoin {
       .drop("_bin")
   }
 
-  /** Salted [[pointInInterval]] for the skew case the object scaladoc
-    * names: many points and intervals concentrated on one (key, bin)
-    * cell (one tenant's burst hour) serialize into a single join
-    * task. Points fan out over a deterministic per-row salt
-    * ([[AsOfJoin.saltCol]] — a hash of the whole row, so even a
-    * single hot VALUE spreads); the binned intervals replicate per
-    * salt; the equi-join runs on (key, bin, salt). Per-task work
-    * drops to ~1/nSalts of the hot cell at the cost of nSalts× the
-    * interval side's bin explosion. Row-identical to the unsalted
-    * join (planted hot-cell spec in RangeJoinSpec).
-    */
-  def pointInIntervalSalted(points: DataFrame, intervals: DataFrame,
-      key: String, pointCol: String, loCol: String, hiCol: String,
-      binWidth: Long, nSalts: Int = 16): DataFrame = {
-    require(binWidth > 0, s"binWidth must be positive, got $binWidth")
-    require(nSalts >= 1, s"nSalts must be >= 1, got $nSalts")
-    val binned = intervals
-      .withColumn("_bin",
-        explode(sequence(expr(s"$loCol div $binWidth"), expr(s"$hiCol div $binWidth"))))
-      .withColumn("_salt", explode(sequence(lit(0), lit(nSalts - 1))))
-    points.withColumn("_salt", AsOfJoin.saltCol(points, nSalts))
-      .withColumn("_bin", expr(s"$pointCol div $binWidth"))
-      .join(binned, Seq(key, "_bin", "_salt"))
-      .filter(col(pointCol) >= col(loCol) && col(pointCol) <= col(hiCol))
-      .drop("_bin", "_salt")
-  }
-
   /** Interval-OVERLAP join: every (a, b) pair of the same key whose
     * closed intervals `[aLo, aHi]` and `[bLo, bHi]` intersect
     * (`aLo <= bHi && bLo <= aHi`) — the two-sided generalization of
@@ -88,9 +60,10 @@ object RangeJoin {
     * `greatest(aLo, bLo)`, the overlap's start, which both intervals
     * cover by definition. No `distinct`, so the equi-join + two
     * map-side filters remain the whole cost: one shuffle per side on
-    * (key, bin), SortMergeJoin at scale, [[Skew]]-saltable because it
-    * IS an equi-join. Replication = len/binWidth + 1 per side —
-    * size `binWidth` ≈ the max interval length.
+    * (key, bin), SortMergeJoin at scale, and AQE splits a skewed
+    * (key, bin) partition because it IS an equi-join. Replication =
+    * len/binWidth + 1 per side — size `binWidth` ≈ the max interval
+    * length.
     */
   def intervalOverlap(a: DataFrame, b: DataFrame, key: String,
       aLo: String, aHi: String, bLo: String, bHi: String,

@@ -376,8 +376,7 @@ object EventWindows {
   def attribution(spark: SparkSession, sfDir: String): DataFrame =
     attributionOf(Tables.events(spark, sfDir))
 
-  /** Sizes the [[attributionOf]] / [[graft.operators.AsOfJoin.asofBucketed]]
-    * `bucketUs` dial from the corpus — the operating rule the
+  /** Sizes the [[attributionOf]] `bucketUs` dial from the corpus — the operating rule the
     * factor-50 measurements back, made executable. The as-of union
     * window sorts one (user, bucket) per task, so the dial's job is
     * to bound the HOTTEST user's per-bucket row count by a task
@@ -462,11 +461,11 @@ object EventWindows {
     * The two picks re-pair on ONE hash aggregation by purchase id.
     *
     * The union window partitions by (user, `bucketUs` bucket) with
-    * carry rows stitching bucket boundaries in both directions (the
-    * [[graft.operators.AsOfJoin.asofBucketed]] mechanics inlined for
-    * the two-direction pass), so per-task work is bounded by a
-    * user's bucket at any key heat — pass `Long.MaxValue` to
-    * degenerate to one partition per user.
+    * carry rows stitching bucket boundaries in both directions (a
+    * running window over the (user, bucket) spine hands each bucket
+    * the edge touch of its neighbours, at that touch's true instant),
+    * so per-task work is bounded by a user's bucket at any key heat —
+    * pass `Long.MaxValue` to degenerate to one partition per user.
     */
   def attributionEnrichedOf(ev: DataFrame,
       bucketUs: Long = Long.MaxValue): DataFrame = {

@@ -13,7 +13,7 @@ class MultimodalSpec extends SparkSpec {
 
   test("decode stub: nFrames features per doc, offsets monotone, values in [0,1]") {
     val media = Multimodal.mediaTable(spark, sf001)
-    val frames = Multimodal.decodeStub(media, nFrames = 4).collect()
+    val frames = Multimodal.decode(media, nFrames = 4).collect()
     assert(frames.length == media.count() * 4)
     frames.groupBy(_.doc_id).foreach { case (_, fs) =>
       val sorted = fs.sortBy(_.frame)
@@ -25,13 +25,13 @@ class MultimodalSpec extends SparkSpec {
 
   test("resize stub: constant output size, deterministic, dims clamped") {
     val media = Multimodal.mediaTable(spark, sf001)
-    val resized = Multimodal.resizeStub(media, targetBytes = 32).collect()
+    val resized = Multimodal.resize(media, maxDim = 32).collect()
     assert(resized.nonEmpty)
     resized.foreach { m =>
       assert(m.payload.length <= 32)
       assert(m.width <= 32 && m.height <= 32)
     }
-    val again = Multimodal.resizeStub(media, targetBytes = 32).collect()
+    val again = Multimodal.resize(media, maxDim = 32).collect()
       .map(m => (m.doc_id, m.payload.toSeq)).sortBy(_._1).toSeq
     assert(again == resized.map(m => (m.doc_id, m.payload.toSeq)).sortBy(_._1).toSeq)
   }
@@ -205,8 +205,8 @@ class MultimodalSpec extends SparkSpec {
 
   test("decode stub is deterministic") {
     val media = Multimodal.mediaTable(spark, sf001)
-    val a = Multimodal.decodeStub(media).collect().sortBy(f => (f.doc_id, f.frame)).toSeq
-    val b = Multimodal.decodeStub(media).collect().sortBy(f => (f.doc_id, f.frame)).toSeq
+    val a = Multimodal.decode(media).collect().sortBy(f => (f.doc_id, f.frame)).toSeq
+    val b = Multimodal.decode(media).collect().sortBy(f => (f.doc_id, f.frame)).toSeq
     assert(a == b)
   }
 }

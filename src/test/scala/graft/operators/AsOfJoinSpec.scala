@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions.{col, lit, pmod}
+import org.apache.spark.sql.functions.col
 
 class AsOfJoinSpec extends SparkSpec {
 
@@ -141,64 +141,6 @@ class AsOfJoinSpec extends SparkSpec {
     // t=10: nearest is R14 (gap 4s, inside); t=60: nearest is R14
     // (gap 46s) — beyond 5s, so NULL, never replaced by R200
     assert(got == Set((10, "R14"), (60, null)))
-  }
-
-  test("asofBucketed: row-identical to asof/asofForward under a planted both-sides-hot key") {
-    import spark.implicits._
-    val hotN = 2000
-    // the case salting can't fix: key 7 holds ~50% of BOTH sides
-    val left = ((1 to hotN).map(i => (7L, i * 10, s"hot$i")) ++
-      (1 to hotN).map(i => ((100 + i % 50).toLong, i * 10, s"cold$i")))
-      .toDF("k", "t", "lv")
-    val right = ((0 to 2000).map(b => (7L, b * 11, s"r7-$b")) ++
-      (100 to 149).map(k => (k.toLong, 5000, s"r$k")))
-      .toDF("k", "rt", "rv")
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getInt(1), r.getString(2),
-        if (r.isNullAt(3)) -1 else r.getInt(3),
-        if (r.isNullAt(4)) null else r.getString(4))
-    val plainB = AsOfJoin.asof(left, right, "k", "t", "rt")
-      .collect().map(key).toSet
-    val plainF = AsOfJoin.asofForward(left, right, "k", "t", "rt")
-      .collect().map(key).toSet
-    // int times cast to timestamps as SECONDS -> micros = t * 1e6;
-    // 1000-second buckets split the 20000-second span into ~20 tasks
-    for (bucketUs <- Seq(1000L * 1000000, 50L * 1000000, 1L)) {
-      val b = AsOfJoin.asofBucketed(left, right, "k", "t", "rt",
-        bucketUs = bucketUs).collect().map(key).toSet
-      assert(b == plainB, s"backward bucketUs=$bucketUs: " +
-        s"bucketed-only: ${(b -- plainB).take(3)}; plain-only: ${(plainB -- b).take(3)}")
-      val f = AsOfJoin.asofBucketed(left, right, "k", "t", "rt",
-        bucketUs = bucketUs, forward = true).collect().map(key).toSet
-      assert(f == plainF, s"forward bucketUs=$bucketUs: " +
-        s"bucketed-only: ${(f -- plainF).take(3)}; plain-only: ${(plainF -- f).take(3)}")
-    }
-    // degenerate huge bucket = exactly one partition per key = asof
-    val one = AsOfJoin.asofBucketed(left, right, "k", "t", "rt",
-      bucketUs = Long.MaxValue / 4).collect().map(key).toSet
-    assert(one == plainB)
-    // the physical claim: the hot key's rows genuinely spread across
-    // many (key, bucket) window partitions
-    val hotBuckets = left.filter(col("k") === 7L)
-      .select(((col("t").cast("long") * 1000000L) -
-        pmod(col("t").cast("long") * 1000000L, lit(1000L * 1000000)))
-        .as("b")).distinct().count()
-    assert(hotBuckets >= 10, s"hot key spans only $hotBuckets buckets")
-  }
-
-  test("asofBucketed tolerance: carried matches beyond the horizon are nulled") {
-    import spark.implicits._
-    // the carry row keeps its TRUE instant, so a match carried from a
-    // far-earlier bucket must still fail the tolerance gate
-    val left = Seq((1, 20, "a"), (1, 100, "b")).toDF("k", "t", "lv")
-    val right = Seq((1, 14, "old")).toDF("k", "rt", "rv")
-    val got = AsOfJoin.asofBucketed(left, right, "k", "t", "rt",
-        toleranceMicros = 10L * 1000000, bucketUs = 30L * 1000000)
-      .collect()
-      .map(r => (r.getInt(1), if (r.isNullAt(4)) null else r.getString(4))).toSet
-    // t=20 (bucket 0) -> rt=14 in-bucket, 6s stale: match;
-    // t=100 (bucket 3) -> rt=14 carried across 3 buckets, 86s: NULL
-    assert(got == Set((20, "old"), (100, null)))
   }
 
   test("asofForward tolerance: matches beyond the horizon are nulled, not shifted") {

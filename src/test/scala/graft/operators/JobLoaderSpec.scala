@@ -134,6 +134,50 @@ class JobLoaderSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.plugin.corpusDir")
   }
 
+  test("a jar rebuilt at the same path gets a fresh loader: the second run sees v2") {
+    // iterative plugin development in one session: the user rebuilds
+    // the jar in place and reruns. JarId (path, size, mtime) must key
+    // a NEW loader, so v2's reducef runs, not v1's cached classes
+    def versioned(tag: String) =
+      s"""package graftdemo;
+         |import graft.operators.KeyValue;
+         |import graft.operators.UserJob;
+         |import java.util.ArrayList;
+         |import java.util.List;
+         |public class Rebuilt implements UserJob {
+         |  public List<KeyValue> mapf(String filename, String contents) {
+         |    List<KeyValue> out = new ArrayList<>();
+         |    for (String w : contents.split("\\\\s+"))
+         |      if (!w.isEmpty()) out.add(new KeyValue(w, "1"));
+         |    return out;
+         |  }
+         |  public String reducef(String key, List<String> values) {
+         |    return "$tag:" + values.size();
+         |  }
+         |}
+         |""".stripMargin
+    val fixed = Files.createTempDirectory("plugin-rebuild").resolve("rebuilt-job.jar")
+    val glob = PluginDemo.corpusGlob(spark, sf001)
+    def install(tag: String): Unit = Files.copy(
+      java.nio.file.Paths.get(PluginDemo.buildJar(versioned(tag), "graftdemo.Rebuilt")),
+      fixed, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    def runFixed(): Map[String, String] =
+      JobLoader.run(spark, fixed.toString, "graftdemo.Rebuilt", glob).collect().toMap
+    install("v1")
+    val t1 = Files.getLastModifiedTime(fixed).toMillis
+    val v1 = runFixed()
+    assert(v1.nonEmpty && v1.values.forall(_.startsWith("v1:")))
+    install("version2")
+    // a real rebuild lands at a later mtime; pin that here so the
+    // test does not hinge on the filesystem's timestamp resolution
+    Files.setLastModifiedTime(fixed,
+      java.nio.file.attribute.FileTime.fromMillis(t1 + 2000))
+    val v2 = runFixed()
+    val expected = graft.jobs.CanonicalJobs.wordcount(spark, sf001)
+      .collect().map(r => r.getString(0) -> s"version2:${r.getLong(1)}").toMap
+    assert(v2 == expected, "the rebuilt jar's reducef must serve the second run")
+  }
+
   test("explicit class name works without discovery and across repeated runs") {
     val jar = PluginDemo.jarPath
     val glob = PluginDemo.corpusGlob(spark, sf001)

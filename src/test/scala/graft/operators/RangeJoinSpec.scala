@@ -77,37 +77,4 @@ class RangeJoinSpec extends SparkSpec {
     assert(!phys.contains("BroadcastNestedLoopJoin") &&
       !phys.contains("CartesianProduct"))
   }
-
-  test("salted join is row-identical to plain under a planted hot cell; salts spread") {
-    // hot cell: one tenant with 10k points in ONE bin (>90% of all
-    // points), plus the cold fixture rows — the case where the plain
-    // (key, bin) join serializes into a single task
-    val hotPoints = (0 until 10000).map(i => ("hot", (i % 10).toLong))
-    val allPoints = (hotPoints ++ Seq(
-      ("a", 5L), ("a", 10L), ("a", 19L), ("b", 5L))).toDF("k", "p")
-    val allIntervals = Seq(
-      ("hot", 0L, 9L), ("hot", 3L, 5L), ("hot", 200L, 300L),
-      ("a", 0L, 9L), ("a", 8L, 22L), ("b", 6L, 7L))
-      .toDF("k", "lo", "hi")
-    val plain = RangeJoin.pointInInterval(
-        allPoints, allIntervals, "k", "p", "lo", "hi", 10L)
-      .groupBy("k", "p", "lo", "hi").count()
-      .as[(String, Long, Long, Long, Long)].collect().toSet
-    val salted = RangeJoin.pointInIntervalSalted(
-        allPoints, allIntervals, "k", "p", "lo", "hi", 10L, nSalts = 8)
-      .groupBy("k", "p", "lo", "hi").count()
-      .as[(String, Long, Long, Long, Long)].collect().toSet
-    assert(plain == salted, "salting must not change the multiset of pairs")
-    assert(plain.exists(_._1 == "hot"))
-
-    // the hot cell must genuinely spread: no salt partition holds
-    // more than half of the hot rows (8 salts; a no-op salt would
-    // put 100% in one)
-    val spread = allPoints.filter($"k" === "hot")
-      .withColumn("s", AsOfJoin.saltCol(allPoints, 8))
-      .groupBy("s").count().as[(Int, Long)].collect()
-    assert(spread.length > 1, "hot rows all landed on one salt")
-    assert(spread.map(_._2).max < 5000,
-      s"hot-cell spread too skewed: ${spread.toList}")
-  }
 }

@@ -197,8 +197,8 @@ class HotUserSkewSpec extends SparkSpec {
 
   test("attribution: the bucketed dial (1-day buckets) is row-identical to the pair join") {
     // exercises the finite-bucketUs branch of attributionEnrichedOf —
-    // the prevLast/nextFirst carry spine — under planted heat, the
-    // same identity discipline as AsOfJoinSpec's asofBucketed test
+    // the prevLast/nextFirst carry spine — under planted heat: the
+    // bucketed plan must equal the unbucketed pair-join oracle
     val ev = Tables.events(spark, hotDir)
     val got = EventWindows.attributionOf(ev, bucketUs = 24L * 3600000000L)
     assert(rows(got) == rows(naiveAttribution(ev)))
