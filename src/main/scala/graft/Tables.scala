@@ -1,18 +1,49 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+
+import graft.operators.Bucketed
 
 /** Loaders for the driver-generated Parquet star schema (TESTDATA.md).
   *
   * One function per table; every query module takes `sfDir` (e.g.
   * `/root/testdata/sf0.01`) so the same code runs at any scale factor.
-  * Reads are plain `spark.read.parquet` — Catalyst pushes filters and
-  * prunes columns into the scan, which is what makes the plans hold at
-  * 100 TB (partitioned parquet + pushdown, no driver-side work).
+  * Every load is `spark.read.schema(s).parquet(path)`: Catalyst pushes
+  * filters and prunes columns into the scan, which is what makes the
+  * plans hold at 100 TB (partitioned parquet + pushdown).
+  *
+  * The schema `s` comes from a process-wide memo. Parquet schema
+  * inference is a driver-launched one-task Spark job plus a file
+  * listing, and it returns the same answer on every load of an
+  * unchanged source, so only the first load of a source runs it. The
+  * memo key is the source's [[Bucketed.srcFingerprint]] (path, data
+  * file count, total bytes, latest mtime: one listing, no scan) plus
+  * every explicitly set `spark.sql.parquet.*` and
+  * `spark.sql.legacy.parquet.*` session conf, since those change what
+  * inference returns (`nanosAsLong`, `binaryAsString`, `mergeSchema`,
+  * ...). A source rewritten at the same path, or read under a changed
+  * conf, therefore infers again. The memo holds only `StructType`s,
+  * never a DataFrame: each load builds a fresh relation with fresh
+  * expression ids, so two loads of one table still self-join.
   */
 object Tables {
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  private val schemas = new ConcurrentHashMap[(String, Map[String, String]), StructType]()
+
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val key = (Bucketed.srcFingerprint(spark, path), spark.conf.getAll.filter {
+      case (k, _) => k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    })
+    // infer outside any map lock: concurrent loads may both infer once,
+    // and the first stored schema wins
+    val schema = Option(schemas.get(key)).getOrElse {
+      val inferred = spark.read.parquet(path).schema
+      Option(schemas.putIfAbsent(key, inferred)).getOrElse(inferred)
+    }
+    spark.read.schema(schema).parquet(path)
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

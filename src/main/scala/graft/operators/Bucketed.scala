@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Storage-bucketed tables for Exchange-free co-located joins.
@@ -114,20 +114,31 @@ object Bucketed {
     fresh
   }
 
-  /** Content fingerprint of a source parquet dir from FILE metadata
-    * only (path + file count + total bytes + max modification time —
-    * one filesystem listing, no data scan): what [[write]]'s callers
-    * should pass as `fingerprint` so a changed source under the same
-    * path re-renders while an unchanged one reuses the on-disk buckets
-    * across JVMs. The mtime term comes free from the same listStatus
-    * call and catches the case size alone misses: a source regenerated
-    * with identical total bytes (same generator, new seed) would
-    * otherwise silently reuse the stale render.
+  /** Content fingerprint of a source parquet file or dir from FILE
+    * metadata only (path + file count + total bytes + max modification
+    * time — one recursive filesystem listing, no data scan). Three
+    * callers: [[write]]'s callers pass it as `fingerprint`, so a
+    * changed source under the same path re-renders while an unchanged
+    * one reuses the on-disk buckets across JVMs; `PluginDemo.corpusGlob`
+    * keys its `_GRAFT_FINGERPRINT` corpus render on it; and
+    * `graft.Tables.table` keys its inferred-schema memo on it. The
+    * mtime term comes free from the same listing and catches the case
+    * size alone misses: a source regenerated with identical total
+    * bytes (same generator, new seed) would otherwise silently reuse
+    * the stale render or schema. The listing recurses, so a data file
+    * replaced under a partition subdirectory (`k=v/`) changes the
+    * fingerprint; for a single file or a flat dir it lists exactly the
+    * files a top-level listing would.
     */
   def srcFingerprint(spark: SparkSession, dir: String): String = {
-    val p = new Path(dir)
-    val files = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(p).filter(_.isFile)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // listStatus, not listFiles: a LocatedFileStatus copies each file's
+    // permissions, which the local filesystem reads by forking a shell
+    // per file (46 ms instead of 0.5 ms for a 16-file local dir on a
+    // 4-core host)
+    def under(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq
+      .flatMap(st => if (st.isDirectory) under(st.getPath) else Seq(st))
+    val files = under(new Path(dir))
     val maxMtime =
       if (files.isEmpty) 0L else files.map(_.getModificationTime).max
     s"$dir|${files.length}|${files.map(_.getLen).sum}|$maxMtime"

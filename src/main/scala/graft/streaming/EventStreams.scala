@@ -533,11 +533,13 @@ object EventStreams extends Serializable {
     * time (withWatermark) requires TIMESTAMP, not TIMESTAMP_NTZ, so
     * the normalized column is cast to LTZ — exact under the pinned
     * UTC session. The file source needs a directory; glob-filter
-    * isolates the events file.
+    * isolates the events file. The raw schema is the batch loader's
+    * ([[graft.Tables.table]], read after the same `nanosAsLong` set),
+    * so both twins share one memoized inference.
     */
   def eventsFileStream(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val rawSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
+    val rawSchema = graft.Tables.table(spark, sfDir, "events").schema
     graft.Tables.normalizeTs(
       spark.readStream.schema(rawSchema)
         .option("pathGlobFilter", "events.parquet")
