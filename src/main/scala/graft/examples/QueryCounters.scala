@@ -1,13 +1,15 @@
 package graft.examples
 
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Per-query driver and task counters: for each registered query and
   * each rep, the Spark JOBS it submits end to end (construction
   * actions such as planning counts and eager stagings, plus the
-  * noop-sink output action), its shuffle-write bytes, disk and memory
+  * noop-sink output action), the stages they run (skipped stages not
+  * counted), its shuffle-write bytes, disk and memory
   * spill, and wall seconds. `explain` shows none of these (an eager
   * and a lazy localCheckpoint print the same plan); jobs and bytes
   * are exact and repeat across reps and JVMs, so they gate
@@ -18,15 +20,19 @@ import org.apache.spark.sql.SparkSession
   */
 object QueryCounters {
 
-  /** Jobs and task metrics summed since the last [[reset]] — the one
-    * task-metric listener the instruments share. */
+  /** Jobs, completed stages and task metrics summed since the last
+    * [[reset]] — the one task-metric listener the instruments share. */
   final class Counters extends SparkListener {
-    val jobs, shuffleWrite, diskSpill, memSpill = new AtomicLong()
+    val jobs, stages, shuffleWrite, diskSpill, memSpill = new AtomicLong()
 
-    def reset(): Unit = Seq(jobs, shuffleWrite, diskSpill, memSpill).foreach(_.set(0L))
+    def reset(): Unit = Seq(jobs, stages, shuffleWrite, diskSpill, memSpill).foreach(_.set(0L))
 
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       val _ = jobs.incrementAndGet()
+    }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val _ = stages.incrementAndGet()
     }
 
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
@@ -65,7 +71,7 @@ object QueryCounters {
       force(name)
       val sec = (System.nanoTime() - t0) / 1e9
       settle()
-      println(f"QUERYCOUNTERS $name rep=$rep jobs=${counters.jobs.get} " +
+      println(f"QUERYCOUNTERS $name rep=$rep jobs=${counters.jobs.get} stages=${counters.stages.get} " +
         f"shuffle_write_bytes=${counters.shuffleWrite.get} " +
         f"disk_spill_bytes=${counters.diskSpill.get} " +
         f"mem_spill_bytes=${counters.memSpill.get} sec=$sec%.3f")

@@ -53,8 +53,11 @@ trait UserJob extends Serializable {
   * `MRJob[String, String, String]` whose `mapf` and `reducef` call the
   * per-thread instance, so it gets the same full-width map side and
   * key-column holistic reduce (the reference's sort-gather semantics,
-  * worker.go:153-169). For the reference's text-file output format,
-  * feed the returned Dataset to an `MRJob(...).writeTextOutput`.
+  * worker.go:153-169), in `nReduce = 8` reduce tasks. For the
+  * reference's text-file output format, feed the returned Dataset to
+  * an `MRJob(...).writeTextOutput`: a sink with `nReduce = 8` writes
+  * the reduce partitions in place, one file per reduce task; a sink
+  * with any other count re-places the rows by one more shuffle.
   */
 object JobLoader {
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.encoderFor
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.functions._
 
 /** The reference's programmable surface, typed and Spark-compiled.
@@ -23,6 +24,13 @@ import org.apache.spark.sql.functions._
   *     `reduceByKey`, in the general path;
   *   - grouping is exact binary string/key equality (worker.go:21) —
   *     default binary collation, no locale;
+  *   - `nReduce` is the reduce-task count (coordinator.go:126-141):
+  *     the holistic reduce shuffles once, into `nReduce` partitions,
+  *     and each reduce task sorts, groups and reduces its partition
+  *     and, through `writeTextOutput`, writes its own file in that same
+  *     task (worker.go:153-170, coordinator.go:118-124). The session's
+  *     `spark.sql.shuffle.partitions` does not set that width: a caller
+  *     who wants a wider reduce raises `nReduce`;
   *   - output is `nReduce` files, keys sorted within each file, NOT
   *     globally (README.MD:43-53, worker.go:153).
   *
@@ -63,35 +71,67 @@ final case class MRJob[K, V, OUT](
 
   /** Shuffle + group + holistic reduce over an already-mapped KV set.
     *
+    * One exchange into `nReduce` hash partitions of the key, which the
+    * grouping then uses as is: `nReduce` reduce tasks, each emitting
+    * its groups in key order (the grouping sorts by key), as the
+    * reference's reduce tasks do (coordinator.go:126-141,
+    * worker.go:153-165). `repartition` by a number is never coalesced
+    * by AQE, so the width holds whatever the session's shuffle
+    * partitions say. The result is marked as placed at `nReduce`, so
+    * `writeTextOutput` of this job writes it without a second shuffle.
+    *
     * Groups on the key column itself (see `MRJob.keyColumns`), so a
     * flat key crosses the exchange once per row; `groupByKey(_._1)`
     * would append a second, re-serialized copy of it to every row. A
-    * struct-shaped key is grouped on its fields, projected next to the
-    * struct. Keys compare by their binary encoding, as with
-    * `groupByKey`.
+    * struct-shaped key is hashed and grouped on its fields, projected
+    * next to the struct. Keys compare by their binary encoding, as
+    * with `groupByKey`.
     */
   def runOnPairs(kvs: Dataset[(K, V)])(implicit
       kEnc: Encoder[K],
-      outEnc: Encoder[(K, OUT)]): Dataset[(K, OUT)] =
-    kvs.groupBy(MRJob.keyColumns(kvs, kEnc): _*).as[K, (K, V)](kEnc, kvs.encoder)
+      outEnc: Encoder[(K, OUT)]): Dataset[(K, OUT)] = {
+    val keys = MRJob.keyColumns(kvs, kEnc)
+    val out = kvs.repartition(nReduce, keys: _*)
+      .groupBy(keys: _*).as[K, (K, V)](kEnc, kvs.encoder)
       .mapGroups((k, it) => (k, reducef(k, it.map(_._2))))
+    out.queryExecution.analyzed.setTagValue(MRJob.ReduceTasks, nReduce)
+    out
+  }
 
   /** Output fidelity sink: `nReduce` text files, `"key value"` lines,
     * sorted by key within each file (README.MD:43-53; format
-    * worker.go:167). Placement uses Spark's Murmur3 hash, not the
+    * worker.go:167).
+    *
+    * Writes in place when `out` is a `runOnPairs`/`run` result of a
+    * job with this `nReduce`, unchanged since (its analyzed plan root
+    * still carries the mark): each reduce task writes its own
+    * key-sorted file, with no further shuffle. Any other input — a
+    * result transformed in any way (a new plan root carries no mark),
+    * one reduced at another `nReduce`, or a Dataset from elsewhere —
+    * is re-placed by a shuffle into `nReduce` partitions of the key and
+    * sorted within each. Placement uses Spark's Murmur3 hash, not the
     * reference's FNV-1a — compare outputs as multisets, not
     * file-by-file (use `graft.functions.Fnv1a` when placement
     * fidelity itself is under test).
     */
-  def writeTextOutput(out: Dataset[(K, OUT)], dir: String): Unit =
-    out.toDF("key", "value")
-      .repartition(nReduce, col("key"))
-      .sortWithinPartitions("key")
-      .select(concat_ws(" ", col("key").cast("string"), col("value").cast("string")))
+  def writeTextOutput(out: Dataset[(K, OUT)], dir: String): Unit = {
+    val kv = out.toDF("key", "value")
+    val placed =
+      if (out.queryExecution.analyzed.getTagValue(MRJob.ReduceTasks).contains(nReduce)) kv
+      else kv.repartition(nReduce, col("key")).sortWithinPartitions("key")
+    placed.select(concat_ws(" ", col("key").cast("string"), col("value").cast("string")))
       .write.mode("overwrite").text(dir)
+  }
 }
 
 object MRJob {
+
+  /** Marks the analyzed plan root of a `runOnPairs` result with the
+    * `nReduce` it is placed at: hash-partitioned on the key into that
+    * many partitions, each sorted by key. A transformation builds a new
+    * root, which carries no mark.
+    */
+  private val ReduceTasks = TreeNodeTag[Int]("graft.mrjob.reduceTasks")
 
   /** The grouping columns for the key, the first column of `kvs`.
     *

@@ -1,10 +1,14 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.examples.QueryCounters
 import graft.sources.KVText
 import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.catalyst.plans.logical.{AppendColumns, AppendColumnsWithObject}
 import org.apache.spark.sql.execution.ExternalRDD
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions.{col, hash, lit, pmod}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -25,6 +29,14 @@ class MRJobSpec extends SparkSpec {
   private def fixtureGlob =
     getClass.getResource("/mr/split-1.txt").getPath.stripSuffix("split-1.txt") + "*.txt"
 
+  /** The part files of a `writeTextOutput` dir, each as its key column. */
+  private def keysPerFile(dir: String): Seq[Seq[String]] =
+    new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
+      .sortBy(_.getName).toSeq.map { f =>
+        val src = scala.io.Source.fromFile(f)
+        try src.getLines().map(_.split(" ")(0)).toList finally src.close()
+      }
+
   test("wordcount golden output (holistic reduce path)") {
     import spark.implicits._
     val job = MRJob(wcMap, wcReduce, nReduce = 2)
@@ -41,14 +53,10 @@ class MRJobSpec extends SparkSpec {
     val out = job.run(spark, fixtureGlob)
     val dir = java.nio.file.Files.createTempDirectory("mrout").toString
     job.writeTextOutput(out, dir)
-    val parts = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    assert(parts.length == 3)
-    val perFile = parts.map { f =>
-      scala.io.Source.fromFile(f).getLines().map(_.split(" ")(0)).toSeq
-    }
+    val perFile = keysPerFile(dir)
+    assert(perFile.length == 3)
     perFile.foreach(keys => assert(keys == keys.sorted))  // sorted within file
-    val all = perFile.flatten.sorted.toSeq
+    val all = perFile.flatten.sorted
     assert(all == Seq("Hello", "Sue", "Tom", "is", "my", "name", "your"))
   }
 
@@ -59,7 +67,9 @@ class MRJobSpec extends SparkSpec {
       val ts = tokens.apply(Gen.Parameters.default, Seed(42L + i)).get
       val kvs = spark.createDataset(ts.map(t => (t, 1)))
       val results = Seq(1, 2, 5, 13).map { n =>
-        MRJob(wcMap, wcReduce, n).runOnPairs(kvs).collect().toMap
+        val out = MRJob(wcMap, wcReduce, n).runOnPairs(kvs)
+        assert(out.rdd.getNumPartitions == n, s"reduce tasks at nReduce = $n")
+        out.collect().toMap
       }
       assert(results.forall(_ == results.head))
       assert(results.head.values.sum == ts.size)
@@ -148,6 +158,68 @@ class MRJobSpec extends SparkSpec {
     assert(mapTasks.exists(_ >= math.min(nFiles, cores)), s"map tasks $mapTasks for $cores cores")
     val got = out.collect().toMap
     assert(got.size == 13 && got.values.sum == 50 * nFiles)
+  }
+
+  private object plans extends AdaptiveSparkPlanHelper
+
+  private lazy val counters = QueryCounters.attach(spark)
+
+  /** Stages `body` runs. The listener bus is asynchronous, so settle
+    * before the reset and after the body (QueryCounters' own rule). */
+  private def stagesOf(body: => Unit): Long = {
+    counters
+    Thread.sleep(2000)
+    counters.reset()
+    body
+    Thread.sleep(2000)
+    counters.stages.get
+  }
+
+  test("one exchange at nReduce: each reduce task writes its own file") {
+    import spark.implicits._
+    val exchanges = (ds: Dataset[_]) => {
+      ds.collect()
+      plans.collect(ds.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+    }
+    val job = MRJob(wcMap, wcReduce, nReduce = 3)
+    val flat = exchanges(job.run(spark, fixtureGlob))
+    assert(flat.map(_.numPartitions) == Seq(3), "String key")
+    val pairs = Seq(WordAt("x", 1) -> 1, WordAt("y", 2) -> 1, WordAt("x", 1) -> 1).toDS()
+    val struct = exchanges(MRJob[WordAt, Int, Int]((_, _) => Nil, (_, vs) => vs.sum,
+      nReduce = 3).runOnPairs(pairs))
+    assert(struct.map(_.numPartitions) == Seq(3), "WordAt key")
+
+    val dir = java.nio.file.Files.createTempDirectory("mrinplace").toString
+    // map stage, then the reduce tasks write: no stage re-places them
+    assert(stagesOf(job.writeTextOutput(job.run(spark, fixtureGlob), dir)) == 2)
+    // reduced at 2, written at 3: one more exchange re-places the rows
+    val other = MRJob(wcMap, wcReduce, nReduce = 2).run(spark, fixtureGlob)
+    assert(stagesOf(job.writeTextOutput(other, dir)) == 3)
+  }
+
+  test("a transformed run output is re-placed: nReduce files, key-sorted, no key in two") {
+    import spark.implicits._
+    val n = 3
+    val job = MRJob(wcMap, wcReduce, nReduce = n)
+    val out = job.run(spark, fixtureGlob)
+    // merge a key into one placed in another reduce partition, taking
+    // it from a partition that keeps another key, so no file empties
+    val byPart = out.select(col("_1"), pmod(hash(col("_1")), lit(n))).as[(String, Int)]
+      .collect().groupBy(_._2).map { case (p, ks) => p -> ks.map(_._1).sorted.toSeq }
+    assert(byPart.size == n, s"every partition holds a key: $byPart")
+    val (from, fromPart) = byPart.collectFirst { case (p, ks) if ks.size > 1 => (ks.head, p) }.get
+    val into = byPart.collectFirst { case (p, ks) if p != fromPart => ks.head }.get
+    val merged = out.map { case (k, v) => (if (k == from) into else k, v) }
+    val dir = java.nio.file.Files.createTempDirectory("mrreplaced").toString
+    job.writeTextOutput(merged, dir)
+    val perFile = keysPerFile(dir)
+    assert(perFile.size == n)
+    perFile.foreach(keys => assert(keys == keys.sorted, s"unsorted file: $keys"))
+    val owners = perFile.zipWithIndex.flatMap { case (ks, i) => ks.distinct.map(_ -> i) }
+      .groupBy(_._1)
+    assert(owners.forall(_._2.size == 1), s"$into written by two reduce tasks: $perFile")
+    assert(perFile.flatten.sorted == out.collect().map(_._1).map(k =>
+      if (k == from) into else k).sorted.toSeq)
   }
 
   test("KVText.readKV: line without a tab yields empty value") {
