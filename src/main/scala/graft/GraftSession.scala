@@ -17,8 +17,8 @@ import org.apache.spark.sql.SparkSession
   * - graft SQL functions (fnv1a, cosine_sim, tokens, ...) registered.
   *
   * `confs` are applied last, so a caller that needs a different value
-  * (Bench's warehouse and liveness settings, StreamStateProbe's state
-  * store) overrides the defaults above.
+  * (Bench's warehouse and liveness settings) overrides the defaults
+  * above.
   */
 object GraftSession {
   def local(

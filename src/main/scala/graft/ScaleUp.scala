@@ -32,9 +32,7 @@ object ScaleUp {
   /** Copy k of the events frame for every k in `ks`, with user_id and
     * event_id shifted by k·shift so keys stay globally unique and the
     * time range is preserved — the one id-shift scale-up block shared
-    * by this corpus builder and both skew probes ([[SkewProbe]],
-    * [[GraphSkewProbe]]); pass `uShift = 0` to hold user_id fixed
-    * (the planted-hot-user shape).
+    * by this corpus builder and HotHubGraphSpec's planted hub corpus.
     */
   def shiftedCopies(ev: DataFrame, uShift: Long, eShift: Long,
       ks: Range): DataFrame =

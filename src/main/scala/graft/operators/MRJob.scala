@@ -1,5 +1,7 @@
 package graft.operators
 
+import java.io.FileNotFoundException
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.encoderFor
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
@@ -113,8 +115,17 @@ final case class MRJob[K, V, OUT](
     * reference's FNV-1a — compare outputs as multisets, not
     * file-by-file (use `graft.functions.Fnv1a` when placement
     * fidelity itself is under test).
+    *
+    * `dir` must be a directory or absent. An existing regular file is
+    * refused before any job runs, where the overwrite would silently
+    * replace it with a directory of part files.
     */
   def writeTextOutput(out: Dataset[(K, OUT)], dir: String): Unit = {
+    val path = new Path(dir)
+    val fs = path.getFileSystem(out.sparkSession.sparkContext.hadoopConfiguration)
+    val isFile = try !fs.getFileStatus(path).isDirectory
+      catch { case _: FileNotFoundException => false }
+    require(!isFile, s"writeTextOutput: $dir exists and is not a directory")
     val kv = out.toDF("key", "value")
     val placed =
       if (out.queryExecution.analyzed.getTagValue(MRJob.ReduceTasks).contains(nReduce)) kv

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import graft.llm.Similarity
@@ -62,9 +62,10 @@ object EmbeddingStreams {
     * vector ONCE, plus every copy's (vec_id, micros) as PARALLEL
     * PRIMITIVE ARRAYS — the [[Similarity.nearDupWithDupCollapse]] rep
     * discipline carried into streaming state. The collapse is what
-    * bounds the BYTES: StreamStateProbe (RocksDB provider, real
-    * serialized sizes) measures ~1.6 KB marginal state per duplicate
-    * copy vs the 49 KB a distinct vector's probe-bucket arrays cost.
+    * bounds the BYTES: with the RocksDB provider (real serialized
+    * sizes) a duplicate copy measured ~1.6 KB marginal state vs the
+    * 49 KB a distinct vector's probe-bucket arrays cost (BASELINE.md
+    * round 11).
     * Arrays rather than `List[(Long, Long)]` bound the PER-BATCH CPU:
     * every micro-batch decode/encode of a hot bucket walks its
     * entries, and the primitive-array codec does that without
@@ -216,13 +217,12 @@ object EmbeddingStreams {
     * killed the uncollapsed BATCH run at ×1000 — holds
     * bands·(t+1)·dim·4 bytes per DISTINCT vector (≈ 49 KB at the
     * defaults) plus ~1.6 KB measured marginal per copy (16 B of
-    * (id, µs) × bands·(t+1) registrations; StreamStateProbe), and
+    * (id, µs) × bands·(t+1) registrations; BASELINE.md round 11), and
     * scores once per distinct group, not m² per duplicate cohort.
-    * For stream rates where even
-    * per-distinct arrays are too much state, use the slim composed
-    * path: [[nearDupCandidatesStreamTtl]] (ids-only state) +
-    * [[rescoreCandidates]] in foreachBatch against the accumulating
-    * [[ivfIndexStream]] layout.
+    * Holding the float reps is what lets the stream emit the scored
+    * answer itself: an ids-only or int8 state is smaller, but emits
+    * candidates (23× the true pairs for int8 at sf0.1, ROADMAP
+    * direction 4) that still need a rescore against a vector store.
     */
   def nearDupPairsStreamTtl(embs: DataFrame, bands: Int, r: Int,
       t: Int, ttl: java.time.Duration,
@@ -230,8 +230,22 @@ object EmbeddingStreams {
       dim: Int = Similarity.Dim): Dataset[NearDupPair] = {
     import embs.sparkSession.implicits._
     val ttlUs = ttlMicrosOf(ttl)
-    val probed = probeExplode(embs, bands, r, t, dim, watermarkDelay,
-        Seq(col("embedding")))
+    // t+1 margin probes per band ([[graft.functions.HyperplaneProbes]];
+    // `dim` is a plan-time constant of the probe expression), packed
+    // with the band into one grouping key: band = pos/(t+1), bucket
+    // is a non-negative r-bit int
+    val probed = embs
+      .withWatermark("ts", watermarkDelay)
+      .select(col("vec_id"), col("ts"),
+        posexplode(graft.functions.HyperplaneProbes.hyperplane_probes(
+          col("embedding"), bands, r, dim, t)).as(Seq("pos", "bucket")),
+        col("embedding"))
+      .select(
+        ((col("pos") / (t + 1)).cast("long") * lit(4294967296L)
+          + col("bucket")).as("band_bucket"),
+        col("vec_id"),
+        (pmod(col("pos"), lit(t + 1)) === 0).as("exact"),
+        col("ts"), col("embedding"))
       .as[TimedProbeRow]
     probed
       .groupByKey(_.band_bucket)
@@ -274,494 +288,4 @@ object EmbeddingStreams {
     nearDupPairsStreamTtl(
       embs.withColumn("ts", timestamp_seconds(lit(7258118400L))),
       bands, r, t, java.time.Duration.ofDays(3650000L), "3650000 days", dim)
-
-  // ---------------------------------------------------------------
-  // Slim composed path: candidate-only state + foreachBatch rescore
-  // ---------------------------------------------------------------
-
-  case class CandPair(vec_a: Long, vec_b: Long)
-  case class SlimProbeRow(band_bucket: Long, vec_id: Long, exact: Boolean,
-      ts: java.sql.Timestamp)
-  /** Parallel primitive arrays for the same per-batch-CPU reason as
-    * [[DistinctGroup]]. The slim state's byte story is
-    * dim-INDEPENDENCE: ~56 B/registration measured end-to-end
-    * (StreamStateProbe, RocksDB) with no embedding arrays at all,
-    * where the scored twin pays bands·(t+1)·dim·4 per distinct
-    * vector — at production dims (768+) that is 3 orders of
-    * magnitude, which is what lets the candidate operator absorb
-    * stream rates whose vectors can't live in state.
-    */
-  case class SlimBucketState(ids: Array[Long], exacts: Array[Boolean],
-      tss: Array[Long]) {
-    def size: Int = ids.length
-  }
-
-  /** Shared probe-explode prep: watermark, t+1 margin probes per band
-    * ([[graft.functions.HyperplaneProbes]]), the packed
-    * (band, bucket) grouping key and the exact flag; `extra` chooses
-    * whether the embedding rides along (scored path) or not (slim
-    * path — dropping it here is what divides the shuffle mass by
-    * ≈ dim·4 bytes per probe row). `dim` is the vector width, a
-    * plan-time constant of the probe expression: the corpus's
-    * [[Similarity.Dim]] unless the caller streams another width.
-    */
-  private def probeExplode(embs: DataFrame, bands: Int, r: Int, t: Int,
-      dim: Int, watermarkDelay: String, extra: Seq[Column]): DataFrame =
-    embs
-      .withWatermark("ts", watermarkDelay)
-      .select(Seq(col("vec_id"), col("ts"),
-        posexplode(graft.functions.HyperplaneProbes.hyperplane_probes(
-          col("embedding"), bands, r, dim, t))
-          .as(Seq("pos", "bucket"))) ++ extra: _*)
-      // pack (band, bucket) into one grouping key: band = pos/(t+1),
-      // bucket is a non-negative r-bit int
-      .select(Seq(
-        ((col("pos") / (t + 1)).cast("long") * lit(4294967296L)
-          + col("bucket")).as("band_bucket"),
-        col("vec_id"),
-        (pmod(col("pos"), lit(t + 1)) === 0).as("exact"),
-        col("ts")) ++ extra: _*)
-
-  /** Slim-state transition for one bucket — same candidate rule and
-    * full-µs ttl gate as [[collapsedStep]], NO scoring and NO arrays:
-    * state is 17 bytes of (vec_id, exact, micros) per registration
-    * (~56 B with store overhead, StreamStateProbe — dim-independent),
-    * which is what lets the candidate operator absorb stream rates
-    * whose vectors can't live in state at all.
-    */
-  private[streaming] def slimStep(rows: Seq[SlimProbeRow],
-      prior: SlimBucketState, wmMs: Long, ttlUs: Long)
-      : (SlimBucketState, List[CandPair]) = {
-    val wmUs = wmMicros(wmMs)
-    val ids = new scala.collection.mutable.ArrayBuffer[Long](prior.size)
-    val exacts = new scala.collection.mutable.ArrayBuffer[Boolean](prior.size)
-    val tss = new scala.collection.mutable.ArrayBuffer[Long](prior.size)
-    var i = 0
-    while (i < prior.size) {
-      if (prior.tss(i) + ttlUs >= wmUs) {
-        ids += prior.ids(i); exacts += prior.exacts(i); tss += prior.tss(i)
-      }
-      i += 1
-    }
-    val out = List.newBuilder[CandPair]
-    rows.sortBy(_.vec_id).foreach { row =>
-      val rowUs = EventStreams.micros(row.ts)
-      var j = 0
-      while (j < ids.length) {
-        if (ids(j) != row.vec_id && (row.exact || exacts(j))
-            && math.abs(rowUs - tss(j)) <= ttlUs)
-          out += CandPair(math.min(ids(j), row.vec_id),
-            math.max(ids(j), row.vec_id))
-        j += 1
-      }
-      ids += row.vec_id; exacts += row.exact; tss += rowUs
-    }
-    (SlimBucketState(ids.toArray, exacts.toArray, tss.toArray),
-      out.result())
-  }
-
-  /** UNSCORED candidate pairs with the same TTL/candidate semantics
-    * as [[nearDupPairsStreamTtl]] but ids-only state — the promised
-    * slim-state composition half: downstream, [[rescoreCandidates]]
-    * (typically in `foreachBatch`) joins the candidates against the
-    * accumulating [[ivfIndexStream]] parquet layout and applies the
-    * cosine gate, reproducing the scored operator's pair set exactly
-    * (StreamBatchParitySpec drains both paths to the same batch
-    * multiprobe set). Candidates are emitted at-least-once and
-    * UNFILTERED by cosine — by construction a superset per the LSH
-    * candidate rule; the rescore is where the ≥ 0.35 gate lives.
-    */
-  def nearDupCandidatesStreamTtl(embs: DataFrame, bands: Int, r: Int,
-      t: Int, ttl: java.time.Duration,
-      watermarkDelay: String = "10 minutes",
-      dim: Int = Similarity.Dim): Dataset[CandPair] = {
-    import embs.sparkSession.implicits._
-    val ttlUs = ttlMicrosOf(ttl)
-    val probed = probeExplode(embs, bands, r, t, dim, watermarkDelay, Nil)
-      .as[SlimProbeRow]
-    probed
-      .groupByKey(_.band_bucket)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (_: Long, rows: Iterator[SlimProbeRow],
-            state: GroupState[SlimBucketState]) =>
-          val wm = state.getCurrentWatermarkMs()
-          val (members, cands) = slimStep(rows.toSeq,
-            state.getOption.getOrElse(
-              SlimBucketState(Array.emptyLongArray,
-                Array.emptyBooleanArray, Array.emptyLongArray)),
-            wm, ttlUs)
-          if (members.size == 0) state.remove()
-          else {
-            state.update(members)
-            state.setTimeoutTimestamp(math.max(
-              math.floorDiv(members.tss.min + ttlUs, 1000L) + 1,
-              wm + 1))
-          }
-          cands.iterator
-      }
-  }
-
-  /** Unbounded slim-candidate variant — the [[nearDupPairsStream]]
-    * constant-instant trick over the candidate core.
-    */
-  def nearDupCandidatesStream(embs: DataFrame, bands: Int, r: Int,
-      t: Int = Similarity.NearDupProbes,
-      dim: Int = Similarity.Dim): Dataset[CandPair] =
-    nearDupCandidatesStreamTtl(
-      embs.withColumn("ts", timestamp_seconds(lit(7258118400L))),
-      bands, r, t, java.time.Duration.ofDays(3650000L), "3650000 days", dim)
-
-  // ---------------------------------------------------------------
-  // SQ8 composed path: int8-quantized gated candidates + rescore
-  // ---------------------------------------------------------------
-
-  /** One distinct QUANTIZED embedding registered in a bucket: the
-    * int8 rep once (dim bytes — 4× less than the scored path's float
-    * rep), plus every copy's (exact, vec_id, micros) as parallel
-    * primitive arrays. Unlike [[DistinctGroup]], the exact flag is
-    * PER MEMBER: two near-equal float vectors can quantize to the
-    * same rep while their probe sets (and so their exact flags in
-    * this bucket) differ, and the batch candidate rule needs each
-    * member's own flag.
-    */
-  case class Sq8Group(q8: Array[Byte], exacts: Array[Boolean],
-      ids: Array[Long], tss: Array[Long]) {
-    def size: Int = ids.length
-  }
-  case class Sq8BucketState(groups: List[Sq8Group])
-
-  /** Per-vector symmetric int8 scalar quantization — the byte-level
-    * twin of [[Similarity]]'s `sq8Col` (`scale = 127/max|v|`,
-    * `q = floor(v·scale + 0.5)`); the zero vector quantizes to zeros.
-    */
-  private[streaming] def sq8Quantize(v: Array[Float]): Array[Byte] = {
-    var mx = 0.0
-    var i = 0
-    while (i < v.length) { val a = math.abs(v(i).toDouble); if (a > mx) mx = a; i += 1 }
-    val out = new Array[Byte](v.length)
-    if (mx == 0.0) return out
-    val scale = 127.0 / mx
-    i = 0
-    while (i < v.length) {
-      out(i) = math.floor(v(i) * scale + 0.5).toByte; i += 1
-    }
-    out
-  }
-
-  /** Cosine between two int8-quantized vectors: exact integer dot
-    * (≤ dim·127², nowhere near Long overflow) over float norms —
-    * per-vector scales cancel in the ratio, so this approximates the
-    * TRUE cosine up to rounding error only.
-    */
-  private[streaming] def sq8Cos(a: Array[Byte], b: Array[Byte]): Double = {
-    var dot = 0L; var na = 0L; var nb = 0L
-    var i = 0
-    while (i < a.length) {
-      dot += a(i).toLong * b(i); na += a(i).toLong * a(i)
-      nb += b(i).toLong * b(i); i += 1
-    }
-    if (na == 0L || nb == 0L) 0.0
-    else dot / math.sqrt(na.toDouble * nb.toDouble)
-  }
-
-  /** Conservative in-state gate slack for [[sq8Step]]: candidates are
-    * gated at `0.35 − Sq8GateMargin` on the QUANTIZED cosine, so no
-    * true ≥ 0.35 pair is lost before the exact-float rescore trims
-    * the overshoot. Bound (d = 64): per-component rounding error is
-    * ≤ 0.5/scale, so ‖Δv‖/‖v‖ ≤ 0.5·√d/127 ≈ 0.0315 per side; the
-    * row additionally scores against its group's REP, whose true
-    * vector sits within one quantization step per component of the
-    * member's (they quantize equal), adding ≤ 2×0.0315. First-order
-    * cosine perturbation ≤ Σ of the relative errors ≈ 0.13 < 0.15.
-    * Sq8StreamSpec measures the realized |qcos − cos| gap on the
-    * corpus (~0.01 typical) and asserts it under the margin.
-    */
-  val Sq8GateMargin: Double = 0.15
-
-  private final class Sq8GroupW(val q8: Array[Byte],
-      val exacts: scala.collection.mutable.ArrayBuffer[Boolean],
-      val ids: scala.collection.mutable.ArrayBuffer[Long],
-      val tss: scala.collection.mutable.ArrayBuffer[Long])
-
-  /** Quantized-state transition for one bucket — [[collapsedStep]]'s
-    * candidate semantics with int8 reps and NO inline scoring: pairs
-    * pass the batch candidate rule (`row.exact || member.exact`, gap
-    * ≤ ttl) plus the conservative quantized gate, and emit as
-    * UNSCORED [[CandPair]]s for the foreachBatch exact-float rescore
-    * ([[rescoreCandidatesSplit]] against the [[ivfIndexStream]]
-    * store). Parity: the gate slack ([[Sq8GateMargin]]) covers the
-    * quantization error, so the candidate set is a SUPERSET of the
-    * batch pair set restricted to bucket co-membership, and the
-    * exact rescore's ≥ 0.35 gate equals the batch gate — the drained
-    * composition reproduces the batch pairs exactly
-    * (StreamBatchParitySpec). The middle state/emission operating
-    * point: ~4× less distinct-state than the scored path (bytes vs
-    * floats), candidate volume ≈ true pairs instead of the slim
-    * path's every-bucket-collision.
-    */
-  private[streaming] def sq8Step(rows: Seq[TimedProbeRow],
-      prior: List[Sq8Group], wmMs: Long, ttlUs: Long)
-      : (List[Sq8Group], List[CandPair]) = {
-    val wmUs = wmMicros(wmMs)
-    var groups: List[Sq8GroupW] = prior.flatMap { g =>
-      val exacts = new scala.collection.mutable.ArrayBuffer[Boolean](g.size)
-      val ids = new scala.collection.mutable.ArrayBuffer[Long](g.size)
-      val tss = new scala.collection.mutable.ArrayBuffer[Long](g.size)
-      var i = 0
-      while (i < g.size) {
-        if (g.tss(i) + ttlUs >= wmUs) {
-          exacts += g.exacts(i); ids += g.ids(i); tss += g.tss(i)
-        }
-        i += 1
-      }
-      if (ids.isEmpty) Nil else new Sq8GroupW(g.q8, exacts, ids, tss) :: Nil
-    }
-    val gate = 0.35 - Sq8GateMargin
-    val out = List.newBuilder[CandPair]
-    rows.sortBy(_.vec_id).foreach { row =>
-      val rowUs = EventStreams.micros(row.ts)
-      val q8r = sq8Quantize(row.embedding)
-      var own: Sq8GroupW = null
-      groups.foreach { g =>
-        if (own == null && java.util.Arrays.equals(g.q8, q8r)) own = g
-        if (sq8Cos(q8r, g.q8) >= gate) {
-          var i = 0
-          while (i < g.ids.length) {
-            if (g.ids(i) != row.vec_id && (row.exact || g.exacts(i))
-                && math.abs(rowUs - g.tss(i)) <= ttlUs)
-              out += CandPair(math.min(g.ids(i), row.vec_id),
-                math.max(g.ids(i), row.vec_id))
-            i += 1
-          }
-        }
-      }
-      if (own != null) {
-        own.exacts += row.exact; own.ids += row.vec_id; own.tss += rowUs
-      } else groups ::= new Sq8GroupW(q8r,
-        scala.collection.mutable.ArrayBuffer(row.exact),
-        scala.collection.mutable.ArrayBuffer(row.vec_id),
-        scala.collection.mutable.ArrayBuffer(rowUs))
-    }
-    (groups.map(g => Sq8Group(g.q8, g.exacts.toArray, g.ids.toArray,
-      g.tss.toArray)), out.result())
-  }
-
-  /** Candidate pairs with [[nearDupPairsStreamTtl]]'s TTL/candidate
-    * semantics but INT8-QUANTIZED distinct-collapsed state and a
-    * conservative quantized pre-gate — compose with
-    * [[nearDupPairsRescored]] for exact scores.
-    */
-  def nearDupCandidatesStreamSq8Ttl(embs: DataFrame, bands: Int, r: Int,
-      t: Int, ttl: java.time.Duration,
-      watermarkDelay: String = "10 minutes",
-      dim: Int = Similarity.Dim): Dataset[CandPair] = {
-    import embs.sparkSession.implicits._
-    val ttlUs = ttlMicrosOf(ttl)
-    val probed = probeExplode(embs, bands, r, t, dim, watermarkDelay,
-        Seq(col("embedding")))
-      .as[TimedProbeRow]
-    probed
-      .groupByKey(_.band_bucket)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (_: Long, rows: Iterator[TimedProbeRow],
-            state: GroupState[Sq8BucketState]) =>
-          val wm = state.getCurrentWatermarkMs()
-          val (groups, cands) = sq8Step(rows.toSeq,
-            state.getOption.map(_.groups).getOrElse(Nil), wm, ttlUs)
-          if (groups.isEmpty) state.remove()
-          else {
-            state.update(Sq8BucketState(groups))
-            val minUs = groups.iterator.flatMap(_.tss.iterator).min
-            state.setTimeoutTimestamp(
-              math.max(math.floorDiv(minUs + ttlUs, 1000L) + 1, wm + 1))
-          }
-          cands.iterator
-      }
-  }
-
-  /** Unbounded SQ8-candidate variant — the [[nearDupPairsStream]]
-    * constant-instant trick.
-    */
-  def nearDupCandidatesStreamSq8(embs: DataFrame, bands: Int, r: Int,
-      t: Int = Similarity.NearDupProbes,
-      dim: Int = Similarity.Dim): Dataset[CandPair] =
-    nearDupCandidatesStreamSq8Ttl(
-      embs.withColumn("ts", timestamp_seconds(lit(7258118400L))),
-      bands, r, t, java.time.Duration.ofDays(3650000L), "3650000 days", dim)
-
-  /** Rescore one micro-batch of candidate pairs against the on-disk
-    * vector store ([[ivfIndexStream]]'s layout — the index IS the
-    * vector store, no second table), SPLITTING matched from missed:
-    * dedup the at-least-once candidate emissions, pull both sides'
-    * embeddings in ONE store scan (broadcast semi-probe by the
-    * batch's distinct ids — bounded by arrival rate, orders of
-    * magnitude below the store), then two broadcast left joins of the
-    * tiny candidate set against the tiny hit set. Returns
-    * `(scored, missed)`: scored passed the cosine ≥ 0.35 gate with
-    * BOTH vectors present; missed pairs had at least one side absent
-    * from the store (the index stream hasn't committed that vector
-    * yet) and must be retried or dead-lettered — silently dropping
-    * them was the round-11 advisory bug: emissions are
-    * at-least-once per pair, not per batch, so a pair missed once
-    * never reappears on its own.
-    */
-  def rescoreCandidatesSplit(cands: DataFrame, indexPath: String)
-      : (DataFrame, DataFrame) = {
-    val spark = cands.sparkSession
-    val c = cands.select(col("vec_a"), col("vec_b")).distinct()
-    val ids = c.select(explode(array(col("vec_a"), col("vec_b"))).as("vec_id"))
-      .distinct()
-    val store = spark.read
-      .schema("vec_id BIGINT, embedding ARRAY<FLOAT>, label INT, cell INT")
-      .parquet(indexPath)
-    // one store scan: keep only the batch's vectors (broadcast hash
-    // semi-probe), yielding a hit set no larger than 2× the batch
-    val hits = store.join(broadcast(ids), "vec_id")
-      .select(col("vec_id"), col("embedding"))
-    val joined = c
-      .join(broadcast(hits.select(col("vec_id").as("vec_a"),
-        col("embedding").as("emb_a"))), Seq("vec_a"), "left")
-      .join(broadcast(hits.select(col("vec_id").as("vec_b"),
-        col("embedding").as("emb_b"))), Seq("vec_b"), "left")
-    val scored = joined
-      .filter(col("emb_a").isNotNull && col("emb_b").isNotNull)
-      .withColumn("cos",
-        graft.functions.CosineSim.cosine_sim(col("emb_a"), col("emb_b")))
-      .filter(col("cos") >= 0.35)
-      .select(col("vec_a"), col("vec_b"), col("cos"))
-    val missed = joined
-      .filter(col("emb_a").isNull || col("emb_b").isNull)
-      .select(col("vec_a"), col("vec_b"))
-    (scored, missed)
-  }
-
-  /** The matched half of [[rescoreCandidatesSplit]] — kept for callers
-    * that manage misses themselves.
-    */
-  def rescoreCandidates(cands: DataFrame, indexPath: String): DataFrame =
-    rescoreCandidatesSplit(cands, indexPath)._1
-
-  /** Resolve which on-disk generation of the retry set is live.
-    * [[nearDupPairsRescored]]'s swap is rename-aside (dir.stage →
-    * dir via a dir → dir.old detour), so after a crash the newest
-    * COMPLETE set is `dir` if present, else `dir.tmp` (a legacy
-    * delete-then-rename generation), else `dir.old` (previous
-    * generation — the batch whose swap was interrupted is replayed
-    * from the checkpoint, so the older set plus the replayed fresh
-    * candidates still covers every pair; the stream is at-least-once
-    * per pair by contract). `dir.stage` is deliberately NOT a read
-    * source: a crash mid-write leaves it partial. Returns None only
-    * when no generation exists (first batch ever).
-    */
-  private def liveRetryPath(dir: String,
-      fs: org.apache.hadoop.fs.FileSystem): Option[String] = {
-    import org.apache.hadoop.fs.Path
-    Seq(dir, dir + ".tmp", dir + ".old")
-      .find(d => fs.exists(new Path(d)))
-  }
-
-  /** Wire the composition: a slim candidate stream rescored per
-    * micro-batch against `indexPath` and handed to `sink` as scored
-    * (vec_a, vec_b, cos) rows.
-    *
-    * Candidates whose vectors are NOT yet in the store (the index
-    * stream commits independently — two production queries cannot
-    * guarantee the drain-index-first discipline the parity spec uses)
-    * are RE-ENQUEUED via `retryDir`: each batch unions the pending
-    * misses with its own candidates, and writes the new miss set back.
-    * The swap is rename-aside — write `dir.stage`, rename `dir` →
-    * `dir.old`, rename `dir.stage` → `dir`, delete `dir.old` — so
-    * every crash window leaves at least one complete generation on
-    * disk (delete-then-rename had a window where a crash lost the
-    * whole backlog, silently re-dropping every pending pair). Reads
-    * resolve the live generation via [[liveRetryPath]].
-    *
-    * A pair is retried until its vectors land OR it has waited
-    * `maxRetryBatches` micro-batches since first seen (`first_batch`
-    * rides in the retry file). Expired pairs are DEAD-LETTERED: appended
-    * to `<retryDir>.dead` and logged, so one never-arriving vector
-    * cannot keep the backlog rewrite running forever. With
-    * `retryDir = None` misses are NOT retried; they are counted and
-    * logged per batch so the drop is at least visible.
-    */
-  def nearDupPairsRescored(cands: Dataset[CandPair], indexPath: String,
-      retryDir: Option[String] = None, maxRetryBatches: Long = 256L)(
-      sink: DataFrame => Unit): StreamingQuery =
-    cands.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[CandPair], batchId: Long) =>
-        val spark = batch.sparkSession
-        val fresh = batch.toDF().select(col("vec_a"), col("vec_b"))
-          .withColumn("first_batch", lit(batchId))
-        val pending = retryDir match {
-          case Some(dir) =>
-            val fs = new org.apache.hadoop.fs.Path(dir)
-              .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            liveRetryPath(dir, fs) match {
-              case Some(live) => spark.read
-                .schema("vec_a BIGINT, vec_b BIGINT, first_batch BIGINT")
-                .parquet(live)
-                // pre-first_batch retry files lack the column → treat
-                // those rows as first seen now
-                .withColumn("first_batch",
-                  coalesce(col("first_batch"), lit(batchId)))
-              case None => fresh.limit(0)
-            }
-          case None => fresh.limit(0)
-        }
-        // a pair present in both keeps its ORIGINAL first_batch so the
-        // age cap measures true wait, not time since last re-emission
-        val all = fresh.unionByName(pending)
-          .groupBy(col("vec_a"), col("vec_b"))
-          .agg(min(col("first_batch")).as("first_batch"))
-        val (scored, missedKeys) = rescoreCandidatesSplit(all, indexPath)
-        sink(scored)
-        retryDir match {
-          case Some(dir) =>
-            import org.apache.hadoop.fs.Path
-            val missed = missedKeys
-              .join(broadcast(all), Seq("vec_a", "vec_b"))
-            val expired = missed
-              .filter(lit(batchId) - col("first_batch") >= maxRetryBatches)
-            val deadN = expired.count()
-            if (deadN > 0) {
-              expired.coalesce(1).write.mode("append").parquet(dir + ".dead")
-              System.err.println(
-                s"[graft] rescore batch $batchId: DEAD-LETTERED $deadN " +
-                  s"pair(s) unmatched after $maxRetryBatches batches → " +
-                  s"$dir.dead")
-            }
-            val keep = missed
-              .filter(lit(batchId) - col("first_batch") < maxRetryBatches)
-            val fs = new Path(dir)
-              .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            // rename-aside swap: `keep` reads the live generation
-            // lazily (through the pending union), so materialize FIRST
-            // — and to dir.stage, a path that is never a read source
-            // (staging to dir.tmp would self-clobber when the live
-            // generation IS dir.tmp after a crash). Then move
-            // generations only by rename; every crash window leaves a
-            // complete recent generation among dir/dir.tmp/dir.old,
-            // and checkpoint replay re-supplies the in-flight batch.
-            val p = new Path(dir)
-            val stage = new Path(dir + ".stage")
-            val tmp = new Path(dir + ".tmp")
-            val old = new Path(dir + ".old")
-            keep.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-            if (fs.exists(old)) fs.delete(old, true)
-            if (fs.exists(p)) fs.rename(p, old)
-            if (fs.exists(tmp)) fs.delete(tmp, true)
-            fs.rename(stage, p)
-            fs.delete(old, true)
-            ()
-          case None =>
-            val n = missedKeys.count()
-            if (n > 0) System.err.println(
-              s"[graft] rescore batch $batchId: DROPPED $n candidate pair(s) " +
-                "not yet in the vector store (no retryDir configured)")
-        }
-      }
-      .start()
 }

@@ -222,6 +222,20 @@ class MRJobSpec extends SparkSpec {
       if (k == from) into else k).sorted.toSeq)
   }
 
+  test("writeTextOutput refuses a regular file and leaves its bytes unchanged") {
+    import spark.implicits._
+    val job = MRJob(wcMap, wcReduce, nReduce = 2)
+    val file = java.nio.file.Files.createTempFile("mrfile", ".txt")
+    val bytes = "not an output dir\n".getBytes("UTF-8")
+    java.nio.file.Files.write(file, bytes)
+    val err = intercept[IllegalArgumentException] {
+      job.writeTextOutput(job.run(spark, fixtureGlob), file.toString)
+    }
+    assert(err.getMessage.contains(file.toString))
+    assert(java.nio.file.Files.isRegularFile(file))
+    assert(java.nio.file.Files.readAllBytes(file).sameElements(bytes))
+  }
+
   test("KVText.readKV: line without a tab yields empty value") {
     val dir = java.nio.file.Files.createTempDirectory("kvnotab").toString
     java.nio.file.Files.writeString(

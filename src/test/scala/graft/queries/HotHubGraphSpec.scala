@@ -1,13 +1,14 @@
 package graft.queries
 
-import graft.{GraphSkewProbe, SparkSpec}
-import org.apache.spark.sql.DataFrame
+import graft.{ScaleUp, SparkSpec, Tables}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Planted hot-hub identity/mechanism net for the graph family — the
   * [[HotUserSkewSpec]] discipline at the PAGE level: one hub page is
   * an endpoint of ~half of all click-graph edges
-  * ([[GraphSkewProbe.plant]]), the celebrity-node shape that breaks
+  * ([[HotHubGraphSpec.plant]]), the celebrity-node shape that breaks
   * naive triangle counting (Σ deg² wedges from one key).
   *
   * What is asserted:
@@ -24,10 +25,11 @@ import org.apache.spark.sql.functions._
   *    fixed-point invariant — dangling mass only ever drops).
   */
 class HotHubGraphSpec extends SparkSpec {
+  import HotHubGraphSpec._
 
   private lazy val hubDir: String = {
     val dir = java.nio.file.Files.createTempDirectory("hothub").toString
-    GraphSkewProbe.plant(spark, sf001, dir, 1)
+    plant(spark, sf001, dir, 1)
     dir
   }
 
@@ -37,8 +39,8 @@ class HotHubGraphSpec extends SparkSpec {
 
   test("the planted corpus genuinely has the hub shape") {
     val m = edges.select(
-      sum(when(col("src") === GraphSkewProbe.HubPage
-        || col("dst") === GraphSkewProbe.HubPage, col("w")).otherwise(0L)).as("hub"),
+      sum(when(col("src") === HubPage
+        || col("dst") === HubPage, col("w")).otherwise(0L)).as("hub"),
       sum(col("w")).as("total")).head
     val (hub, total) = (m.getLong(0), m.getLong(1))
     assert(hub * 10 >= total * 4, s"hub mass $hub of $total < 40%")
@@ -54,7 +56,7 @@ class HotHubGraphSpec extends SparkSpec {
       .groupBy(col("id")).agg(count(lit(1)).as("d"))
     val nEdges = und.count()
     val nNodes = deg.count()
-    val hubDeg = deg.filter(col("id") === GraphSkewProbe.HubPage)
+    val hubDeg = deg.filter(col("id") === HubPage)
       .head.getLong(1)
     // the same (degree, id) lexicographic orientation as triangleCountOf
     val oriented = und
@@ -63,7 +65,7 @@ class HotHubGraphSpec extends SparkSpec {
       .select(when(struct(col("da"), col("a")) < struct(col("db"), col("b")),
         col("a")).otherwise(col("b")).as("u"))
     val outDeg = oriented.groupBy(col("u")).agg(count(lit(1)).as("od"))
-    val hubOut = outDeg.filter(col("u") === GraphSkewProbe.HubPage)
+    val hubOut = outDeg.filter(col("u") === HubPage)
       .collect().headOption.map(_.getLong(1)).getOrElse(0L)
     val maxOut = outDeg.agg(max(col("od"))).head.getLong(0)
     // the hub is the max-degree node — adjacent to ~every page (the
@@ -98,7 +100,7 @@ class HotHubGraphSpec extends SparkSpec {
 
   test("pagerank under the hub: hub rank is max, fixed-point mass conserved") {
     val pr = Graph.pageRank(spark, hubDir).cache()
-    val hubPr = pr.filter(col("page") === GraphSkewProbe.HubPage)
+    val hubPr = pr.filter(col("page") === HubPage)
       .head.getAs[Long]("pr")
     val maxPr = pr.agg(max(col("pr"))).head.getLong(0)
     val totalPr = pr.agg(sum(col("pr"))).head.getLong(0)
@@ -108,5 +110,38 @@ class HotHubGraphSpec extends SparkSpec {
     assert(totalPr <= graft.queries.Graph.Scale + pr.count(),
       s"rank mass $totalPr exceeds the fixed-point scale")
     pr.unpersist()
+  }
+}
+
+object HotHubGraphSpec {
+
+  val HubPage = -1L
+
+  /** Write the planted hot-hub corpus under `$workDir/events.parquet`.
+    * The sf events are scaled `factor`× like [[ScaleUp]] (user+event
+    * id shifts, time range preserved), then the SAME rows are
+    * appended once more (ids shifted again) with every OTHER event's
+    * page rewritten to the hub id in per-user time order. Every
+    * consecutive pair of the copy's events then has a hub endpoint,
+    * so the copy's transitions ALL touch the hub — hub degree ≈ 50%
+    * of edge endpoints — while each copied user keeps a realistic
+    * stream (no self-loop degeneracy) and the original half of the
+    * corpus is untouched.
+    */
+  def plant(spark: SparkSession, src: String, workDir: String,
+      factor: Int): Unit = {
+    val ev = Tables.events(spark, src)
+    val (uShift, eShift) = ScaleUp.eventShifts(ev)
+    val scaled = ScaleUp.shiftedCopies(ev, uShift, eShift, 0 until factor)
+    val byUser = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
+    val hubbed = ScaleUp
+      .shiftedCopies(ev, uShift, eShift, factor until 2 * factor)
+      .withColumn("rn", row_number().over(byUser))
+      .withColumn("props",
+        when(pmod(col("rn"), lit(2)) === 0, lit(s"""{"k":$HubPage}"""))
+          .otherwise(col("props")))
+      .drop("rn")
+    scaled.unionByName(hubbed).write.mode("overwrite")
+      .parquet(s"$workDir/events.parquet")
   }
 }

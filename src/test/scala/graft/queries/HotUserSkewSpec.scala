@@ -21,6 +21,8 @@ import org.apache.spark.sql.functions._
   */
 class HotUserSkewSpec extends SparkSpec {
 
+  private val HotUser = -777L
+
   /** sf0.001 events + the same rows again as user -777 (ids shifted):
     * the hot user holds exactly half the corpus, spread over the
     * whole time range. Written once per JVM; queries take an sfDir.
@@ -30,7 +32,7 @@ class HotUserSkewSpec extends SparkSpec {
     val ev = Tables.events(spark, sf001)
     val eShift = ev.agg(max(col("event_id"))).head.getLong(0) + 1L
     ev.unionAll(
-        ev.withColumn("user_id", lit(graft.SkewProbe.HotUser))
+        ev.withColumn("user_id", lit(HotUser))
           .withColumn("event_id", col("event_id") + lit(eShift)))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     dir
@@ -158,7 +160,7 @@ class HotUserSkewSpec extends SparkSpec {
     // the hot user's purchases must actually be represented: their
     // total first-touch credits equal their purchase-with-touch count
     val hotPurchases = Tables.events(spark, hotDir)
-      .filter(col("user_id") === graft.SkewProbe.HotUser
+      .filter(col("user_id") === HotUser
         && col("event_type") === "purchase").count()
     val totalFirst = got.agg(sum(col("n_first"))).head.getLong(0)
     assert(totalFirst >= hotPurchases / 2,
@@ -219,11 +221,11 @@ class HotUserSkewSpec extends SparkSpec {
 
   test("the hot corpus genuinely has the skew shape the rewires target") {
     val ev = Tables.events(spark, hotDir)
-    val hot = ev.filter(col("user_id") === graft.SkewProbe.HotUser).count()
+    val hot = ev.filter(col("user_id") === HotUser).count()
     val total = ev.count()
     assert(hot * 2 == total, s"hot user holds $hot of $total")
     // and spans many day-buckets, so boundary stitching is exercised
-    val days = ev.filter(col("user_id") === graft.SkewProbe.HotUser)
+    val days = ev.filter(col("user_id") === HotUser)
       .select(to_date(col("ts"))).distinct().count()
     assert(days >= 2, s"hot user active on only $days days")
   }

@@ -4,13 +4,12 @@ import graft.SparkSpec
 import graft.streaming.EmbeddingStreams._
 
 /** Direct unit coverage of the near-dup stream's bucket-state
-  * transitions ([[EmbeddingStreams.collapsedStep]] /
-  * [[EmbeddingStreams.slimStep]]): the O(distinct-vectors) state
-  * bound under a planted duplicate cohort is asserted on the DATA
-  * STRUCTURE itself (one representative array, m entries — the
-  * VERDICT r10 item 2 probe), and the full-microsecond ttl gate is
-  * pinned at the exact ±1 µs boundary where the retired ms-truncated
-  * arithmetic misclassified.
+  * transition ([[EmbeddingStreams.collapsedStep]]): the
+  * O(distinct-vectors) state bound under a planted duplicate cohort
+  * is asserted on the DATA STRUCTURE itself (one representative
+  * array, m entries — the VERDICT r10 item 2 probe), and the
+  * full-microsecond ttl gate is pinned at the exact ±1 µs boundary
+  * where the retired ms-truncated arithmetic misclassified.
   */
 class EmbedDupStreamSpec extends SparkSpec {
 
@@ -85,24 +84,5 @@ class EmbedDupStreamSpec extends SparkSpec {
     val dropWmMs = math.floorDiv(expiryUs, 1000L) + 1L // wmUs > expiry
     assert(collapsedStep(Nil, st, keepWmMs, ttlUs)._1.nonEmpty)
     assert(collapsedStep(Nil, st, dropWmMs, ttlUs)._1.isEmpty)
-  }
-
-  test("slimStep: ids-only members, candidate superset unfiltered by cosine") {
-    val ttlUs = 1000000L
-    def srow(id: Long, us: Long, exact: Boolean): SlimProbeRow =
-      SlimProbeRow(0L, id, exact, tsUs(us))
-    val rows = Seq(srow(1L, base, exact = true),
-      srow(2L, base + ttlUs, exact = false),
-      srow(3L, base + ttlUs + 1, exact = true), // gap from 1 is ttl+1
-      srow(4L, base + ttlUs + 1, exact = false)) // probe side of 2/3
-    val (members, cands) = slimStep(rows, SlimBucketState(
-      Array.emptyLongArray, Array.emptyBooleanArray, Array.emptyLongArray),
-      0L, ttlUs)
-    assert(members.size == 4)
-    // 1-2: exact|probe within ttl -> cand; 1-3: gap ttl+1 -> no;
-    // 2-3: probe|exact, gap 1 -> cand; 3-4: exact|probe, gap 0 -> cand;
-    // 2-4: probe|probe -> no; 1-4: gap ttl+1 -> no
-    assert(cands.toSet == Set(CandPair(1L, 2L), CandPair(2L, 3L),
-      CandPair(3L, 4L)))
   }
 }

@@ -592,181 +592,6 @@ class StreamBatchParitySpec extends SparkSpec {
     assert(drain("neardup_dim_default", None).isEmpty)
   }
 
-  test("near-dup slim composition: candidate stream + foreachBatch rescore equals batch") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = "/root/testdata/sf0.001"
-    val ebatch = graft.Tables.embeddings(spark, base)
-    val (bands, r, t) = (16, 9, 2)
-    val vecs = ebatch.select(col("vec_id"), col("embedding")).collect()
-      .map(x => (x.getLong(0), x.getSeq[Float](1).toArray)).toSeq
-    val cents = graft.llm.Similarity.firstNCentroids(ebatch)
-    val dir = java.nio.file.Files.createTempDirectory("slimdup").toString
-    // the vector store IS the accumulating IVF index stream
-    val idxIn = MemoryStream[(Long, Array[Float])]
-    val idxQ = graft.streaming.EmbeddingStreams.ivfIndexStream(
-      idxIn.toDS().toDF("vec_id", "embedding"), cents,
-      s"$dir/idx", s"$dir/ckpt")
-    val candIn = MemoryStream[(Long, Array[Float])]
-    val scored = scala.collection.mutable.Set[(Long, Long, Long)]()
-    val candQ = graft.streaming.EmbeddingStreams.nearDupPairsRescored(
-      graft.streaming.EmbeddingStreams.nearDupCandidatesStream(
-        candIn.toDS().toDF("vec_id", "embedding"), bands, r, t),
-      s"$dir/idx") { batch =>
-      scored.synchronized {
-        scored ++= batch.collect().map(x =>
-          (x.getLong(0), x.getLong(1), math.round(x.getDouble(2) * 1e9)))
-      }
-    }
-    // per wave: index stream drains FIRST, so every candidate's
-    // vectors are in the store when its batch rescored
-    val waves = vecs.sortBy(-_._1).grouped((vecs.size + 2) / 3).toSeq
-    waves.foreach { w =>
-      idxIn.addData(w); idxQ.processAllAvailable()
-      candIn.addData(w); candQ.processAllAvailable()
-    }
-    idxQ.stop(); candQ.stop()
-    val batch = graft.llm.Similarity
-      .nearDupPairsMultiProbe(ebatch, bands, r, t).collect()
-      .map(x => (x.getLong(0), x.getLong(1), math.round(x.getDouble(2) * 1e9)))
-      .toSet
-    val streamed = scored.synchronized(scored.toSet)
-    assert(streamed == batch,
-      s"stream-only: ${(streamed -- batch).take(3)}; batch-only: ${(batch -- streamed).take(3)}")
-    assert(streamed.nonEmpty)
-  }
-
-  test("slim rescore: candidates ahead of the store retry until vectors land") {
-    // the r11 advisory bug: candidates inner-joined the store, so a
-    // pair arriving BEFORE ivfIndexStream committed its vectors was
-    // silently and permanently dropped. Here the interleaving is
-    // deliberately wrong-way-round (candidates for wave k drain
-    // BEFORE the index sees wave k), so every cross-wave pair misses
-    // at least once — retryDir must carry it to a later batch and the
-    // drained result must still equal batch.
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = "/root/testdata/sf0.001"
-    val ebatch = graft.Tables.embeddings(spark, base)
-    val (bands, r, t) = (16, 9, 2)
-    val vecs = ebatch.select(col("vec_id"), col("embedding")).collect()
-      .map(x => (x.getLong(0), x.getSeq[Float](1).toArray)).toSeq
-    val cents = graft.llm.Similarity.firstNCentroids(ebatch)
-    val dir = java.nio.file.Files.createTempDirectory("slimretry").toString
-    val idxIn = MemoryStream[(Long, Array[Float])]
-    val idxQ = graft.streaming.EmbeddingStreams.ivfIndexStream(
-      idxIn.toDS().toDF("vec_id", "embedding"), cents,
-      s"$dir/idx", s"$dir/ckpt")
-    val candIn = MemoryStream[(Long, Array[Float])]
-    val scored = scala.collection.mutable.Set[(Long, Long, Long)]()
-    val candQ = graft.streaming.EmbeddingStreams.nearDupPairsRescored(
-      graft.streaming.EmbeddingStreams.nearDupCandidatesStream(
-        candIn.toDS().toDF("vec_id", "embedding"), bands, r, t),
-      s"$dir/idx", retryDir = Some(s"$dir/retry")) { batch =>
-      scored.synchronized {
-        scored ++= batch.collect().map(x =>
-          (x.getLong(0), x.getLong(1), math.round(x.getDouble(2) * 1e9)))
-      }
-    }
-    // wrong-way-round drain: candidates first, index after — every
-    // pair's rescore initially misses the store
-    val waves = vecs.sortBy(-_._1).grouped((vecs.size + 2) / 3).toSeq
-    waves.foreach { w =>
-      candIn.addData(w); candQ.processAllAvailable()
-      idxIn.addData(w); idxQ.processAllAvailable()
-    }
-    // one final candidate pass flushes the retryDir backlog now that
-    // the store holds everything (re-adding an existing vector only
-    // re-emits already-scored pairs — slimStep skips self-pairs and
-    // the collector is a set — but it guarantees a micro-batch fires)
-    candIn.addData(Seq(vecs.head))
-    candQ.processAllAvailable()
-    idxQ.stop(); candQ.stop()
-    val batch = graft.llm.Similarity
-      .nearDupPairsMultiProbe(ebatch, bands, r, t).collect()
-      .map(x => (x.getLong(0), x.getLong(1), math.round(x.getDouble(2) * 1e9)))
-      .toSet
-    val streamed = scored.synchronized(scored.toSet)
-    assert(streamed == batch,
-      s"stream-only: ${(streamed -- batch).take(3)}; batch-only: ${(batch -- streamed).take(3)}")
-    assert(streamed.nonEmpty)
-  }
-
-  test("slim rescore: retry backlog survives a crash in any swap window") {
-    // the swap is rename-aside (tmp → dir via dir → dir.old); a crash
-    // can leave the backlog ONLY in retry.tmp (swap started, dir
-    // renamed away) or ONLY in retry.old (tmp write finished, rename
-    // never completed, dir deleted by a partial legacy swap). In both
-    // windows the next batch must still find and flush the pending
-    // pair — delete-then-rename lost it.
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    for (suffix <- Seq(".tmp", ".old")) {
-      val dir = java.nio.file.Files.createTempDirectory("retrywin").toString
-      val v = Array.fill(8)(0.5f)
-      // vector store holds BOTH sides of the pending pair, so the
-      // flushed retry scores (cos(v,v)=1 ≥ 0.35)
-      Seq((1L, v, 0, 0), (2L, v, 0, 0))
-        .toDF("vec_id", "embedding", "label", "cell")
-        .write.parquet(s"$dir/idx")
-      // simulate the crash: the pending pair exists ONLY under the
-      // non-live generation path
-      Seq((1L, 2L, 0L)).toDF("vec_a", "vec_b", "first_batch")
-        .write.parquet(s"$dir/retry$suffix")
-      val candIn = MemoryStream[(Long, Array[Float])]
-      val scored = scala.collection.mutable.Set[(Long, Long)]()
-      val candQ = graft.streaming.EmbeddingStreams.nearDupPairsRescored(
-        graft.streaming.EmbeddingStreams.nearDupCandidatesStream(
-          candIn.toDS().toDF("vec_id", "embedding"), 4, 4, 1),
-        s"$dir/idx", retryDir = Some(s"$dir/retry")) { batch =>
-        scored.synchronized {
-          scored ++= batch.collect().map(x => (x.getLong(0), x.getLong(1)))
-        }
-      }
-      // a lone far-away vector fires a micro-batch without adding pairs
-      candIn.addData(Seq((99L, Array.fill(8)(-0.5f))))
-      candQ.processAllAvailable()
-      candQ.stop()
-      assert(scored.synchronized(scored.toSet).contains((1L, 2L)),
-        s"window $suffix: pending pair lost — got ${scored.toSet}")
-    }
-  }
-
-  test("slim rescore: never-matching pair is dead-lettered after maxRetryBatches") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("retrydead").toString
-    // store holds an unrelated vector; the pending pair's vectors
-    // (10, 11) never arrive
-    Seq((1L, Array.fill(8)(0.5f), 0, 0))
-      .toDF("vec_id", "embedding", "label", "cell")
-      .write.parquet(s"$dir/idx")
-    Seq((10L, 11L, 0L)).toDF("vec_a", "vec_b", "first_batch")
-      .write.parquet(s"$dir/retry")
-    val candIn = MemoryStream[(Long, Array[Float])]
-    val candQ = graft.streaming.EmbeddingStreams.nearDupPairsRescored(
-      graft.streaming.EmbeddingStreams.nearDupCandidatesStream(
-        candIn.toDS().toDF("vec_id", "embedding"), 4, 4, 1),
-      s"$dir/idx", retryDir = Some(s"$dir/retry"),
-      maxRetryBatches = 2L) { _ => () }
-    // batches 0 and 1: age < 2 → still retried; batch 2: age 2 ≥ 2 →
-    // dead-lettered
-    for (i <- 0 to 2) {
-      candIn.addData(Seq((100L + i, Array.fill(8)(-0.5f))))
-      candQ.processAllAvailable()
-    }
-    candQ.stop()
-    val dead = spark.read.parquet(s"$dir/retry.dead")
-      .select("vec_a", "vec_b").collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(dead.contains((10L, 11L)), s"dead-letter missing: ${dead.toSeq}")
-    val still = spark.read
-      .schema("vec_a BIGINT, vec_b BIGINT, first_batch BIGINT")
-      .parquet(s"$dir/retry")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(!still.contains((10L, 11L)),
-      s"expired pair still in retry backlog: ${still.toSeq}")
-  }
-
   test("centroid stream: drained running means are bit-identical to batch pooling") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
