@@ -52,7 +52,7 @@ trait UserJob extends Serializable {
   * Execution IS [[MRJob]]: the jar's job runs as an
   * `MRJob[String, String, String]` whose `mapf` and `reducef` call the
   * per-thread instance, so it gets the same full-width map side and
-  * key-column holistic reduce (the reference's sort-gather semantics,
+  * hash-grouped holistic reduce (the reference's gather semantics,
   * worker.go:153-169), in `nReduce = 8` reduce tasks. For the
   * reference's text-file output format, feed the returned Dataset to
   * an `MRJob(...).writeTextOutput`: a sink with `nReduce = 8` writes

@@ -1,9 +1,13 @@
 package graft.operators
 
 import java.io.FileNotFoundException
+import scala.reflect.ClassTag
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, Dataset, Encoder, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.encoderFor
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoder, encoderFor}
+import org.apache.spark.sql.catalyst.encoders.AgnosticEncoders._
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.functions._
 
@@ -13,7 +17,7 @@ import org.apache.spark.sql.functions._
   * and `reducef(key, values) -> string` (worker.go:51) through
   * map → FNV-hash shuffle (worker.go:105-110) → per-partition sort →
   * run-length group → reduce (worker.go:153-169). `MRJob` keeps that
-  * contract but compiles it to Dataset transformations, so the
+  * contract but compiles it to Spark transformations, so the
   * scheduling/shuffle/fault-tolerance machinery (coordinator.go — task
   * queues, 10 s straggler deadline, atomic rename commit) is replaced
   * wholesale by Spark's DAGScheduler, shuffle service, speculation and
@@ -21,14 +25,14 @@ import org.apache.spark.sql.functions._
   *
   * Semantics preserved (SURVEY.md §2.1 notes):
   *   - reduce is HOLISTIC: `reducef` sees every value of a key in one
-  *     call (worker.go:161-165) → key-column
-  *     `groupBy(...).as[K, (K, V)].mapGroups(...)`, never
+  *     call (worker.go:161-165) → a hash `groupByKey`, never
   *     `reduceByKey`, in the general path;
-  *   - grouping is exact binary string/key equality (worker.go:21) —
-  *     default binary collation, no locale;
+  *   - grouping is exact key equality (worker.go:21): keys group by
+  *     `equals`, which agrees with Spark's binary key equality for the
+  *     key shapes `MRJob` accepts (see `runOnPairs`);
   *   - `nReduce` is the reduce-task count (coordinator.go:126-141):
   *     the holistic reduce shuffles once, into `nReduce` partitions,
-  *     and each reduce task sorts, groups and reduces its partition
+  *     and each reduce task groups, reduces and sorts its partition
   *     and, through `writeTextOutput`, writes its own file in that same
   *     task (worker.go:153-170, coordinator.go:118-124). The session's
   *     `spark.sql.shuffle.partitions` does not set that width: a caller
@@ -36,12 +40,13 @@ import org.apache.spark.sql.functions._
   *   - output is `nReduce` files, keys sorted within each file, NOT
   *     globally (README.MD:43-53, worker.go:153).
   *
-  * Scale notes: the holistic path materializes one key's values at a
-  * time (like the reference, worker.go:161-163) but streams via the
-  * grouped iterator — no whole-partition buffering. An associative
-  * reduce is not a second API here but a different plan: express it
-  * as a Catalyst aggregate (`CanonicalJobs`), whose partial
-  * aggregation turns the shuffle from |pairs| into |keys|·partitions.
+  * Scale notes: a reduce task holds its partition's groups in Spark's
+  * `ExternalAppendOnlyMap`, which spills to disk under memory
+  * pressure, and then sorts only the distinct keys, not every pair as
+  * the reference does (worker.go:153). An associative reduce is not a
+  * second API here but a different plan: express it as a Catalyst
+  * aggregate (`CanonicalJobs`), whose partial aggregation turns the
+  * shuffle from |pairs| into |keys|·partitions.
   */
 final case class MRJob[K, V, OUT](
     mapf: (String, String) => IterableOnce[(K, V)],
@@ -50,6 +55,8 @@ final case class MRJob[K, V, OUT](
 
   /** Full pipeline over text files: one (path, contents) pair per file,
     * exactly the reference's map-input contract (worker.go:94-104).
+    * The mapped pairs go to the reduce as an RDD, with no Dataset
+    * round trip before the shuffle.
     *
     * Splits: the reference runs one MAP task per file
     * (coordinator.go:185-198). Here `wholeTextFiles` packs whole files
@@ -67,35 +74,56 @@ final case class MRJob[K, V, OUT](
       outEnc: Encoder[(K, OUT)]): Dataset[(K, OUT)] = {
     val sc = spark.sparkContext
     val files = sc.wholeTextFiles(inputGlob, sc.defaultParallelism)
-    val mapped = files.flatMap { case (name, contents) => mapf(name, contents) }
-    runOnPairs(spark.createDataset(mapped))
+    reduce(spark, files.flatMap { case (name, contents) => mapf(name, contents) }, kvEnc)
   }
 
-  /** Shuffle + group + holistic reduce over an already-mapped KV set.
+  /** Shuffle + group + holistic reduce over an already-mapped KV set:
+    * the same reduce as `run`, over `kvs.rdd`.
     *
-    * One exchange into `nReduce` hash partitions of the key, which the
-    * grouping then uses as is: `nReduce` reduce tasks, each emitting
-    * its groups in key order (the grouping sorts by key), as the
-    * reference's reduce tasks do (coordinator.go:126-141,
-    * worker.go:153-165). `repartition` by a number is never coalesced
-    * by AQE, so the width holds whatever the session's shuffle
-    * partitions say. The result is marked as placed at `nReduce`, so
-    * `writeTextOutput` of this job writes it without a second shuffle.
-    *
-    * Groups on the key column itself (see `MRJob.keyColumns`), so a
-    * flat key crosses the exchange once per row; `groupByKey(_._1)`
-    * would append a second, re-serialized copy of it to every row. A
-    * struct-shaped key is hashed and grouped on its fields, projected
-    * next to the struct. Keys compare by their binary encoding, as
-    * with `groupByKey`.
+    * Keys group by Java `equals`/`hashCode`. Those agree with Spark's
+    * binary key equality for strings, the integral types, `Boolean`,
+    * `Seq`, `Option`, and tuples or case classes of these. A key whose
+    * encoder holds a JVM array (`Array[Byte]` included), a `Float` or
+    * `Double` (NaN, −0.0), a `java.math.BigDecimal` (scale) or a `Map`
+    * (entry order) is refused with an `IllegalArgumentException` before
+    * any job runs. A null struct-shaped key fails the job, as it does
+    * under `Dataset.groupByKey`.
     */
   def runOnPairs(kvs: Dataset[(K, V)])(implicit
       kEnc: Encoder[K],
+      outEnc: Encoder[(K, OUT)]): Dataset[(K, OUT)] =
+    reduce(kvs.sparkSession, kvs.rdd, kvs.encoder)
+
+  /** One shuffle into `nReduce` partitions by `key.hashCode`: each
+    * reduce task groups its pairs in a spillable hash map, calls
+    * `reducef` once per key and sorts its distinct keys in Spark's
+    * binary key order. The result is marked as placed at `nReduce`, so
+    * `writeTextOutput` of this job writes it without a second shuffle.
+    *
+    * The class tags come from the encoders, so Spark's serializer
+    * manager picks Kryo for the shuffle of String and primitive pairs
+    * (the Java serializer otherwise).
+    */
+  private def reduce(spark: SparkSession, pairs: RDD[(K, V)], kvEnc: Encoder[(K, V)])(implicit
+      kEnc: Encoder[K],
       outEnc: Encoder[(K, OUT)]): Dataset[(K, OUT)] = {
-    val keys = MRJob.keyColumns(kvs, kEnc)
-    val out = kvs.repartition(nReduce, keys: _*)
-      .groupBy(keys: _*).as[K, (K, V)](kEnc, kvs.encoder)
-      .mapGroups((k, it) => (k, reducef(k, it.map(_._2))))
+    val keyEnc = encoderFor(kEnc)
+    MRJob.refuseUnhashable(keyEnc.encoder)
+    implicit val kTag: ClassTag[K] = keyEnc.clsTag
+    implicit val vTag: ClassTag[V] = MRJob.valueTag(kvEnc)
+    val structKey = keyEnc.isSerializedAsStructForTopLevel
+    // The stock HashPartitioner, on purpose. String.hashCode mod 8 mixes
+    // poorly (31 ≡ −1 mod 8), and mr_holistic's exchange skew rose from
+    // 1.20 to 2.46 with it. A byteswap32-mixed partitioner brought the
+    // skew to 1.62 but did not move wall time (1.307 vs 1.351 s over 5
+    // pairs on 4 cores), so no custom partitioner.
+    val reduced = pairs.groupByKey(new HashPartitioner(nReduce)).map { case (k, vs) =>
+      if (structKey && k == null)
+        throw new IllegalArgumentException("MRJob: a struct-shaped key must not be null")
+      (k, reducef(k, vs.iterator))
+    }
+    val ds = spark.createDataset(reduced)
+    val out = ds.sortWithinPartitions(ds.col("`" + ds.columns.head.replace("`", "``") + "`"))
     out.queryExecution.analyzed.setTagValue(MRJob.ReduceTasks, nReduce)
     out
   }
@@ -107,14 +135,15 @@ final case class MRJob[K, V, OUT](
     * Writes in place when `out` is a `runOnPairs`/`run` result of a
     * job with this `nReduce`, unchanged since (its analyzed plan root
     * still carries the mark): each reduce task writes its own
-    * key-sorted file, with no further shuffle. Any other input — a
-    * result transformed in any way (a new plan root carries no mark),
-    * one reduced at another `nReduce`, or a Dataset from elsewhere —
-    * is re-placed by a shuffle into `nReduce` partitions of the key and
-    * sorted within each. Placement uses Spark's Murmur3 hash, not the
-    * reference's FNV-1a — compare outputs as multisets, not
-    * file-by-file (use `graft.functions.Fnv1a` when placement
-    * fidelity itself is under test).
+    * key-sorted file, with no further shuffle, placed by `key.hashCode`
+    * mod `nReduce`. Any other input — a result transformed in any way
+    * (a new plan root carries no mark), one reduced at another
+    * `nReduce`, or a Dataset from elsewhere — is re-placed by a shuffle
+    * into `nReduce` partitions by Spark's Murmur3 hash of the key and
+    * sorted within each. Either way the files are disjoint in keys and
+    * key-sorted. Neither placement is the reference's FNV-1a — compare
+    * outputs as multisets, not file-by-file (use `graft.functions.Fnv1a`
+    * when placement fidelity itself is under test).
     *
     * `dir` must be a directory or absent. An existing regular file is
     * refused before any job runs, where the overwrite would silently
@@ -144,25 +173,41 @@ object MRJob {
     */
   private val ReduceTasks = TreeNodeTag[Int]("graft.mrjob.reduceTasks")
 
-  /** The grouping columns for the key, the first column of `kvs`.
-    *
-    * A flat key (primitive, String, Option, array) is that column. A
-    * struct-shaped key (tuple, case class) is grouped on the column's
-    * fields, each aliased to its own name: the key encoder resolves
-    * them by name, while the struct column alone fails to bind
-    * (`UNSUPPORTED_DESERIALIZER.FIELD_NUMBER_MISMATCH`). A whole-null
-    * struct key would then merge with a key whose fields are all
-    * null, so it fails the job instead, as it does under `groupByKey`
-    * (`NOT_NULL_ASSERT_VIOLATION`, top-level Product).
+  /** The value's class tag: field 1 of the pair encoder. A pair encoder
+    * that is not a product (a Kryo-encoded pair, say) gives `AnyRef`,
+    * which keeps the Java serializer.
     */
-  private def keyColumns[K](kvs: Dataset[_], kEnc: Encoder[K]): Seq[Column] = {
-    val key = kvs.col("`" + kvs.columns.head.replace("`", "``") + "`")
-    val enc = encoderFor(kEnc)
-    if (!enc.isSerializedAsStructForTopLevel) Seq(key)
-    else {
-      val nonNull = when(key.isNull,
-        raise_error(lit("MRJob: a struct-shaped key must not be null"))).otherwise(key)
-      enc.schema.fieldNames.toSeq.map(f => nonNull.getField(f).as(f))
+  private def valueTag[K, V](kvEnc: Encoder[(K, V)]): ClassTag[V] =
+    (encoderFor(kvEnc).encoder match {
+      case p: ProductEncoder[_] => p.fields(1).enc.clsTag
+      case _ => ClassTag.AnyRef
+    }).asInstanceOf[ClassTag[V]]
+
+  /** Refuses a key whose encoder tree holds a type whose Java
+    * `equals`/`hashCode` disagree with Spark's encoded-key equality: a
+    * JVM array (compared by identity), a `Float` or `Double` (NaN ≠ NaN
+    * under tuple and case-class `==`, and −0.0 ≠ 0.0 under `equals`),
+    * a `java.math.BigDecimal` (whose `equals` depends on scale) or a
+    * `Map` (equal in any entry order, while Spark's encoding keeps the
+    * order, and one Spark cannot sort). The message names the key type
+    * and the offending type.
+    */
+  private def refuseUnhashable(key: AgnosticEncoder[_]): Unit = {
+    def bad(enc: AgnosticEncoder[_]): Option[AgnosticEncoder[_]] = enc match {
+      case BinaryEncoder | _: ArrayEncoder[_] | PrimitiveFloatEncoder | BoxedFloatEncoder |
+          PrimitiveDoubleEncoder | BoxedDoubleEncoder | _: JavaDecimalEncoder |
+          _: MapEncoder[_, _, _] => Some(enc)
+      case s: StructEncoder[_] => s.fields.iterator.flatMap(f => bad(f.enc)).nextOption()
+      case o: OptionEncoder[_] => bad(o.elementEncoder)
+      case i: IterableEncoder[_, _] => bad(i.element)
+      case t: TransformingEncoder[_, _] => bad(t.transformed)
+      case _ => None
+    }
+    bad(key).foreach { enc =>
+      throw new IllegalArgumentException(
+        s"MRJob: key type ${key.clsTag.runtimeClass.getTypeName} holds " +
+          s"${enc.clsTag.runtimeClass.getTypeName}, whose equals/hashCode disagree with " +
+          "Spark's key equality; use a String, integral, Seq or Option key instead")
     }
   }
 }

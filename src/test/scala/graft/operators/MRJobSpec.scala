@@ -1,19 +1,29 @@
 package graft.operators
 
+import java.util.concurrent.atomic.AtomicInteger
 import graft.SparkSpec
 import graft.examples.QueryCounters
 import graft.sources.KVText
+import org.apache.spark.{ShuffleDependency, TaskContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.catalyst.plans.logical.{AppendColumns, AppendColumnsWithObject}
-import org.apache.spark.sql.execution.ExternalRDD
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.functions.{col, hash, lit, pmod}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 /** A top-level case-class key for the key-shape tests. */
 case class WordAt(word: String, line: Int)
+
+/** A case-class key with a `Double` field, which `MRJob` refuses. */
+case class Scored(word: String, score: Double)
+
+object MRJobSpec {
+  /** Reduce calls the crash test failed on purpose; tasks run in this
+    * JVM under the local master. */
+  val reduceCrashes = new AtomicInteger()
+}
 
 /** Golden + property tests for the MRJob surface (SURVEY.md §5:
   * golden multiset compare per README.MD:43-53; ScalaCheck
@@ -29,13 +39,27 @@ class MRJobSpec extends SparkSpec {
   private def fixtureGlob =
     getClass.getResource("/mr/split-1.txt").getPath.stripSuffix("split-1.txt") + "*.txt"
 
-  /** The part files of a `writeTextOutput` dir, each as its key column. */
-  private def keysPerFile(dir: String): Seq[Seq[String]] =
+  /** The part files of a `writeTextOutput` dir, in name order, each as
+    * its lines. */
+  private def linesPerFile(dir: String): Seq[Seq[String]] =
     new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
       .sortBy(_.getName).toSeq.map { f =>
         val src = scala.io.Source.fromFile(f)
-        try src.getLines().map(_.split(" ")(0)).toList finally src.close()
+        try src.getLines().toList finally src.close()
       }
+
+  /** The part files of a `writeTextOutput` dir, each as its key column. */
+  private def keysPerFile(dir: String): Seq[Seq[String]] =
+    linesPerFile(dir).map(_.map(_.split(" ")(0)))
+
+  /** The shuffle dependencies in the RDD lineage of `ds`. */
+  private def shuffles(ds: Dataset[_]): Seq[ShuffleDependency[_, _, _]] = {
+    def walk(rdd: RDD[_]): Seq[ShuffleDependency[_, _, _]] = rdd.dependencies.flatMap {
+      case s: ShuffleDependency[_, _, _] => s +: walk(s.rdd)
+      case d => walk(d.rdd)
+    }
+    walk(ds.rdd).distinct
+  }
 
   test("wordcount golden output (holistic reduce path)") {
     import spark.implicits._
@@ -118,6 +142,14 @@ class MRJobSpec extends SparkSpec {
       (null: String) -> "4", "a" -> "5").toDS())
   }
 
+  test("runOnPairs groups Seq and Option keys like groupByKey") {
+    import spark.implicits._
+    sameAsGroupByKey(Seq(Seq(1, 2) -> "a", Seq(2, 1) -> "b", Seq(1, 2) -> "c",
+      Seq.empty[Int] -> "d").toDS())
+    sameAsGroupByKey(Seq(Option("x") -> "a", Option.empty[String] -> "b",
+      Option("x") -> "c", Option.empty[String] -> "d").toDS())
+  }
+
   test("a whole-null struct key fails the job instead of merging with an all-null key") {
     import spark.implicits._
     val allNull = ((null: String), (null: String))
@@ -154,8 +186,10 @@ class MRJobSpec extends SparkSpec {
       case a: AppendColumnsWithObject => a
     }
     assert(appends.isEmpty, plan.toString)
-    val mapTasks = plan.collectFirst { case r: ExternalRDD[_] => r.rdd.getNumPartitions }
-    assert(mapTasks.exists(_ >= math.min(nFiles, cores)), s"map tasks $mapTasks for $cores cores")
+    // the map tasks are the partitions of the shuffle's parent RDD
+    val mapTasks = shuffles(out).map(_.rdd.getNumPartitions)
+    assert(mapTasks.size == 1 && mapTasks.head >= math.min(nFiles, cores),
+      s"map tasks $mapTasks for $cores cores")
     val got = out.collect().toMap
     assert(got.size == 13 && got.values.sum == 50 * nFiles)
   }
@@ -164,30 +198,36 @@ class MRJobSpec extends SparkSpec {
 
   private lazy val counters = QueryCounters.attach(spark)
 
-  /** Stages `body` runs. The listener bus is asynchronous, so settle
-    * before the reset and after the body (QueryCounters' own rule). */
-  private def stagesOf(body: => Unit): Long = {
+  /** The counters of what `body` runs. The listener bus is
+    * asynchronous, so settle before the reset and after the body
+    * (QueryCounters' own rule). */
+  private def countersOf(body: => Unit): QueryCounters.Counters = {
     counters
     Thread.sleep(2000)
     counters.reset()
     body
     Thread.sleep(2000)
-    counters.stages.get
+    counters
   }
+
+  private def stagesOf(body: => Unit): Long = countersOf(body).stages.get
 
   test("one exchange at nReduce: each reduce task writes its own file") {
     import spark.implicits._
+    // the one exchange is the reduce's RDD shuffle: the SQL plan adds none
     val exchanges = (ds: Dataset[_]) => {
       ds.collect()
-      plans.collect(ds.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+      val sql = plans.collect(ds.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+      assert(sql.isEmpty, ds.queryExecution.executedPlan.toString)
+      shuffles(ds).map(_.partitioner.numPartitions)
     }
     val job = MRJob(wcMap, wcReduce, nReduce = 3)
     val flat = exchanges(job.run(spark, fixtureGlob))
-    assert(flat.map(_.numPartitions) == Seq(3), "String key")
+    assert(flat == Seq(3), "String key")
     val pairs = Seq(WordAt("x", 1) -> 1, WordAt("y", 2) -> 1, WordAt("x", 1) -> 1).toDS()
     val struct = exchanges(MRJob[WordAt, Int, Int]((_, _) => Nil, (_, vs) => vs.sum,
       nReduce = 3).runOnPairs(pairs))
-    assert(struct.map(_.numPartitions) == Seq(3), "WordAt key")
+    assert(struct == Seq(3), "WordAt key")
 
     val dir = java.nio.file.Files.createTempDirectory("mrinplace").toString
     // map stage, then the reduce tasks write: no stage re-places them
@@ -204,7 +244,7 @@ class MRJobSpec extends SparkSpec {
     val out = job.run(spark, fixtureGlob)
     // merge a key into one placed in another reduce partition, taking
     // it from a partition that keeps another key, so no file empties
-    val byPart = out.select(col("_1"), pmod(hash(col("_1")), lit(n))).as[(String, Int)]
+    val byPart = out.rdd.mapPartitionsWithIndex((p, kvs) => kvs.map(kv => (kv._1, p)))
       .collect().groupBy(_._2).map { case (p, ks) => p -> ks.map(_._1).sorted.toSeq }
     assert(byPart.size == n, s"every partition holds a key: $byPart")
     val (from, fromPart) = byPart.collectFirst { case (p, ks) if ks.size > 1 => (ks.head, p) }.get
@@ -220,6 +260,55 @@ class MRJobSpec extends SparkSpec {
     assert(owners.forall(_._2.size == 1), s"$into written by two reduce tasks: $perFile")
     assert(perFile.flatten.sorted == out.collect().map(_._1).map(k =>
       if (k == from) into else k).sorted.toSeq)
+  }
+
+  test("a reduce task that crashes on its first attempt is retried: the files match a fault-free run") {
+    import spark.implicits._
+    val n = 3
+    val job = MRJob(wcMap, wcReduce, nReduce = n)
+    val sum = wcReduce
+    val crashing = MRJob[String, Int, Int](wcMap, (k, vs) => {
+      val tc = TaskContext.get
+      if (tc.partitionId == 0 && tc.attemptNumber == 0) {
+        MRJobSpec.reduceCrashes.incrementAndGet()
+        throw new IllegalStateException(s"injected reduce crash at $k")
+      }
+      sum(k, vs)
+    }, nReduce = n)
+    val want = java.nio.file.Files.createTempDirectory("mrclean").toString
+    job.writeTextOutput(job.run(spark, fixtureGlob), want)
+    val got = java.nio.file.Files.createTempDirectory("mrcrash").toString
+    MRJobSpec.reduceCrashes.set(0)
+    crashing.writeTextOutput(crashing.run(spark, fixtureGlob), got)
+    assert(MRJobSpec.reduceCrashes.get > 0, "reduce partition 0 never crashed")
+    assert(linesPerFile(got) == linesPerFile(want))
+    val perFile = keysPerFile(got)
+    assert(perFile.size == n)
+    perFile.foreach(keys => assert(keys == keys.sorted, s"unsorted file: $keys"))
+    assert(perFile.flatten.distinct.size == perFile.flatten.size, s"a key in two files: $perFile")
+  }
+
+  test("runOnPairs refuses Double, Array[Byte], Double-field and Map keys before any job runs") {
+    import spark.implicits._
+    def refusal[K](kvs: Dataset[(K, Int)])(implicit
+        kEnc: Encoder[K], outEnc: Encoder[(K, Int)]): String =
+      intercept[IllegalArgumentException] {
+        MRJob[K, Int, Int]((_, _) => Nil, (_, vs) => vs.sum).runOnPairs(kvs)
+      }.getMessage
+    var msgs = Seq.empty[String]
+    val jobs = countersOf {
+      msgs = Seq(refusal(Seq(0.5 -> 1, -0.0 -> 1).toDS()),
+        refusal(Seq(Array[Byte](1) -> 1).toDS()),
+        refusal(Seq(Scored("x", 0.5) -> 1).toDS()),
+        // groupByKey keeps these two apart, Map equals would merge them
+        refusal(Seq(Map("a" -> 1, "b" -> 2) -> 1, Map("b" -> 2, "a" -> 1) -> 1).toDS()))
+    }.jobs.get
+    val Seq(double, bytes, scored, map) = msgs
+    assert(double.contains("key type double holds double"), double)
+    assert(bytes.contains("key type byte[] holds byte[]"), bytes)
+    assert(scored.contains(s"key type ${classOf[Scored].getName} holds double"), scored)
+    assert(map.contains("holds scala.collection.immutable.Map"), map)
+    assert(jobs == 0, s"$jobs jobs ran before the refusal")
   }
 
   test("writeTextOutput refuses a regular file and leaves its bytes unchanged") {
