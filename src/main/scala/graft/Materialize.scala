@@ -1,50 +1,25 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 
 /** Materialization policy for corpus-derived intermediates that are
   * read more than once (MinHash signature tables, LSH edge sets, the
   * deduped pipeline corpus, connected-components rounds).
   *
-  * The mode is the session conf `spark.graft.checkpoint`:
-  *
-  *   - `local` (default): `localCheckpoint` — blocks live on executor
-  *     local disk/memory, NON-replicated, lineage truncated. Fastest,
-  *     and the right call on a single JVM (local[n]); but on a real
-  *     cluster one lost executor invalidates the blocks and fails the
-  *     job, because the truncated lineage cannot recompute them.
-  *   - `disk`: `persist(DISK_ONLY)` — lineage is RETAINED, so a lost
-  *     executor's blocks are recomputed from source; this is the
-  *     cluster-safe default for large runs (re-execution on failure,
-  *     like the reference's re-dispatch of lost tasks,
-  *     coordinator.go:203-218). Plans grow with iteration count since
-  *     nothing truncates, which is fine for the O(log d) loops here.
-  *   - `reliable`: `checkpoint()` — replicated write to the
-  *     `SparkContext.setCheckpointDir` location (HDFS/object store),
-  *     lineage truncated AND failure-proof; the choice when an
-  *     intermediate is too expensive to ever recompute. Requires a
-  *     checkpoint dir to be set.
-  *
-  * Every call site in graft goes through [[stage]] so a cluster deploy
-  * flips one conf instead of auditing call sites.
+  * [[stage]] is `localCheckpoint`: the blocks live in the executors'
+  * block managers, not replicated, and the lineage is truncated. Every
+  * session is a `GraftSession.local` one, so the executors are the
+  * driver JVM and a lost block means a lost driver: nothing here would
+  * recompute it. Every call site goes through [[stage]], so the count
+  * of staged intermediates is one grep.
   */
 object Materialize {
-  val ModeKey = "spark.graft.checkpoint"
 
-  /** Materialize `df` per the session's checkpoint mode. With
-    * `eager = false` the materialization is deferred to the first
-    * action (plan construction and audits stay free).
+  /** `df.localCheckpoint(eager)`. With `eager = false` the
+    * materialization is deferred to the first action, but only for a
+    * plan without an exchange: under AQE the shuffle stages beneath
+    * `df` run at the call (MaterializeSpec).
     */
   def stage(df: DataFrame, eager: Boolean = true): DataFrame =
-    df.sparkSession.conf.get(ModeKey, "local") match {
-      case "local" => df.localCheckpoint(eager)
-      case "disk" =>
-        val p = df.persist(StorageLevel.DISK_ONLY)
-        if (eager) p.count()
-        p
-      case "reliable" => df.checkpoint(eager)
-      case other => throw new IllegalArgumentException(
-        s"$ModeKey must be local|disk|reliable, got '$other'")
-    }
+    df.localCheckpoint(eager)
 }

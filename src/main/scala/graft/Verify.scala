@@ -41,25 +41,17 @@ object Verify {
         System.err.println(s"[verify] extra $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // JSON strings through Bench.jsonEscape: backslash, quote, and ALL
+    // control chars (<0x20) — a tab or CR in an oracle's SQL would
+    // otherwise make the compare step's json.load fail.
     val json = selected(SparkEntry.oracleSql)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => "\"" + Bench.jsonEscape(k) + "\": \"" + Bench.jsonEscape(v) + "\"" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // manifest of ALL registered queries, so the compare step can flag
     // crashed queries (no output dir) instead of silently skipping them
     val manifest = selected(SparkEntry.queries).keys.toSeq.sorted
-      .map(q).mkString("[", ",", "]")
+      .map(k => "\"" + Bench.jsonEscape(k) + "\"").mkString("[", ",", "]")
     Files.writeString(Paths.get(s"$outDir/queries.json"), manifest)
     spark.stop()
   }

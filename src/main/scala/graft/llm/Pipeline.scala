@@ -255,8 +255,7 @@ object Pipeline {
     // need (lazily — materialized once at first action) instead of
     // re-running scrub+gate+window per branch. (Token arrays are a
     // bounded multiple of the text they replace — the
-    // persist-vs-recompute trade that favors persisting; the
-    // local-vs-disk-vs-reliable dial is [[graft.Materialize]].)
+    // persist-vs-recompute trade that favors persisting.)
     val corpus = graft.Materialize.stage(
       deduped.filter(col("doc_id") >= 10)
         .select(col("doc_id"), col("lang"), col("ws")),

@@ -735,32 +735,26 @@ object Similarity {
     * measured junk keep-rate, 0.117 on the ISOTROPIC 1M-rep probe
     * corpus (BASELINE.md round 15), is a best case that clustered
     * corpora exceed, so projecting with it would under-project by up
-    * to ~1/keep) and REFUSE when they exceed
-    * `spark.graft.neardup.maxCandidateRows` (default 1e11 ≈ 1.6 TB of
-    * 16 B pair rows — cluster-plausible, far past any single box).
-    * The budget is a conf because it sizes the refusal to a
-    * cluster's shuffle disk, a deployment property. The refusal names
-    * the remedies in preference order: collapse duplicate mass first
+    * to ~1/keep) and REFUSE when they exceed `maxCandidateRows`
+    * ([[embeddingNearDup]]'s default 1e11 ≈ 1.6 TB of 16 B pair rows,
+    * far past any single box). The refusal names the remedies in
+    * preference order: collapse duplicate mass first
     * ([[nearDupWithDupCollapse]] — the rep discipline is why the
-    * ×1000 corpus's 2M rows hash only 62k reps), pre-bucket the
-    * corpus, or raise the conf on a cluster sized for the shuffle. A
-    * corpus that would not complete on its disk (the round-14 DNF,
-    * BASELINE.md) fails at plan time instead of with an ENOSPC hours
-    * in.
+    * ×1000 corpus's 2M rows hash only 62k reps) or pre-bucket the
+    * corpus. A corpus that would not complete on its disk (the
+    * round-14 DNF, BASELINE.md) fails at plan time instead of with an
+    * ENOSPC hours in.
     */
-  def nearDupMassGuard(spark: SparkSession, reps: Long, bands: Int,
-      r: Int, t: Int): Unit = {
-    val budget = spark.conf.getOption("spark.graft.neardup.maxCandidateRows")
-      .map(_.toDouble).getOrElse(1e11)
+  def nearDupMassGuard(reps: Long, bands: Int, r: Int, t: Int,
+      maxCandidateRows: Double): Unit = {
     val projected = nearDupProjectedCandidates(reps, bands, r, t)
-    if (projected > budget)
+    if (projected > maxCandidateRows)
       throw new IllegalStateException(
         f"near-dup dial (B=$bands, r=$r, t=$t) over $reps%,d reps " +
           f"projects $projected%,.0f candidate rows into the pair-dedup " +
-          f"exchange, over spark.graft.neardup.maxCandidateRows=" +
-          f"$budget%,.0f. Collapse duplicate reps first " +
-          "(nearDupWithDupCollapse), pre-bucket the corpus, or raise the " +
-          "conf on a cluster sized for the shuffle.")
+          f"exchange, over maxCandidateRows=$maxCandidateRows%,.0f. " +
+          "Collapse duplicate reps first (nearDupWithDupCollapse) or " +
+          "pre-bucket the corpus.")
   }
 
   /** Embedding-cosine near-duplicate pairs (cos >= 0.35, a < b) — the
@@ -771,11 +765,12 @@ object Similarity {
     * bucket² × (t+1) instead of n² — the shape that survives a 100 TB
     * corpus. The (B, r, t) point is [[nearDupRepDialFor]] of the rep
     * count, behind the SQ8 pre-gate past 2^18 reps
-    * ([[nearDupGateFor]]) and the [[nearDupMassGuard]] refusal. Recall
-    * vs the exhaustive pair set ([[embeddingNearDupBrute]]) is
-    * measured in SimilaritySpec.
+    * ([[nearDupGateFor]]) and the [[nearDupMassGuard]] refusal past
+    * `maxCandidateRows`. Recall vs the exhaustive pair set
+    * ([[embeddingNearDupBrute]]) is measured in SimilaritySpec.
     */
-  def embeddingNearDup(spark: SparkSession, sfDir: String): DataFrame = {
+  def embeddingNearDup(spark: SparkSession, sfDir: String,
+      maxCandidateRows: Double = 1e11): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
     val members = nearDupMemberTable(emb)
     val reps = nearDupRepsOf(members)
@@ -785,7 +780,7 @@ object Similarity {
     val n = reps.count()
     val (bands, r, t) = nearDupRepDialFor(n)
     val gate = nearDupGateFor(n)
-    nearDupMassGuard(spark, n, bands, r, t)
+    nearDupMassGuard(n, bands, r, t, maxCandidateRows)
     nearDupCollapsedPairs(members, reps, bands, r, t, gate)
   }
 
@@ -1777,7 +1772,7 @@ object Similarity {
     "q_ann_filtered_topk" -> filteredTopK _,
     "q_embed_centroids" -> labelCentroids _,
     "q_ann_cell_stats" -> ivfCellStats _,
-    "q_embed_near_dup" -> embeddingNearDup _,
+    "q_embed_near_dup" -> ((s: SparkSession, d: String) => embeddingNearDup(s, d)),
     "q_embed_semantic_dedup" -> semanticDedup _,
     "q_embed_semantic_stats" -> semanticDedupStats _,
     "q_embed_diverse_sample" -> ((s: SparkSession, d: String) => diverseSample(s, d)),

@@ -39,15 +39,13 @@ trait UserJob extends Serializable {
   * run time — closing the one reference-surface gap compile-time
   * [[MRJob]] closures leave open.
   *
-  * Distribution: the task closures capture only the jar's identity
-  * (path, size, mtime — stamped once on the driver) and the class
-  * name, never the job instance, so nothing from the foreign
-  * classloader crosses Java serialization. Each executor instantiates
-  * the class locally: `sc.addJar` ships the jar and puts it on the
-  * task classloader (the cluster path); if the context classloader
-  * can't see it (local mode quirks), a per-JVM cached URLClassLoader
-  * over the original path is the fallback. One instance per (jar,
-  * class) per JVM, reused across tasks.
+  * Loading: the task closures capture only the jar's identity (path,
+  * size, mtime — stamped once on the driver) and the class name,
+  * never the job instance, so nothing from the foreign classloader
+  * crosses Java serialization. Every session is a `GraftSession.local`
+  * one, so the tasks run in the driver JVM and read the jar at its
+  * own path: one `URLClassLoader` per jar version per JVM loads the
+  * class, and each task thread keeps its own instance.
   *
   * Execution IS [[MRJob]]: the jar's job runs as an
   * `MRJob[String, String, String]` whose `mapf` and `reducef` call the
@@ -80,14 +78,6 @@ object JobLoader {
   def run(spark: SparkSession, jarPath: String, className: String,
       inputGlob: String): Dataset[(String, String)] = {
     import spark.implicits._
-    // make the jar reachable from executor task classloaders on a
-    // real cluster; harmless (and not relied on) in local mode. Spark
-    // keys added jars by file name and refuses (with a warning) to add
-    // one twice, so only the first run per name calls addJar
-    val sc = spark.sparkContext
-    val name = new java.io.File(jarPath).getName
-    if (!sc.listJars().exists(u => new java.io.File(new java.net.URI(u).getPath).getName == name))
-      sc.addJar(jarPath)
     job(jarPath, className).run(spark, inputGlob)
   }
 
@@ -143,23 +133,9 @@ object JobLoader {
     new java.util.concurrent.ConcurrentHashMap[JarId, ClassLoader]()
 
   private def instance(id: JarId, className: String): UserJob =
-    cache.get().getOrElseUpdate((id, className), {
-      val cls =
-        try Class.forName(className, true, taskLoader())
-        catch { case _: ClassNotFoundException =>
-          // local mode / driver side: load straight from the jar file
-          // (one loader per jar version per JVM, so all threads share
-          // classes)
-          Class.forName(className, true,
-            loaders.computeIfAbsent(id, _ => freshLoader(id.path)))
-        }
-      cls.getDeclaredConstructor().newInstance().asInstanceOf[UserJob]
-    })
-
-  private def taskLoader(): ClassLoader = {
-    val ctx = Thread.currentThread().getContextClassLoader
-    if (ctx != null) ctx else getClass.getClassLoader
-  }
+    cache.get().getOrElseUpdate((id, className),
+      Class.forName(className, true, loaders.computeIfAbsent(id, _ => freshLoader(id.path)))
+        .getDeclaredConstructor().newInstance().asInstanceOf[UserJob])
 
   private def freshLoader(jarPath: String): java.net.URLClassLoader =
     new java.net.URLClassLoader(

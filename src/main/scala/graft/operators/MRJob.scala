@@ -4,7 +4,6 @@ import java.io.FileNotFoundException
 import scala.reflect.ClassTag
 import org.apache.hadoop.fs.Path
 import org.apache.spark.HashPartitioner
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoder, encoderFor}
 import org.apache.spark.sql.catalyst.encoders.AgnosticEncoders._
@@ -29,7 +28,7 @@ import org.apache.spark.sql.functions._
   *     `reduceByKey`, in the general path;
   *   - grouping is exact key equality (worker.go:21): keys group by
   *     `equals`, which agrees with Spark's binary key equality for the
-  *     key shapes `MRJob` accepts (see `runOnPairs`);
+  *     key shapes `MRJob` accepts (see `run`);
   *   - `nReduce` is the reduce-task count (coordinator.go:126-141):
   *     the holistic reduce shuffles once, into `nReduce` partitions,
   *     and each reduce task groups, reduces and sorts its partition
@@ -54,9 +53,14 @@ final case class MRJob[K, V, OUT](
     nReduce: Int = 8) {
 
   /** Full pipeline over text files: one (path, contents) pair per file,
-    * exactly the reference's map-input contract (worker.go:94-104).
-    * The mapped pairs go to the reduce as an RDD, with no Dataset
-    * round trip before the shuffle.
+    * exactly the reference's map-input contract (worker.go:94-104),
+    * then one shuffle into `nReduce` partitions by `key.hashCode`. Each
+    * reduce task groups its pairs in a spillable hash map, calls
+    * `reducef` once per key and sorts its distinct keys in Spark's
+    * binary key order. The mapped pairs go to the reduce as an RDD,
+    * with no Dataset round trip before the shuffle. The result is
+    * marked as placed at `nReduce`, so `writeTextOutput` of this job
+    * writes it without a second shuffle.
     *
     * Splits: the reference runs one MAP task per file
     * (coordinator.go:185-198). Here `wholeTextFiles` packs whole files
@@ -67,18 +71,6 @@ final case class MRJob[K, V, OUT](
     * share: equal-size files in a multiple of `defaultParallelism`
     * give exactly that many splits, other globs can give fewer (six
     * equal files on four cores give three).
-    */
-  def run(spark: SparkSession, inputGlob: String)(implicit
-      kEnc: Encoder[K],
-      kvEnc: Encoder[(K, V)],
-      outEnc: Encoder[(K, OUT)]): Dataset[(K, OUT)] = {
-    val sc = spark.sparkContext
-    val files = sc.wholeTextFiles(inputGlob, sc.defaultParallelism)
-    reduce(spark, files.flatMap { case (name, contents) => mapf(name, contents) }, kvEnc)
-  }
-
-  /** Shuffle + group + holistic reduce over an already-mapped KV set:
-    * the same reduce as `run`, over `kvs.rdd`.
     *
     * Keys group by Java `equals`/`hashCode`. Those agree with Spark's
     * binary key equality for strings, the integral types, `Boolean`,
@@ -88,25 +80,18 @@ final case class MRJob[K, V, OUT](
     * (entry order) is refused with an `IllegalArgumentException` before
     * any job runs. A null struct-shaped key fails the job, as it does
     * under `Dataset.groupByKey`.
-    */
-  def runOnPairs(kvs: Dataset[(K, V)])(implicit
-      kEnc: Encoder[K],
-      outEnc: Encoder[(K, OUT)]): Dataset[(K, OUT)] =
-    reduce(kvs.sparkSession, kvs.rdd, kvs.encoder)
-
-  /** One shuffle into `nReduce` partitions by `key.hashCode`: each
-    * reduce task groups its pairs in a spillable hash map, calls
-    * `reducef` once per key and sorts its distinct keys in Spark's
-    * binary key order. The result is marked as placed at `nReduce`, so
-    * `writeTextOutput` of this job writes it without a second shuffle.
     *
     * The class tags come from the encoders, so Spark's serializer
     * manager picks Kryo for the shuffle of String and primitive pairs
     * (the Java serializer otherwise).
     */
-  private def reduce(spark: SparkSession, pairs: RDD[(K, V)], kvEnc: Encoder[(K, V)])(implicit
+  def run(spark: SparkSession, inputGlob: String)(implicit
       kEnc: Encoder[K],
+      kvEnc: Encoder[(K, V)],
       outEnc: Encoder[(K, OUT)]): Dataset[(K, OUT)] = {
+    val sc = spark.sparkContext
+    val files = sc.wholeTextFiles(inputGlob, sc.defaultParallelism)
+    val pairs = files.flatMap { case (name, contents) => mapf(name, contents) }
     val keyEnc = encoderFor(kEnc)
     MRJob.refuseUnhashable(keyEnc.encoder)
     implicit val kTag: ClassTag[K] = keyEnc.clsTag
@@ -132,7 +117,7 @@ final case class MRJob[K, V, OUT](
     * sorted by key within each file (README.MD:43-53; format
     * worker.go:167).
     *
-    * Writes in place when `out` is a `runOnPairs`/`run` result of a
+    * Writes in place when `out` is a `run` result of a
     * job with this `nReduce`, unchanged since (its analyzed plan root
     * still carries the mark): each reduce task writes its own
     * key-sorted file, with no further shuffle, placed by `key.hashCode`
@@ -166,7 +151,7 @@ final case class MRJob[K, V, OUT](
 
 object MRJob {
 
-  /** Marks the analyzed plan root of a `runOnPairs` result with the
+  /** Marks the analyzed plan root of a `run` result with the
     * `nReduce` it is placed at: hash-partitioned on the key into that
     * many partitions, each sorted by key. A transformation builds a new
     * root, which carries no mark.

@@ -1,35 +1,63 @@
 package graft
 
-import graft.llm.Dedup
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
-/** The checkpoint-policy dial ([[Materialize]]): identical results in
-  * every mode, on the query that exercises staging hardest
-  * (dedupClusters: staged signature table + staged edge set + the CC
-  * loop). Modes are isolated per newSession() so the shared suite
-  * session keeps its default.
+import graft.examples.QueryCounters
+
+/** [[Materialize.stage]]: an eager stage runs its job at the call, a
+  * lazy one at the first action, and either way the staged frame
+  * holds the unstaged frame's rows behind a plan that no longer reads
+  * the source files.
   */
 class MaterializeSpec extends SparkSpec {
 
-  private def clustersWith(mode: String): Set[(Long, Long, Boolean)] = {
-    val s = spark.newSession()
-    s.conf.set(Materialize.ModeKey, mode)
-    Dedup.dedupClusters(s, sf001).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+  private lazy val counters = QueryCounters.attach(spark)
+
+  /** `body`'s result and the jobs it submits. The listener bus is
+    * asynchronous, so settle before the reset and after the body
+    * (QueryCounters' own rule). */
+  private def withJobs[T](body: => T): (T, Long) = {
+    counters
+    Thread.sleep(2000)
+    counters.reset()
+    val out = body
+    Thread.sleep(2000)
+    (out, counters.jobs.get)
   }
 
-  private lazy val baseline = clustersWith("local")
+  /** A parquet read with no exchange (under AQE, even a lazy stage
+    * runs the shuffle stages beneath it at the call); built outside
+    * any count, so the schema inference of a first load is not charged
+    * to the stage. */
+  private def source(): DataFrame =
+    Tables.documents(spark, sf001)
+      .select(col("doc_id"), (col("doc_id") % 7).as("bucket"))
 
-  test("disk mode (persist DISK_ONLY, lineage retained) matches local") {
-    assert(clustersWith("disk") == baseline)
+  private def rows(df: DataFrame): Seq[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+
+  /** The staged frame reads no file, and holds `df`'s rows. */
+  private def assertStagedRows(staged: DataFrame, df: DataFrame): Unit = {
+    assert(df.inputFiles.nonEmpty, "the unstaged frame scans parquet")
+    assert(staged.inputFiles.isEmpty, staged.queryExecution.optimizedPlan.toString)
+    val want = rows(df)
+    assert(want.nonEmpty)
+    assert(rows(staged) == want)
   }
 
-  test("reliable mode (replicated checkpoint dir) matches local") {
-    spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graftckpt").toString)
-    assert(clustersWith("reliable") == baseline)
+  test("an eager stage runs its job at the call and keeps the rows") {
+    val df = source()
+    val (staged, jobs) = withJobs(Materialize.stage(df))
+    assert(jobs >= 1, "no job ran at an eager stage")
+    assertStagedRows(staged, df)
   }
 
-  test("an unknown mode fails loudly at plan construction") {
-    intercept[IllegalArgumentException](clustersWith("bogus"))
+  test("a lazy stage runs no job until the first action, then keeps the rows") {
+    val df = source()
+    val (staged, jobs) = withJobs(Materialize.stage(df, eager = false))
+    assert(jobs == 0, "a lazy stage ran a job before any action")
+    assert(withJobs(staged.count())._2 >= 1)
+    assertStagedRows(staged, df)
   }
 }

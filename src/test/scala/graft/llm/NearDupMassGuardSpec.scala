@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions.col
 
 /** The self-defending near-dup entry point (VERDICT r14 item 8): the
   * registered query projects its candidate mass at plan time from
-  * the rep count and the chosen dial, and REFUSES past the conf
-  * budget — turning the r14 "DNF on sandbox disk hours in" failure
-  * mode into an immediate, remediable error.
+  * the rep count and the chosen dial, and REFUSES past its
+  * `maxCandidateRows` budget — turning the r14 "DNF on sandbox disk
+  * hours in" failure mode into an immediate, remediable error.
   */
 class NearDupMassGuardSpec extends SparkSpec {
 
@@ -44,15 +44,12 @@ class NearDupMassGuardSpec extends SparkSpec {
       "1B reps must project past the default budget")
   }
 
-  test("guard fires past the conf budget and names the remedies") {
-    spark.conf.set("spark.graft.neardup.maxCandidateRows", "1000")
-    try {
-      val e = intercept[IllegalStateException] {
-        Similarity.embeddingNearDup(spark, sf001).count()
-      }
-      assert(e.getMessage.contains("maxCandidateRows"))
-      assert(e.getMessage.contains("pre-bucket"))
-    } finally spark.conf.unset("spark.graft.neardup.maxCandidateRows")
+  test("guard fires past the candidate budget and names the remedies") {
+    val e = intercept[IllegalStateException] {
+      Similarity.embeddingNearDup(spark, sf001, maxCandidateRows = 1000).count()
+    }
+    assert(e.getMessage.contains("maxCandidateRows"))
+    assert(e.getMessage.contains("pre-bucket"))
     // under the default budget the registered query runs the rep
     // dial, row for row
     val emb = graft.Tables.embeddings(spark, sf001)

@@ -52,6 +52,19 @@ class MRJobSpec extends SparkSpec {
   private def keysPerFile(dir: String): Seq[Seq[String]] =
     linesPerFile(dir).map(_.map(_.split(" ")(0)))
 
+  /** A one-file input: `run` calls `mapf` once, on this file. */
+  private lazy val oneFile = {
+    val f = java.nio.file.Files.createTempFile("mrone", ".txt")
+    java.nio.file.Files.writeString(f, "one map call\n")
+    f.toString
+  }
+
+  /** `run` over [[oneFile]], with a `mapf` that emits `pairs`. */
+  private def runOn[K, V, OUT](pairs: Seq[(K, V)], reducef: (K, Iterator[V]) => OUT,
+      nReduce: Int = 8)(implicit
+      kEnc: Encoder[K], kvEnc: Encoder[(K, V)], outEnc: Encoder[(K, OUT)]): Dataset[(K, OUT)] =
+    MRJob[K, V, OUT]((_, _) => pairs, reducef, nReduce).run(spark, oneFile)
+
   /** The shuffle dependencies in the RDD lineage of `ds`. */
   private def shuffles(ds: Dataset[_]): Seq[ShuffleDependency[_, _, _]] = {
     def walk(rdd: RDD[_]): Seq[ShuffleDependency[_, _, _]] = rdd.dependencies.flatMap {
@@ -89,9 +102,8 @@ class MRJobSpec extends SparkSpec {
     val tokens = Gen.nonEmptyListOf(Gen.oneOf("a", "b", "c", "spark", "mr"))
     (0 until 5).foreach { i =>
       val ts = tokens.apply(Gen.Parameters.default, Seed(42L + i)).get
-      val kvs = spark.createDataset(ts.map(t => (t, 1)))
       val results = Seq(1, 2, 5, 13).map { n =>
-        val out = MRJob(wcMap, wcReduce, n).runOnPairs(kvs)
+        val out = runOn(ts.map(t => (t, 1)), wcReduce, n)
         assert(out.rdd.getNumPartitions == n, s"reduce tasks at nReduce = $n")
         out.collect().toMap
       }
@@ -116,53 +128,52 @@ class MRJobSpec extends SparkSpec {
   /** Holistic reduce that shows every value it was handed, in one call. */
   private def seen[K]: (K, Iterator[String]) => String = (_, vs) => vs.toSeq.sorted.mkString(",")
 
-  /** The `groupByKey(_._1)` form `runOnPairs` replaced: the reference. */
+  /** The same reduce through `Dataset.groupByKey`: the reference. */
   private def byGroupByKey[K](kvs: Dataset[(K, String)])(implicit
       kEnc: Encoder[K], outEnc: Encoder[(K, String)]): Dataset[(K, String)] = {
     val reduce = seen[K]
     kvs.groupByKey(_._1).mapGroups((k, it) => (k, reduce(k, it.map(_._2))))
   }
 
-  private def sameAsGroupByKey[K](kvs: Dataset[(K, String)])(implicit
-      kEnc: Encoder[K], outEnc: Encoder[(K, String)]): Unit = {
-    val got = MRJob[K, String, String]((_, _) => Nil, seen[K]).runOnPairs(kvs).collect()
-    val want = byGroupByKey(kvs).collect()
+  private def sameAsGroupByKey[K](pairs: Seq[(K, String)])(implicit
+      kEnc: Encoder[K], kvEnc: Encoder[(K, String)]): Unit = {
+    val got = runOn(pairs, seen[K]).collect()
+    val want = byGroupByKey(spark.createDataset(pairs)).collect()
     assert(got.length == want.length, "one row per key")
     assert(got.toSet == want.toSet)
   }
 
-  test("runOnPairs groups Int, tuple, case-class and null String keys like groupByKey") {
+  test("run groups Int, tuple, case-class and null String keys like groupByKey") {
     import spark.implicits._
-    sameAsGroupByKey(Seq(1 -> "a", 2 -> "b", 1 -> "c", -1 -> "d", 1 -> "e").toDS())
+    sameAsGroupByKey(Seq(1 -> "a", 2 -> "b", 1 -> "c", -1 -> "d", 1 -> "e"))
     sameAsGroupByKey(Seq(("x", 1) -> "a", ("x", 2) -> "b", ("x", 1) -> "c",
-      ("y", 1) -> "d", ((null: String), 1) -> "e", ((null: String), 1) -> "f").toDS())
+      ("y", 1) -> "d", ((null: String), 1) -> "e", ((null: String), 1) -> "f"))
     sameAsGroupByKey(Seq(WordAt("x", 1) -> "a", WordAt("x", 2) -> "b",
-      WordAt("x", 1) -> "c", WordAt(null, 0) -> "d", WordAt(null, 0) -> "e").toDS())
+      WordAt("x", 1) -> "c", WordAt(null, 0) -> "d", WordAt(null, 0) -> "e"))
     sameAsGroupByKey(Seq("a" -> "1", (null: String) -> "2", "" -> "3",
-      (null: String) -> "4", "a" -> "5").toDS())
+      (null: String) -> "4", "a" -> "5"))
   }
 
-  test("runOnPairs groups Seq and Option keys like groupByKey") {
+  test("run groups Seq and Option keys like groupByKey") {
     import spark.implicits._
     sameAsGroupByKey(Seq(Seq(1, 2) -> "a", Seq(2, 1) -> "b", Seq(1, 2) -> "c",
-      Seq.empty[Int] -> "d").toDS())
+      Seq.empty[Int] -> "d"))
     sameAsGroupByKey(Seq(Option("x") -> "a", Option.empty[String] -> "b",
-      Option("x") -> "c", Option.empty[String] -> "d").toDS())
+      Option("x") -> "c", Option.empty[String] -> "d"))
   }
 
   test("a whole-null struct key fails the job instead of merging with an all-null key") {
     import spark.implicits._
     val allNull = ((null: String), (null: String))
     // fields all null: an ordinary key, grouped like groupByKey groups it
-    sameAsGroupByKey(Seq(allNull -> "a", allNull -> "b", ("x", null: String) -> "c").toDS())
+    sameAsGroupByKey(Seq(allNull -> "a", allNull -> "b", ("x", null: String) -> "c"))
     // the key itself null: groupByKey cannot encode it and fails; so
-    // must runOnPairs, where the grouping fields alone would read it
-    // as (null, null) and merge it into that group
-    val withNull = Seq(allNull -> "a", (null: (String, String)) -> "b").toDS()
-    val ref = intercept[Exception](byGroupByKey(withNull).collect())
+    // must run, where the grouping fields alone would read it as
+    // (null, null) and merge it into that group
+    val withNull = Seq(allNull -> "a", (null: (String, String)) -> "b")
+    val ref = intercept[Exception](byGroupByKey(withNull.toDS()).collect())
     assert(ref.getMessage.contains("NOT_NULL_ASSERT_VIOLATION"), ref.getMessage)
-    val job = MRJob[(String, String), String, String]((_, _) => Nil, seen[(String, String)])
-    val err = intercept[Exception](job.runOnPairs(withNull).collect())
+    val err = intercept[Exception](runOn(withNull, seen[(String, String)]).collect())
     assert(err.getMessage.contains("struct-shaped key must not be null"), err.getMessage)
   }
 
@@ -224,9 +235,8 @@ class MRJobSpec extends SparkSpec {
     val job = MRJob(wcMap, wcReduce, nReduce = 3)
     val flat = exchanges(job.run(spark, fixtureGlob))
     assert(flat == Seq(3), "String key")
-    val pairs = Seq(WordAt("x", 1) -> 1, WordAt("y", 2) -> 1, WordAt("x", 1) -> 1).toDS()
-    val struct = exchanges(MRJob[WordAt, Int, Int]((_, _) => Nil, (_, vs) => vs.sum,
-      nReduce = 3).runOnPairs(pairs))
+    val pairs = Seq(WordAt("x", 1) -> 1, WordAt("y", 2) -> 1, WordAt("x", 1) -> 1)
+    val struct = exchanges(runOn(pairs, (_: WordAt, vs: Iterator[Int]) => vs.sum, nReduce = 3))
     assert(struct == Seq(3), "WordAt key")
 
     val dir = java.nio.file.Files.createTempDirectory("mrinplace").toString
@@ -288,20 +298,20 @@ class MRJobSpec extends SparkSpec {
     assert(perFile.flatten.distinct.size == perFile.flatten.size, s"a key in two files: $perFile")
   }
 
-  test("runOnPairs refuses Double, Array[Byte], Double-field and Map keys before any job runs") {
+  test("run refuses Double, Array[Byte], Double-field and Map keys before any job runs") {
     import spark.implicits._
-    def refusal[K](kvs: Dataset[(K, Int)])(implicit
-        kEnc: Encoder[K], outEnc: Encoder[(K, Int)]): String =
+    def refusal[K](pairs: Seq[(K, Int)])(implicit
+        kEnc: Encoder[K], kvEnc: Encoder[(K, Int)]): String =
       intercept[IllegalArgumentException] {
-        MRJob[K, Int, Int]((_, _) => Nil, (_, vs) => vs.sum).runOnPairs(kvs)
+        runOn(pairs, (_: K, vs: Iterator[Int]) => vs.sum)
       }.getMessage
     var msgs = Seq.empty[String]
     val jobs = countersOf {
-      msgs = Seq(refusal(Seq(0.5 -> 1, -0.0 -> 1).toDS()),
-        refusal(Seq(Array[Byte](1) -> 1).toDS()),
-        refusal(Seq(Scored("x", 0.5) -> 1).toDS()),
+      msgs = Seq(refusal(Seq(0.5 -> 1, -0.0 -> 1)),
+        refusal(Seq(Array[Byte](1) -> 1)),
+        refusal(Seq(Scored("x", 0.5) -> 1)),
         // groupByKey keeps these two apart, Map equals would merge them
-        refusal(Seq(Map("a" -> 1, "b" -> 2) -> 1, Map("b" -> 2, "a" -> 1) -> 1).toDS()))
+        refusal(Seq(Map("a" -> 1, "b" -> 2) -> 1, Map("b" -> 2, "a" -> 1) -> 1)))
     }.jobs.get
     val Seq(double, bytes, scored, map) = msgs
     assert(double.contains("key type double holds double"), double)
