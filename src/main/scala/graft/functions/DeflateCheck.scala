@@ -10,8 +10,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Self-verifying DEFLATE probe: compresses a string's UTF-8 bytes
-  * (raw stream, level 6 — identical parameters to [[DeflateRatio]]),
-  * INFLATES the result back, and returns
+  * (raw stream, level 6), INFLATES the result back, and returns
   * `struct(n_comp BIGINT, roundtrip BOOLEAN)` — the compressed byte
   * count plus whether the round-trip reproduced the input bytes
   * exactly. Empty input yields null.
@@ -25,7 +24,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * `q_llm_compression` emits those invariants as booleans the DuckDB
   * oracle pins TRUE, making the query driver-gate-checkable; the
   * exact byte-count cross-check against an independent zlib binding
-  * lives in `tools/check.py` (see CHECKS.md).
+  * lives in `tools/check.py` (see CHECKS.md), over the
+  * `n_comp / n_bytes` ratio of `TextAnalysis.compressionRatio` — the
+  * compression-ratio quality signal (repetitive text compresses far
+  * below natural prose).
   *
   * Thread-local Deflater/Inflater (reset per row) keep the expression
   * thread-safe under codegen without per-row native allocation.
@@ -81,8 +83,8 @@ object DeflateCheck {
     d.finish()
     val b = buf.get()
     // the full compressed stream is needed for the inflate leg, so
-    // unlike DeflateRatio this buffers it (still one growing array,
-    // no per-row Deflater/Inflater allocation)
+    // it is buffered (one growing array, no per-row
+    // Deflater/Inflater allocation)
     var comp = new Array[Byte](math.max(64, raw.length / 2))
     var n = 0
     while (!d.finished()) {

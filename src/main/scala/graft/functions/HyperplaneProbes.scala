@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** MARGIN-AWARE multiprobe buckets: for each of `bands` bands, the
   * exact r-bit bucket followed by the `t` one-bit-flip neighbor
@@ -24,12 +25,25 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
   * b·(t+1) is band b's exact bucket, b·(t+1)+k its k-th flip probe —
   * `posexplode` with `pos div (t+1)` recovers the band.
   *
-  * Same coefficient family, same strictly-sequential double-dot
-  * order as [[HyperplaneSigs]] (the table is shared), so exact
-  * buckets here ARE the signature buckets, margins are bitwise-equal
-  * to the oracle's ordered `list_reduce` dots, and the margin
-  * ordering (abs(dot), bit) is cross-engine deterministic — the
-  * PqCodes IEEE-sequence-parity discipline.
+  * t = 0 is the band signature: `bands` exact buckets, band b's the
+  * r-bit integer whose bit j is `dot(v, g_{b·r+j}) >= 0`, over the
+  * deterministic coefficient family g(p,i) = (h60("hp<p>_<i>") % 2001
+  * − 1000)/1000 that [[graft.llm.Similarity]]'s per-plane HOF
+  * formulation and its DuckDB mirror share
+  * ([[graft.llm.Similarity.bandSignatureCols]] and
+  * [[graft.llm.Similarity.signatureCol]] are this call). At t = 0 no
+  * margin is kept, so the per-row work is the dots alone.
+  *
+  * Each dot accumulates STRICTLY sequentially in index order in
+  * double precision, so buckets bitwise-match the HOF formulation
+  * (`Similarity.bandSignatureColsHof`, spec-pinned), margins are
+  * bitwise-equal to the oracle's ordered `list_reduce` dots, and the
+  * margin ordering (abs(dot), bit) is cross-engine deterministic —
+  * the PqCodes IEEE-sequence-parity discipline.
+  *
+  * A vector whose length differs from `dim`, or that holds a null
+  * element, yields NULL (surfacing bad data, the [[CosineSim]]
+  * convention).
   */
 case class HyperplaneProbes(child: Expression, bands: Int, r: Int,
     dim: Int, t: Int) extends UnaryExpression {
@@ -80,17 +94,42 @@ case class HyperplaneProbes(child: Expression, bands: Int, r: Int,
 
 object HyperplaneProbes {
 
-  /** One pass per plane (identical dot sequence to
-    * [[HyperplaneSigs.compute]]), then a t-step selection of the
-    * lowest-|margin| bits per band.
+  private val tables =
+    new java.util.concurrent.ConcurrentHashMap[(Int, Int), Array[Double]]()
+
+  /** Flat (planes × dim) coefficient table, computed once per config
+    * per JVM — identical values to Similarity.planeCol / the oracle's
+    * bplanes CTE by construction (same h60 of the same plane names).
+    */
+  private def coeffs(planes: Int, dim: Int): Array[Double] =
+    tables.computeIfAbsent((planes, dim), { case (p, d) =>
+      val g = new Array[Double](p * d)
+      var j = 0
+      while (j < p) {
+        var i = 0
+        while (i < d) {
+          val h = H60.hash(UTF8String.fromString(s"hp${j}_$i"))
+          g(j * d + i) = (h % 2001 - 1000) / 1000.0
+          i += 1
+        }
+        j += 1
+      }
+      g
+    })
+
+  /** One pass over the vector per plane, sequential double adds; for
+    * t > 0, then a t-step selection of the lowest-|margin| bits per
+    * band.
     */
   def compute(v: ArrayData, bands: Int, r: Int, dim: Int, t: Int): ArrayData = {
     if (v.numElements() != dim) return null
     require(t >= 0 && t <= r, s"probe count $t outside [0, $r]")
-    val g = HyperplaneSigs.coeffs(bands * r, dim)
+    var n = 0
+    while (n < dim) { if (v.isNullAt(n)) return null; n += 1 }
+    val g = coeffs(bands * r, dim)
     val out = new Array[Int](bands * (t + 1))
-    val margins = new Array[Double](r)
-    val taken = new Array[Boolean](r)
+    val margins = if (t > 0) new Array[Double](r) else null
+    val taken = if (t > 0) new Array[Boolean](r) else null
     var b = 0
     while (b < bands) {
       var bucket = 0
@@ -103,9 +142,13 @@ object HyperplaneProbes {
           dot += v.getFloat(i).toDouble * g(base + i)
           i += 1
         }
-        if (dot >= 0) bucket |= 1 << j
-        margins(j) = math.abs(dot)
-        taken(j) = false
+        // SQL comparison order: NaN is greatest, so NaN >= 0 holds in
+        // the HOF formulation and in DuckDB alike
+        if (dot >= 0 || dot.isNaN) bucket |= 1 << j
+        if (t > 0) {
+          margins(j) = math.abs(dot)
+          taken(j) = false
+        }
         j += 1
       }
       out(b * (t + 1)) = bucket

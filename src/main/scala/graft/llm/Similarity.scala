@@ -64,27 +64,32 @@ object Similarity {
       lit(0.0),
       (acc, v) => acc + v)
 
-  /** [[NumPlanes]]-bit LSH bucket signature. */
+  /** [[NumPlanes]]-bit LSH bucket signature: the one-band exact
+    * bucket of the native kernel ([[bandSignatureCols]] at
+    * (1, [[NumPlanes]])). A null or wrong-length embedding, which the
+    * kernel surfaces as NULL, lands in bucket 0 — the bucket the
+    * per-plane HOF formulation gives it (every dot NULL, so no bit
+    * set) and the DuckDB mirror [[sqlBuckets]] computes.
+    */
   def signatureCol(emb: Column): Column =
-    (0 until NumPlanes).map { j =>
-      when(planeDot(emb, j) >= 0, lit(1 << j)).otherwise(lit(0))
-    }.reduce(_ + _)
+    coalesce(element_at(bandSignatureCols(emb, 1, NumPlanes), 1), lit(0))
 
   /** Banded LSH signatures for PAIR GENERATION (vs [[signatureCol]]'s
     * single probe bucket): `bands` independent `r`-bit signatures,
     * band b over hyperplanes b·r … b·r+r−1 of the same deterministic
-    * family. Emitted as an array<int> so a candidate join can both
-    * explode per band AND check earlier bands cheaply. Computed by
-    * the fused native [[graft.functions.HyperplaneSigs]] — bands·r
-    * separate HOF plane dots interpreted per row would dominate the
-    * whole near-dup query (the HOF equivalence is pinned in
-    * HyperplaneSigsSpec).
+    * family. Emitted as an array<int> so a candidate join can explode
+    * per band. Computed by the fused native
+    * [[graft.functions.HyperplaneProbes]] with no flip probes (t = 0):
+    * bands·r separate HOF plane dots interpreted per row would
+    * dominate the whole near-dup query (the kernel is spec-pinned
+    * equal to [[bandSignatureColsHof]]).
     */
   def bandSignatureCols(emb: Column, bands: Int, r: Int): Column =
-    graft.functions.HyperplaneSigs.hyperplane_sigs(emb, bands, r, Dim)
+    graft.functions.HyperplaneProbes.hyperplane_probes(emb, bands, r, Dim, 0)
 
   /** The per-plane HOF formulation [[bandSignatureCols]] fuses —
-    * retained as the equivalence oracle for HyperplaneSigsSpec.
+    * retained as the equivalence oracle the kernel's specs compare
+    * against.
     */
   private[graft] def bandSignatureColsHof(emb: Column, bands: Int, r: Int): Column =
     array((0 until bands).map { b =>
@@ -848,48 +853,12 @@ object Similarity {
     cross.unionByName(within)
   }
 
-  /** Parameterized core — SimilaritySpec measures recall/candidate
-    * trade-offs across (bands, r) configs through this entry.
-    *
-    * The signature table is STAGED ([[graft.Materialize]]) before the
-    * self-join: both join sides reference it, and without the stage
-    * Catalyst inlines the bands·r plane-dot expression into each —
-    * re-evaluated per candidate ROW on the probe side (measured 15×
-    * on this query at sf0.1, the exact failure round 2 fixed for the
-    * MinHash pair plan). Signatures are bands ints + the embedding —
-    * orders of magnitude smaller than the candidate stream.
-    */
-  def nearDupPairsOf(emb: DataFrame, bands: Int, r: Int): DataFrame = {
-    val e = graft.Materialize.stage(
-      emb.withColumn("sigs",
-        bandSignatureCols(col("embedding"), bands, r)),
-      eager = false)
-    val exploded = e.select(col("vec_id"), col("embedding"), col("sigs"),
-      posexplode(col("sigs")).as(Seq("band", "bucket")))
-    val a = exploded.select(col("band"), col("bucket"),
-      col("vec_id").as("vec_a"), col("embedding").as("emb_a"),
-      col("sigs").as("sigs_a"))
-    val b = exploded.select(col("band"), col("bucket"),
-      col("vec_id").as("vec_b"), col("embedding").as("emb_b"),
-      col("sigs").as("sigs_b"))
-    a.join(b, Seq("band", "bucket"))
-      .filter(col("vec_a") < col("vec_b"))
-      // canonical dedup: keep the pair only in its EARLIEST colliding
-      // band — one fused native loop per candidate (the HOF
-      // slice/zip_with form allocated three arrays per row and
-      // dominated the ×1000 probe; see FirstCollision scaladoc)
-      .filter(graft.functions.FirstCollision.first_collision(
-        col("sigs_a"), col("sigs_b")) === col("band"))
-      .withColumn("cos", cosine_sim(col("emb_a"), col("emb_b")))
-      .filter(col("cos") >= 0.35)
-      .select(col("vec_a"), col("vec_b"), col("cos"))
-  }
-
-  /** MULTI-PROBE variant of [[nearDupPairsOf]] — the IVF-multiprobe
-    * discipline applied to LSH: besides its exact bucket, each vector
-    * PROBES the `t` one-bit-flip neighbor buckets at its SMALLEST
-    * sign margins per band ([[graft.functions.HyperplaneProbes]],
-    * the Panigrahy/Lv probe sequence): a near-dup's differing bit
+  /** Banded-LSH near-dup pairs (cos ≥ 0.35) with MULTI-PROBE — the
+    * IVF-multiprobe discipline applied to LSH: besides its exact
+    * bucket, each vector PROBES the `t` one-bit-flip neighbor buckets
+    * at its SMALLEST sign margins per band
+    * ([[graft.functions.HyperplaneProbes]], the Panigrahy/Lv probe
+    * sequence): a near-dup's differing bit
     * has a near-zero margin on both sides, so the few lowest-margin
     * flips capture most Hamming-distance-1 collisions (collision
     * prob per band ≈ q^r + r·q^(r−1)(1−q) at t = r) at probe factor
@@ -904,9 +873,11 @@ object Similarity {
     * side's probe lands — then `distinct`-deduped, and the
     * embeddings come back in one rescore join per side: the
     * [[graft.llm.Dedup.containmentPairs]] slim-index / rescore
-    * discipline, traded against the exact variant's carry-arrays /
-    * first-collision design ([[graft.functions.FirstCollision]])
-    * which wins only at multiplicity 1.
+    * discipline.
+    *
+    * `t = 0` is the exact-bucket pair set: a pair survives iff it
+    * shares a bucket in some band (SimilaritySpec measures recall
+    * per (bands, r) config through it).
     *
     * `gate = Some(τ)` (the past-2^18 branch, [[nearDupGateFor]])
     * inserts the SQ8 pre-gate between the candidate stream and the

@@ -280,8 +280,9 @@ object TextAnalysis {
     * input) — both TRUE in the DuckDB oracle, so a broken compressor
     * fails the hash compare. The exact compressed-byte-count
     * cross-check against CPython's independent zlib binding remains
-    * in tools/check.py over the [[compressionRatio]] dump (see
-    * CHECKS.md). Empty docs pass both flags vacuously.
+    * in tools/check.py over the [[compressionRatio]] dump, whose
+    * ratio is the same kernel's `n_comp` (see CHECKS.md). Empty docs
+    * pass both flags vacuously.
     */
   def compressionSignal(spark: SparkSession, sfDir: String): DataFrame = {
     val bound = col("n_bytes") +
@@ -302,20 +303,25 @@ object TextAnalysis {
 
   /** Compression ratio per document plus the low-entropy gate
     * (ratio < 0.3 on ≥200-byte docs flags machine-repetitive
-    * content) — the actual pipeline signal. The ratio magnitude is
-    * not SQL-recomputable, so this variant is NOT in the driver
-    * registry; `graft.Verify` dumps it to the sibling
-    * `<outDir>-extras/` directory and
-    * tools/check.py exact-compares every row against an
-    * independent-implementation recompute (CPython zlib, raw DEFLATE
-    * level 6 — both runtimes bundle madler zlib, so the byte counts
-    * are identical; recorded in CHECKS.md).
+    * content) — the actual pipeline signal. The ratio is
+    * `n_comp / n_bytes`: [[graft.functions.DeflateCheck]]'s
+    * compressed byte count (raw DEFLATE, level 6) over the UTF-8
+    * length, one IEEE division; empty and null text yield a null
+    * ratio. The magnitude is not SQL-recomputable, so this variant is
+    * NOT a registered query; `graft.Verify` dumps it to the
+    * sibling `<outDir>-extras/` directory and tools/check.py
+    * exact-compares every row against an independent-implementation
+    * recompute (CPython zlib, same parameters — both runtimes bundle
+    * madler zlib, so the byte counts are identical; recorded in
+    * CHECKS.md).
     */
   def compressionRatio(spark: SparkSession, sfDir: String): DataFrame =
     Tables.documents(spark, sfDir)
       .select(col("doc_id"),
         octet_length(col("text")).as("n_bytes"),
-        graft.functions.DeflateRatio.deflate_ratio(col("text")).as("deflate_ratio"))
+        graft.functions.DeflateCheck.deflate_check(col("text")).as("dc"))
+      .select(col("doc_id"), col("n_bytes"),
+        (col("dc.n_comp") / col("n_bytes")).as("deflate_ratio"))
       .withColumn("is_low_entropy",
         coalesce(col("deflate_ratio") < 0.3 && col("n_bytes") >= 200, lit(false)))
 
@@ -438,9 +444,10 @@ object TextAnalysis {
     * Hard signal, stronger than a bound check: CMS cells are
     * deterministic sums over the portable hash, so the DuckDB oracle
     * rebuilds the grid in SQL and the estimates HASH-compare. The
-    * lookup side runs through the Catalyst [[PortableHash.h60]] while
-    * the sketch side hashes in the JVM ([[graft.operators.CountMinAgg.h60]])
-    * — the match also proves the two hash paths identical. Collision
+    * lookup side runs through the Catalyst [[PortableHash.h60]] and
+    * the sketch side calls the same [[graft.functions.H60.hash]] on
+    * `word#cms<r>` in the JVM, so the match checks the salt
+    * convention and the grid arithmetic against the oracle. Collision
     * behavior (overestimates, the εn bound) is property-tested on a
     * planted narrow grid in AggregatorsSpec.
     */

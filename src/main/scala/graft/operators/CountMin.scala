@@ -1,7 +1,9 @@
 package graft.operators
 
+import graft.functions.H60
 import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Mergeable Count-Min sketch — the fixed-size point-frequency
   * companion to [[MisraGriesAgg]]. Misra-Gries keeps the top-k items
@@ -35,20 +37,11 @@ case class CountMinAgg(depth: Int, width: Int)(implicit
     extends Aggregator[String, Array[Long], Array[Long]] {
   require(depth > 0 && width > 0, s"bad grid ${depth}x$width")
 
-  /** Row-r bucket of `w`: the salted portable hash, mod width. Must
-    * agree bit-for-bit with the DataFrame/SQL mirrors in
-    * [[graft.llm.TextAnalysis.cmsCounts]] — the JVM path hashes
-    * `w + "#cms" + r` exactly like `PortableHash.h60(col, salt)`
-    * hashes `concat(c, "#", salt)`.
-    */
-  private def bucket(w: String, r: Int): Int =
-    (CountMinAgg.h60(w + "#cms" + r) % width).toInt
-
   override def zero: Array[Long] = new Array[Long](depth * width)
 
   override def reduce(b: Array[Long], w: String): Array[Long] = {
     var r = 0
-    while (r < depth) { b(r * width + bucket(w, r)) += 1L; r += 1 }
+    while (r < depth) { b(CountMinAgg.cell(w, r, width)) += 1L; r += 1 }
     b
   }
 
@@ -65,25 +58,21 @@ case class CountMinAgg(depth: Int, width: Int)(implicit
 
 object CountMinAgg {
 
-  /** JVM mirror of [[graft.functions.H60]] / `PortableHash.h60`: the
-    * first 15 hex digits of md5 (= bytes 0–6 plus the high nibble of
-    * byte 7) as a non-negative 60-bit long.
+  /** Grid index of `w`'s row-r cell: the salted portable hash, mod
+    * width. Must agree bit-for-bit with the DataFrame/SQL mirrors in
+    * [[graft.llm.TextAnalysis.cmsCounts]] — it hashes `w + "#cms" + r`
+    * through the same [[graft.functions.H60.hash]] that
+    * `PortableHash.h60(col, salt)` applies to `concat(c, "#", salt)`.
     */
-  def h60(s: String): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val d = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    var v = 0L
-    var i = 0
-    while (i < 7) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
-    (v << 4) | ((d(7) & 0xf0L) >> 4)
-  }
+  private[graft] def cell(w: String, r: Int, width: Int): Int =
+    r * width + (H60.hash(UTF8String.fromString(w + "#cms" + r)) % width).toInt
 
   /** Point estimate from a finished grid. */
   def estimate(cells: Array[Long], depth: Int, width: Int, w: String): Long = {
     var best = Long.MaxValue
     var r = 0
     while (r < depth) {
-      val c = cells(r * width + (h60(w + "#cms" + r) % width).toInt)
+      val c = cells(cell(w, r, width))
       if (c < best) best = c
       r += 1
     }

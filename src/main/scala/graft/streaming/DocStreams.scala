@@ -24,14 +24,15 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Scale: [[minhashDedupStream]] state is one (signature → doc_id)
   * entry per DISTINCT content ever seen — the same O(distinct) bound
-  * as the batch collapse, held forever. [[minhashDedupStreamTtl]] is
-  * the bounded-storage variant: an EVENT-time TTL evicts signatures
-  * unseen for `ttl`, so state holds only the recently-seen distinct
-  * contents and a very late duplicate is re-admitted — the explicit
-  * recall/storage trade. (Event time, not processing time, for the
-  * same reason the windowed aggregations use it: deterministic under
-  * replay and backfill, and timeouts that fire off the watermark
-  * terminate cleanly under AvailableNow/processAllAvailable, which a
+  * as the batch collapse, held forever. [[minhashDedupStreamTtl]],
+  * the one stateful step both run, is the bounded-storage variant:
+  * an EVENT-time TTL evicts signatures unseen for `ttl`, so state
+  * holds only the recently-seen distinct contents and a very late
+  * duplicate is re-admitted — the explicit recall/storage trade.
+  * (Event time, not processing time, for the same reason the
+  * windowed aggregations use it: deterministic under replay and
+  * backfill, and timeouts that fire off the watermark terminate
+  * cleanly under AvailableNow/processAllAvailable, which a
   * processing-time timeout never does — it demands a batch per clock
   * tick forever.)
   */
@@ -40,27 +41,15 @@ object DocStreams {
   case class KeptDoc(doc_id: Long, sig: String)
 
   /** First-wins incremental signature dedup over a streaming
-    * (doc_id, text) frame. Within one micro-batch the min doc_id of
-    * a signature group wins, so ordered arrival (ids ascending, the
-    * append-only ingest case) reproduces the batch min-doc_id
-    * collapse exactly — asserted in StreamBatchParitySpec.
+    * (doc_id, text) frame — [[minhashDedupStreamTtl]] with nothing
+    * ever expiring ([[EmbeddingStreams.unbounded]]). Within one
+    * micro-batch the min doc_id of a signature group wins, so ordered
+    * arrival (ids ascending, the append-only ingest case) reproduces
+    * the batch min-doc_id collapse exactly — asserted in
+    * StreamBatchParitySpec.
     */
-  def minhashDedupStream(docs: DataFrame): Dataset[KeptDoc] = {
-    import docs.sparkSession.implicits._
-    docs
-      .select(col("doc_id"), graft.llm.Dedup.signatureKey.as("sig"))
-      .as[(Long, String)]
-      .groupByKey(_._2)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (sig: String, rows: Iterator[(Long, String)], state: GroupState[Long]) =>
-          if (state.exists) Iterator.empty
-          else {
-            val keep = rows.map(_._1).min
-            state.update(keep)
-            Iterator.single(KeptDoc(keep, sig))
-          }
-      }
-  }
+  def minhashDedupStream(docs: DataFrame): Dataset[KeptDoc] =
+    EmbeddingStreams.unbounded(docs)(minhashDedupStreamTtl)
 
   /** Streaming heavy hitters: the mergeable Misra-Gries summary
     * ([[graft.operators.MisraGriesAgg]]) as a streaming GLOBAL
@@ -141,14 +130,13 @@ object DocStreams {
   def minhashDedupStreamTtl(docs: DataFrame, ttl: java.time.Duration,
       watermarkDelay: String = "10 minutes"): Dataset[KeptDoc] = {
     import docs.sparkSession.implicits._
-    // full-µs ttl (saturated for effectively-infinite ttls, same as
-    // EmbeddingStreams): the expiry instant is computed in µs and
-    // only ROUNDED UP to the ms-granular timeout API, so state never
-    // expires early — floor-ms arithmetic here could drop a
-    // signature up to 1 ms before "unseen for ttl" and re-emit a
-    // sub-ms-boundary duplicate (the r10 truncation bug class)
-    val ttlUs = if (ttl.getSeconds > 9000000000L) Long.MaxValue / 4
-      else math.floorDiv(ttl.toNanos, 1000L)
+    // full-µs ttl (saturated for effectively-infinite ttls): the
+    // expiry instant is computed in µs and only ROUNDED UP to the
+    // ms-granular timeout API, so state never expires early —
+    // floor-ms arithmetic here could drop a signature up to 1 ms
+    // before "unseen for ttl" and re-emit a sub-ms-boundary duplicate
+    // (the r10 truncation bug class)
+    val ttlUs = EmbeddingStreams.ttlMicrosOf(ttl)
     docs
       .withWatermark("ts", watermarkDelay)
       .select(col("doc_id"), graft.llm.Dedup.signatureKey.as("sig"), col("ts"))

@@ -40,19 +40,6 @@ object EmbeddingStreams {
       .outputMode("append")
       .start()
 
-  /** Running per-label centroid maintenance over a streaming
-    * (label, embedding) frame — the monitoring companion to the index
-    * stream: as embeddings arrive, each label's mean vector updates
-    * incrementally. The fixed-point BIGINT partials
-    * ([[Similarity.centroidsOf]]) are associative, so streaming state
-    * is 24 bytes per (label, dim) no matter how many vectors flow
-    * through, micro-batch boundaries can't change the result, and the
-    * drained aggregate is bit-identical to running the batch query
-    * over the same rows (StreamBatchParitySpec).
-    */
-  def centroidStream(embs: DataFrame): DataFrame =
-    Similarity.centroidsOf(embs)
-
   case class NearDupPair(vec_a: Long, vec_b: Long, cos: Double)
   // public: Dataset encoders codegen `new TimedProbeRow(...)` from
   // generated classes, which cannot touch private members
@@ -87,11 +74,12 @@ object EmbeddingStreams {
 
   /** `ttl` as event-time MICROSECONDS (the precision events carry),
     * saturated for effectively-infinite ttls: `Duration.toNanos`
-    * overflows past ~292 years, and the unbounded wrapper passes
-    * 10k years. The saturation value keeps `memberUs + ttlUs` far
-    * from Long overflow for any epoch-scale member instant.
+    * overflows past ~292 years, and [[unbounded]] passes 10k
+    * years. The saturation value keeps `memberUs + ttlUs` far
+    * from Long overflow for any epoch-scale member instant. Shared by
+    * every TTL stream ([[DocStreams.minhashDedupStreamTtl]] too).
     */
-  private def ttlMicrosOf(ttl: java.time.Duration): Long =
+  private[streaming] def ttlMicrosOf(ttl: java.time.Duration): Long =
     if (ttl.getSeconds > 9000000000L) Long.MaxValue / 4
     else math.floorDiv(ttl.toNanos, 1000L)
 
@@ -272,20 +260,26 @@ object EmbeddingStreams {
   }
 
   /** Unbounded variant over a (vec_id, embedding) stream: the TTL
-    * machinery with a constant event time and an effectively
-    * infinite ttl — every pair gap is 0, nothing ever evicts, and
-    * the drained pair set equals the batch multiprobe query over the
-    * WHOLE corpus (StreamBatchParitySpec). One implementation, two
-    * bounds: the TTL variant above is the only stateful core.
-    *
-    * The constant instant sits far in the future with a delay larger
-    * still, pinning the watermark at zero STRICTLY BELOW every row —
-    * a constant AT the watermark would be dropped as late data.
+    * machinery through [[unbounded]] — every pair gap is 0, nothing
+    * ever evicts, and the drained pair set equals the batch multiprobe
+    * query over the WHOLE corpus (StreamBatchParitySpec). One
+    * implementation, two bounds: the TTL variant above is the only
+    * stateful core.
     */
   def nearDupPairsStream(embs: DataFrame, bands: Int, r: Int,
       t: Int = Similarity.NearDupProbes,
       dim: Int = Similarity.Dim): Dataset[NearDupPair] =
-    nearDupPairsStreamTtl(
-      embs.withColumn("ts", timestamp_seconds(lit(7258118400L))),
-      bands, r, t, java.time.Duration.ofDays(3650000L), "3650000 days", dim)
+    unbounded(embs)((e, ttl, delay) =>
+      nearDupPairsStreamTtl(e, bands, r, t, ttl, delay, dim))
+
+  /** Run a TTL stream as its unbounded twin: a constant event time
+    * `ts` and an effectively infinite ttl, so nothing ever expires.
+    * The constant instant sits far in the future with a delay larger
+    * still, pinning the watermark at zero STRICTLY BELOW every row —
+    * a constant AT the watermark would be dropped as late data.
+    */
+  private[streaming] def unbounded[T](rows: DataFrame)(
+      ttlStream: (DataFrame, java.time.Duration, String) => T): T =
+    ttlStream(rows.withColumn("ts", timestamp_seconds(lit(7258118400L))),
+      java.time.Duration.ofDays(3650000L), "3650000 days")
 }

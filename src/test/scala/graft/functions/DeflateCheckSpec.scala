@@ -2,7 +2,6 @@ package graft.functions
 
 import graft.SparkSpec
 import graft.functions.DeflateCheck.deflate_check
-import graft.functions.DeflateRatio.deflate_ratio
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -10,9 +9,9 @@ import org.scalacheck.rng.Seed
 /** DeflateCheck is the one native expression whose output can't be
   * recomputed by a SQL oracle (DEFLATE bytes are library-defined), so
   * its own invariants carry the correctness story: round-trip truth,
-  * the zlib worst-case bound, agreement with [[DeflateRatio]]'s
-  * independent compress loop, and an independent Java-zlib recompute
-  * of the exact byte count.
+  * the zlib worst-case bound, the `n_comp / n` ratio the extras dump
+  * emits, and an independent Java-zlib recompute of the exact byte
+  * count.
   */
 class DeflateCheckSpec extends SparkSpec {
 
@@ -89,12 +88,14 @@ class DeflateCheckSpec extends SparkSpec {
     val input = samples(40).filter(_.nonEmpty)
     val rows = input.toDF("s")
       .select(col("s"), octet_length(col("s")).cast("long").as("n"),
-        deflate_check(col("s")).as("dc"), deflate_ratio(col("s")).as("r"))
-      .select(col("s"), col("n"), col("dc.n_comp"), col("r"))
+        deflate_check(col("s")).as("dc"))
+      // the ratio exactly as TextAnalysis.compressionRatio emits it
+      .select(col("s"), col("n"), col("dc.n_comp"),
+        (col("dc.n_comp") / col("n")).as("r"))
       .collect()
     rows.foreach { r =>
       val (s, n, nComp, ratio) = (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3))
-      // DeflateRatio emits n_comp/n as one IEEE division — exact equality
+      // the ratio is n_comp/n as one IEEE division — exact equality
       assert(ratio == nComp.toDouble / n, s"ratio mismatch for n=$n")
       assert(nComp == refCompressedLen(s), s"n_comp != independent Deflater for n=$n")
     }

@@ -10,7 +10,8 @@ class HyperplaneProbesSpec extends SparkSpec {
   test("exact positions ARE the hyperplane_sigs buckets; flips differ by one bit") {
     val df = graft.Tables.embeddings(spark, sf001)
       .select(
-        HyperplaneSigs.hyperplane_sigs(col("embedding"), bands, r, dim).as("sigs"),
+        graft.llm.Similarity.bandSignatureColsHof(col("embedding"), bands, r)
+          .as("sigs"),
         HyperplaneProbes.hyperplane_probes(col("embedding"), bands, r, dim, t)
           .as("probes"))
     df.collect().foreach { row =>

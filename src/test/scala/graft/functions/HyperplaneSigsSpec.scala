@@ -1,29 +1,52 @@
 package graft.functions
 
 import graft.SparkSpec
+import graft.llm.Similarity
 import org.apache.spark.sql.functions._
 
+/** The band signature: [[HyperplaneProbes]] with no flip probes, as
+  * `Similarity.bandSignatureCols` and `Similarity.signatureCol` call it.
+  */
 class HyperplaneSigsSpec extends SparkSpec {
 
   test("native hyperplane_sigs equals the HOF formulation on real embeddings") {
-    val df = graft.Tables.embeddings(spark, sf001)
-      .select(
-        HyperplaneSigs.hyperplane_sigs(col("embedding"), 16, 8, 64).as("native"),
-        graft.llm.Similarity.bandSignatureColsHof(col("embedding"), 16, 8).as("hof"))
+    import spark.implicits._
+    val real = graft.Tables.embeddings(spark, sf001).select(col("embedding"))
+    val df = real.select(
+      Similarity.bandSignatureCols(col("embedding"), 16, 8).as("native"),
+      Similarity.bandSignatureColsHof(col("embedding"), 16, 8).as("hof"))
     assert(df.filter(not(col("native") === col("hof"))).count() == 0)
     assert(df.count() > 0)
+    // the one-band bucket of the ANN and hybrid queries, over the real
+    // rows plus a null, a short, an empty, a long, a null-element and
+    // a NaN-element embedding: bad data lands where the HOF puts it
+    val half = java.lang.Float.valueOf(0.5f)
+    val edge = Seq[Option[Seq[java.lang.Float]]](
+      None,
+      Some(Seq.fill(63)(half)),
+      Some(Seq.empty),
+      Some(Seq.fill(65)(half)),
+      Some(Seq.fill(63)(half) :+ null),
+      Some(Seq.fill(63)(half) :+ java.lang.Float.valueOf(Float.NaN)))
+      .toDF("e").select(col("e").cast("array<float>").as("embedding"))
+    val one = real.unionByName(edge).select(
+      Similarity.signatureCol(col("embedding")).as("native"),
+      element_at(Similarity.bandSignatureColsHof(
+        col("embedding"), 1, Similarity.NumPlanes), 1).as("hof"))
+    assert(one.filter(not(col("native") <=> col("hof"))).count() == 0)
+    assert(one.count() == real.count() + 6)
   }
 
   test("interpreted eval agrees with codegen") {
     val df = graft.Tables.embeddings(spark, sf001).limit(50)
     val codegen = df
-      .select(HyperplaneSigs.hyperplane_sigs(col("embedding"), 4, 8, 64))
+      .select(Similarity.bandSignatureCols(col("embedding"), 4, 8))
       .collect().map(_.getSeq[Int](0))
     val interpreted = df.collect().map { r =>
       val v = r.getSeq[Float](r.fieldIndex("embedding"))
-      HyperplaneSigs.compute(
+      HyperplaneProbes.compute(
         new org.apache.spark.sql.catalyst.util.GenericArrayData(v.toArray),
-        4, 8, 64).toIntArray().toSeq
+        4, 8, 64, 0).toIntArray().toSeq
     }
     assert(codegen.map(_.toSeq).toSeq == interpreted.map(_.toSeq).toSeq)
   }
@@ -36,7 +59,7 @@ class HyperplaneSigsSpec extends SparkSpec {
       (3L, Seq.empty[Float]))
       .toDF("id", "v")
       .select(col("id"),
-        HyperplaneSigs.hyperplane_sigs(col("v"), 16, 8, 64).as("sigs"))
+        Similarity.bandSignatureCols(col("v"), 16, 8).as("sigs"))
     val rows = df.collect().map(r =>
       r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getSeq[Int](1)))).toMap
     assert(rows(2L).isEmpty && rows(3L).isEmpty,

@@ -309,7 +309,7 @@ class SimilaritySpec extends SparkSpec {
     // by the ×100 ScaleUp probe) on this corpus's real pair
     // distribution
     val retired = Similarity
-      .nearDupPairsOf(graft.Tables.embeddings(spark, sf001), 1, 4)
+      .nearDupPairsMultiProbe(graft.Tables.embeddings(spark, sf001), 1, 4, t = 0)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val oldRecall = if (brute.isEmpty) 1.0
       else retired.intersect(brute).size.toDouble / brute.size
@@ -324,7 +324,7 @@ class SimilaritySpec extends SparkSpec {
     val (bands, r) = (16, 8)
     val brute = Similarity.embeddingNearDupBrute(spark, sf001).collect()
       .map(x => (x.getLong(0), x.getLong(1))).toSet
-    val exact = Similarity.nearDupPairsOf(emb, bands, r).collect()
+    val exact = Similarity.nearDupPairsMultiProbe(emb, bands, r, t = 0).collect()
       .map(x => (x.getLong(0), x.getLong(1))).toSet
     val multi = Similarity.nearDupPairsMultiProbe(emb, bands, r).collect()
       .map(x => (x.getLong(0), x.getLong(1))).toSet

@@ -62,13 +62,15 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("compression signal: repetitive text compresses far below varied text") {
     import spark.implicits._
-    import graft.functions.DeflateRatio.deflate_ratio
+    import graft.functions.DeflateCheck.deflate_check
     val df = Seq(
       (1L, "spam spam spam " * 100),                       // ~low ratio
       (2L, (1 to 300).map(i => s"w${i * 7919}").mkString(" ")), // varied
       (3L, ""))                                            // empty -> null
       .toDF("id", "text")
-      .select(col("id"), deflate_ratio(col("text")).as("r"))
+      .select(col("id"),
+        (deflate_check(col("text")).getField("n_comp") / octet_length(col("text")))
+          .as("r"))
     val got = df.collect()
       .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
     assert(got(1L).get < 0.1, s"repetitive ratio ${got(1L)}")

@@ -77,12 +77,19 @@ class AggregatorsSpec extends SparkSpec {
 
   test("Count-Min: JVM h60 mirror matches the Catalyst H60 expression") {
     import spark.implicits._
+    // the sketch's JVM-side cell (H60.hash of `w#cms<r>`) against the
+    // Catalyst salted hash cmsCounts looks its estimates up with
     val words = Seq("name", "", "a", "hash join", "päivää", "日本語", "w#cms0")
-    val viaSpark = words.toDF("w")
-      .select(col("w"), graft.llm.PortableHash.h60(col("w")).as("h"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    words.foreach { w =>
-      assert(CountMinAgg.h60(w) == viaSpark(w), s"h60 mismatch for '$w'")
+    val (depth, width) = (4, 256)
+    (0 until depth).foreach { r =>
+      val viaSpark = words.toDF("w")
+        .select(col("w"), (graft.llm.PortableHash.h60(col("w"), lit("cms" + r))
+          % width + r * width).cast("int").as("c"))
+        .collect().map(row => row.getString(0) -> row.getInt(1)).toMap
+      words.foreach { w =>
+        assert(CountMinAgg.cell(w, r, width) == viaSpark(w),
+          s"row-$r cell mismatch for '$w'")
+      }
     }
   }
 

@@ -601,8 +601,8 @@ class StreamBatchParitySpec extends SparkSpec {
       .map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).toSeq
     val mid = rows.length / 2
     val input = MemoryStream[(Int, Array[Float])]
-    val q = graft.streaming.EmbeddingStreams
-      .centroidStream(input.toDS().toDF("label", "embedding"))
+    val q = graft.llm.Similarity
+      .centroidsOf(input.toDS().toDF("label", "embedding"))
       .writeStream.format("memory").queryName("centroids")
       .outputMode("complete").start()
     input.addData(rows.take(mid))

@@ -17,11 +17,12 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 
 
 def deflate_ratio(text: str):
-    """Mirror graft.functions.DeflateRatio: raw DEFLATE (nowrap) level 6
-    over the UTF-8 bytes. CPython's zlib and the JDK's Deflater both
-    bundle madler zlib, so the compressed byte count is identical and
-    the ratio compares exactly — an independent-implementation oracle
-    for the one query DuckDB SQL can't express."""
+    """Mirror q_llm_compression_ratio's ratio, graft.functions.DeflateCheck's
+    n_comp / n_bytes: raw DEFLATE (nowrap) level 6 over the UTF-8 bytes.
+    CPython's zlib and the JDK's Deflater both bundle madler zlib, so the
+    compressed byte count is identical and the ratio compares exactly —
+    an independent-implementation oracle for the one query DuckDB SQL
+    can't express."""
     raw = text.encode("utf-8")
     if len(raw) == 0:
         return None

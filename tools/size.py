@@ -8,7 +8,9 @@ Prints, over every file under <repoRoot>/src/main:
     do not start with `//`, `/*` or `*`;
   - the files that define a `main` (the entry points);
   - the distinct `"spark.graft.<key>` literals (the session options,
-    the set OptionSurfaceSpec pins).
+    the set OptionSurfaceSpec pins);
+  - the Catalyst expression classes (the map kernels): case classes
+    under a `functions/` directory that extend a `*Expression`.
 """
 import os
 import re
@@ -16,6 +18,7 @@ import sys
 
 MAIN = re.compile(r"\bdef main\s*\(")
 OPTION = re.compile(r'"spark\.graft\.([A-Za-z0-9_.]+)')
+EXPRESSION = re.compile(r"\bcase class (\w+)\s*\(.*?\)\s*extends\s+(\w+)", re.S)
 
 
 def main():
@@ -23,7 +26,7 @@ def main():
         os.path.dirname(os.path.abspath(__file__)), "..")
     src = os.path.join(root, "src", "main")
     lines = code = 0
-    mains, options = [], set()
+    mains, options, kernels = [], set(), []
     for d, _, files in os.walk(src):
         for f in files:
             path = os.path.join(d, f)
@@ -37,6 +40,9 @@ def main():
             if MAIN.search(text):
                 mains.append(os.path.relpath(path, src))
             options.update(OPTION.findall(text))
+            if os.path.basename(d) == "functions":
+                kernels += [name for name, parent in EXPRESSION.findall(text)
+                            if parent.endswith("Expression")]
     print(f"src/main lines: {lines}")
     print(f"src/main code lines: {code}")
     print(f"mains: {len(mains)}")
@@ -45,6 +51,9 @@ def main():
     print(f"spark.graft options: {len(options)}")
     for o in sorted(options):
         print(f"  spark.graft.{o}")
+    print(f"expression classes: {len(kernels)}")
+    for k in sorted(kernels):
+        print(f"  {k}")
 
 
 if __name__ == "__main__":
